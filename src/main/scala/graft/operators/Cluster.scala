@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Materialize
 import graft.functions.VectorFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -176,9 +177,8 @@ object Cluster {
 
     // one corpus-wide grid + one spread shuffle, reused by the coarse
     // sample, the shard assignment, and every fine iteration
-    val qAll = quantize(emb, idCol, vecCol)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .localCheckpoint(false)
+    val qAll = Materialize.checkpoint(quantize(emb, idCol, vecCol)
+      .repartition(spark.sparkContext.defaultParallelism), eager = false)
 
     // deterministic sample gate: ~samplePerCoarse rows per coarse
     // centroid; xxhash64 is seed-free and stable across runs/JVMs
@@ -198,10 +198,9 @@ object Cluster {
     val coarse = trainLoop(sampled, coarseK, iters, LiteralAssignMaxK).centroids
 
     // shard every row; aa precomputed once (reused every fine iteration)
-    val rows = assignTo(qAll, coarse)
+    val rows = Materialize.checkpoint(assignTo(qAll, coarse)
       .select(col("id"), col("q"), col("cid").as("shard"))
-      .withColumn("aa", vecDotLong(col("q"), col("q")))
-      .localCheckpoint(false)
+      .withColumn("aa", vecDotLong(col("q"), col("q"))), eager = false)
 
     // per-shard fine-cell count: ceil(n_s / targetCellSize), capped
     val meta = rows.groupBy("shard").agg(count(lit(1)).as("n_s"))
@@ -211,11 +210,11 @@ object Cluster {
 
     // init: the fineK_s smallest ids per shard, fcid by that order
     val w = Window.partitionBy(col("shard")).orderBy(col("id"))
-    var cent = rows.withColumn("rn", row_number().over(w))
+    var cent = Materialize.checkpoint(rows.withColumn("rn", row_number().over(w))
       .join(broadcast(meta), "shard")
       .filter(col("rn") <= col("fineK"))
-      .select(col("shard"), (col("rn") - 1).cast("int").as("fcid"), col("q").as("cq"))
-      .localCheckpoint(false)
+      .select(col("shard"), (col("rn") - 1).cast("int").as("fcid"), col("q").as("cq")),
+      eager = false)
 
     def assignFine(c: DataFrame): DataFrame = {
       val centB = c.withColumn("bb", vecDotLong(col("cq"), col("cq")))
@@ -257,11 +256,11 @@ object Cluster {
 
     var assigned: DataFrame = null
     for (i <- 1 to iters) {
-      assigned = assignFine(cent).localCheckpoint(false)
+      assigned = Materialize.checkpoint(assignFine(cent), eager = false)
       // the final assignment is made against the (iters-1)-times-
       // updated centroids — the same pre-update semantics as
       // trainLoop's Trained.assigned — so the last update is skipped
-      if (i < iters) cent = updateFine(assigned, cent).localCheckpoint(false)
+      if (i < iters) cent = Materialize.checkpoint(updateFine(assigned, cent), eager = false)
     }
     assigned.select(col("id").as(idCol),
       (col("shard").cast("long") * kpack + col("fcid")).as("cluster"))
@@ -374,7 +373,7 @@ object Cluster {
     val gmax = if (gmaxRow.isNullAt(0)) 0.0 else gmaxRow.getDouble(0)
     val gscale = if (gmax == 0.0) 1.0 else gmax / 127.0
     val trained = trainLoop(
-      onGridAt(hist, idCol, vecCol, gscale).localCheckpoint(false),
+      Materialize.checkpoint(onGridAt(hist, idCol, vecCol, gscale), eager = false),
       k, iters, LiteralAssignMaxK)
     (gscale, trained.centroids)
   }
@@ -404,10 +403,10 @@ object Cluster {
     // final aggregation — without the checkpoint each pass re-runs the
     // scan + quantization chain (same discipline as q_corpus_e2e's
     // Mix-stage boundary).
-    val q = (if (k > literalAssignMaxK)
-               qNarrow.repartition(spark.sparkContext.defaultParallelism)
-             else qNarrow)
-      .localCheckpoint(false)
+    val q = Materialize.checkpoint(
+      if (k > literalAssignMaxK) qNarrow.repartition(spark.sparkContext.defaultParallelism)
+      else qNarrow,
+      eager = false)
     trainLoop(q, k, iters, literalAssignMaxK)
   }
 
@@ -535,7 +534,7 @@ object Cluster {
       // lambda chain into an inferred isnotnull Filter under the
       // output join (the interpreted re-derivation PlanAuditSpec
       // gates against)
-      assigned = assignTo(q, centroids, literalAssignMaxK).localCheckpoint(false)
+      assigned = Materialize.checkpoint(assignTo(q, centroids, literalAssignMaxK), eager = false)
       // ONE shuffle: (cid, pos) partial-agg; k x dim reduced rows
       val sums = assigned
         .select(col("cid"), posexplode(col("q")).as(Seq("pos", "v")))

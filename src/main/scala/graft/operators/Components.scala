@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -19,13 +20,13 @@ import org.apache.spark.sql.functions._
   * weakly-chained collision graphs. Each star step is one
   * neighborhood aggregation + one join, both bounded by |E|.
   *
-  * Every intermediate is localCheckpoint'd: the edge plan (often a
+  * Every intermediate is checkpointed: the edge plan (often a
   * deep candidate-generation pipeline) would otherwise be embedded
   * once per round in a growing logical tree — at high diameter the
   * plan STRING alone OOMs the driver (found by the differential
   * fuzz; AQE renders the plan on every update). LogicalRDD leaves
-  * keep every round's plan O(1); superseded blocks are reaped by the
-  * ContextCleaner.
+  * keep every round's plan O(1); the intermediates are released when
+  * the call returns, leaving only the result's checkpoint.
   */
 object Components {
 
@@ -79,44 +80,43 @@ object Components {
     * @return (node, component) — component = min node id reachable */
   def connectedComponents(edges: DataFrame, aCol: String = "id_a",
                           bCol: String = "id_b", maxIter: Int = 15): DataFrame = {
-    val input = edges.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .localCheckpoint()
-    // every endpoint must appear in the result, including self-loop-only
-    // and about-to-be-contracted nodes
-    val nodes = sym(input).select(col("src").as("node")).distinct().localCheckpoint()
-    var cur = input.filter(col("src") =!= col("dst"))
-      .select(greatest(col("src"), col("dst")).as("src"),
-        least(col("src"), col("dst")).as("dst"))
-      .distinct()
-      .localCheckpoint()
+    Materialize.scoped { s =>
+      val input = s.checkpoint(edges.select(col(aCol).as("src"), col(bCol).as("dst")))
+      // every endpoint must appear in the result, including self-loop-only
+      // and about-to-be-contracted nodes
+      val nodes = s.checkpoint(sym(input).select(col("src").as("node")).distinct())
+      var cur = s.checkpoint(input.filter(col("src") =!= col("dst"))
+        .select(greatest(col("src"), col("dst")).as("src"),
+          least(col("src"), col("dst")).as("dst"))
+        .distinct())
 
-    var i = 0
-    var curSig = fingerprint(cur)
-    var stable = curSig._1 == 0L
-    while (i < maxIter && !stable) {
-      // checkpoint between the stars too: smallStar references its
-      // input ~4x (sym twice, nbrMin, join probe) and would otherwise
-      // re-evaluate the large-star join per reference
-      val next = smallStar(largeStar(cur).localCheckpoint()).localCheckpoint()
-      // both sides are canonically-oriented distinct sets, so equal
-      // fingerprints mean a fixpoint — one agg per round instead of
-      // count + except (which doubles per-round cost at large |E|)
-      val nextSig = fingerprint(next)
-      stable = nextSig == curSig
-      cur = next
-      curSig = nextSig
-      i += 1
+      var i = 0
+      var curSig = fingerprint(cur)
+      var stable = curSig._1 == 0L
+      while (i < maxIter && !stable) {
+        // checkpoint between the stars too: smallStar references its
+        // input ~4x (sym twice, nbrMin, join probe) and would otherwise
+        // re-evaluate the large-star join per reference
+        val next = s.checkpoint(smallStar(s.checkpoint(largeStar(cur))))
+        // both sides are canonically-oriented distinct sets, so equal
+        // fingerprints mean a fixpoint — one agg per round instead of
+        // count + except (which doubles per-round cost at large |E|)
+        val nextSig = fingerprint(next)
+        stable = nextSig == curSig
+        cur = next
+        curSig = nextSig
+        i += 1
+      }
+      if (!stable) System.err.println(
+        s"[graft] connectedComponents: maxIter=$maxIter star rounds reached " +
+          "before fixpoint — labels may be unconverged")
+      // fixpoint edges are one star per component: (member, root=min);
+      // nodes without a star row are their own singleton component
+      val roots = cur.select(col("src").as("node"), col("dst").as("__root"))
+      Materialize.checkpoint(nodes.join(roots, Seq("node"), "left")
+        .groupBy("node")
+        .agg(min(coalesce(col("__root"), col("node"))).as("component")))
     }
-    if (!stable) System.err.println(
-      s"[graft] connectedComponents: maxIter=$maxIter star rounds reached " +
-        "before fixpoint — labels may be unconverged")
-    // fixpoint edges are one star per component: (member, root=min);
-    // nodes without a star row are their own singleton component
-    nodes.join(cur.select(col("src").as("node"), col("dst").as("__root")),
-        Seq("node"), "left")
-      .groupBy("node")
-      .agg(min(coalesce(col("__root"), col("node"))).as("component"))
-      .localCheckpoint()
   }
 
   /** Collapse near-dup pairs to per-component survivors:

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Materialize
 import graft.functions.HashFunctions.{minhashSig, simhash64}
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
@@ -185,24 +186,23 @@ object Dedup {
                  shingleN: Int = 3, numHashes: Int = 32, bands: Int = 8,
                  threshold: Double = 0.7, maxBucket: Int = 1000): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    // persisted: the banding branch and the Jaccard-verify branch both
-    // read it — without the cache the tokenize+shingle+minhash scan
-    // (the dominant narrow stage) runs twice
-    val sig = df.select(col(idCol), tokens(col(textCol)).as("__toks"))
-      .select(col(idCol), array_distinct(shinglesOfTokens(col("__toks"), shingleN)).as("__sh"))
-      .withColumn("minhash", minhashSig(col("__sh"), numHashes))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    Materialize.scoped { s =>
+      // cached: the banding branch and the Jaccard-verify branch both
+      // read it — without the cache the tokenize+shingle+minhash scan
+      // (the dominant narrow stage) runs twice
+      val sig = s.cache(df.select(col(idCol), tokens(col(textCol)).as("__toks"))
+        .select(col(idCol), array_distinct(shinglesOfTokens(col("__toks"), shingleN)).as("__sh"))
+        .withColumn("minhash", minhashSig(col("__sh"), numHashes)))
 
-    val banded = bandBuckets(sig, idCol, numHashes, bands)
+      val banded = bandBuckets(sig, idCol, numHashes, bands)
 
-    val pairs = pairsFromBuckets(banded, Seq("band", "bh"), idCol, maxBucket)
-    // materialize the (tiny) verified pairs eagerly, then release the
-    // signature cache — it must not outlive the call (a long session
-    // running many dedups would otherwise accumulate executor memory)
-    val result = verifyJaccard(pairs, sig.select(col(idCol), col("__sh")),
-      idCol, threshold).localCheckpoint()
-    sig.unpersist()
-    result
+      val pairs = pairsFromBuckets(banded, Seq("band", "bh"), idCol, maxBucket)
+      // materialize the (tiny) verified pairs eagerly; the signature
+      // cache must not outlive the call (a long session running many
+      // dedups would otherwise accumulate executor memory)
+      Materialize.checkpoint(verifyJaccard(pairs, sig.select(col(idCol), col("__sh")),
+        idCol, threshold))
+    }
   }
 
   /** LSH band buckets from a `minhash` signature column: each of the
@@ -295,17 +295,16 @@ object Dedup {
   def bruteForceJaccard(df: DataFrame, idCol: String, textCol: String,
                         shingleN: Int, threshold: Double,
                         maxDocs: Int = 2000): DataFrame = {
-    val sh = df.select(col(idCol), tokens(col(textCol)).as("__toks"))
-      .select(col(idCol), array_distinct(shinglesOfTokens(col("__toks"), shingleN)).as("__sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    require(sh.count() <= maxDocs,
-      s"bruteForceJaccard is verification-scale only (cap $maxDocs docs)")
-    val pairs = pairsFromBuckets(
-      sh.select(lit(0).as("__all"), col(idCol)), Seq("__all"), idCol,
-      maxBucket = maxDocs)
-    val result = verifyJaccard(pairs, sh, idCol, threshold).localCheckpoint()
-    sh.unpersist()
-    result
+    Materialize.scoped { s =>
+      val sh = s.cache(df.select(col(idCol), tokens(col(textCol)).as("__toks"))
+        .select(col(idCol), array_distinct(shinglesOfTokens(col("__toks"), shingleN)).as("__sh")))
+      require(sh.count() <= maxDocs,
+        s"bruteForceJaccard is verification-scale only (cap $maxDocs docs)")
+      val pairs = pairsFromBuckets(
+        sh.select(lit(0).as("__all"), col(idCol)), Seq("__all"), idCol,
+        maxBucket = maxDocs)
+      Materialize.checkpoint(verifyJaccard(pairs, sh, idCol, threshold))
+    }
   }
 
   /** Embedding-cosine near-dup pairs with CAPPED block-key candidate
@@ -392,19 +391,18 @@ object Dedup {
   def ngramJaccard(df: DataFrame, idCol: String, textCol: String,
                    shingleN: Int = 3, threshold: Double = 0.5,
                    maxBucket: Int = 1000): DataFrame = {
-    val sh = df.select(col(idCol), tokens(col(textCol)).as("__toks"))
-      .select(col(idCol), array_distinct(shinglesOfTokens(col("__toks"), shingleN)).as("__sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // candidates = docs sharing their minimum shingle hash (a 1-hash
-    // MinHash: P[shared min] ≈ jaccard, so real near-dups gate in and
-    // unrelated docs land in distinct buckets) within a length band
-    val gated = sh.select(col(idCol),
-      (size(col("__sh")) / 10).cast("int").as("lenb"),
-      array_min(transform(col("__sh"), s => xxhash64(s))).as("pref"))
-    val pairs = pairsFromBuckets(gated, Seq("lenb", "pref"), idCol, maxBucket)
-    val result = verifyJaccard(pairs, sh, idCol, threshold).localCheckpoint()
-    sh.unpersist() // see minHashLsh: the shingle cache must not outlive the call
-    result
+    Materialize.scoped { s =>
+      val sh = s.cache(df.select(col(idCol), tokens(col(textCol)).as("__toks"))
+        .select(col(idCol), array_distinct(shinglesOfTokens(col("__toks"), shingleN)).as("__sh")))
+      // candidates = docs sharing their minimum shingle hash (a 1-hash
+      // MinHash: P[shared min] ≈ jaccard, so real near-dups gate in and
+      // unrelated docs land in distinct buckets) within a length band
+      val gated = sh.select(col(idCol),
+        (size(col("__sh")) / 10).cast("int").as("lenb"),
+        array_min(transform(col("__sh"), s => xxhash64(s))).as("pref"))
+      val pairs = pairsFromBuckets(gated, Seq("lenb", "pref"), idCol, maxBucket)
+      Materialize.checkpoint(verifyJaccard(pairs, sh, idCol, threshold))
+    }
   }
 
   /** EXACT set-similarity self-join via PREFIX FILTERING — the
@@ -460,80 +458,75 @@ object Dedup {
     // bound is exact 64-bit (s ≤ shingles/doc, so s·tPpm ≤ ~1e12 «
     // 2^63).
     val tPpm = math.floor(threshold * 1e6).toLong
-    val sh = df.select(col(idCol), tokens(col(textCol)).as("__toks"))
-      .select(col(idCol), array_distinct(shinglesOfTokens(col("__toks"), shingleN)).as("__sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materializes the cache (sh feeds candidate gen AND both verify
-    // sides) and sizes the verify-join pin below in one cheap job
-    val nRows = sh.count()
-    val ex = sh.select(col(idCol), size(col("__sh")).as("__s"),
-      explode(col("__sh")).as("__g"))
-    val dfreq = ex.groupBy("__g").agg(count(lit(1)).as("__df"))
-    // global order (df asc, shingle asc) — deterministic, rarest first
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(idCol).orderBy(col("__df"), col("__g"))
-    // vocabulary scales with the corpus: both sides shuffle on the
-    // shingle (merge pin — the static planner's aggregate estimate
-    // would broadcast a corpus-scaling build)
-    val prefix = ex.join(dfreq.hint("merge"), "__g")
-      .withColumn("__rk", row_number().over(w))
-      // prefix length = s - ceil(τ·s) + 1, ceil in exact integers:
-      // ceil(s·tPpm / 1e6) = (s·tPpm + 999999) div 1e6
-      .filter(expr(s"__rk <= __s - ((__s * ${tPpm}L + 999999) div 1000000) + 1"))
-    // ONE (shingle)-keyed shuffle serves the completeness gate, the
-    // in-bucket pair generation AND the length filter: buckets carry
-    // (id, set size) structs, sorted by id (ids are unique, so the
-    // struct sort IS the id sort)
-    val buckets = prefix.groupBy("__g")
-      .agg(sort_array(collect_set(struct(col(idCol).as("id"), col("__s").as("s")))).as("ids"))
-      .filter(size(col("ids")) >= 2)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val biggest = buckets.agg(coalesce(max(size(col("ids"))), lit(0))).head().getInt(0)
-    if (biggest > maxBucket) {
-      buckets.unpersist(); sh.unpersist()
-      throw new IllegalStateException(
-        s"prefixFilterJaccard: largest prefix bucket has $biggest docs > maxBucket=$maxBucket; " +
-          "dropping it would break the exact-result contract. Raise threshold (shorter " +
-          "prefixes), raise maxBucket, or exact-dedup the spam cluster first.")
+    Materialize.scoped { s =>
+      val sh = s.cache(df.select(col(idCol), tokens(col(textCol)).as("__toks"))
+        .select(col(idCol), array_distinct(shinglesOfTokens(col("__toks"), shingleN)).as("__sh")))
+      // materializes the cache (sh feeds candidate gen AND both verify
+      // sides) and sizes the verify-join pin below in one cheap job
+      val nRows = sh.count()
+      val ex = sh.select(col(idCol), size(col("__sh")).as("__s"),
+        explode(col("__sh")).as("__g"))
+      val dfreq = ex.groupBy("__g").agg(count(lit(1)).as("__df"))
+      // global order (df asc, shingle asc) — deterministic, rarest first
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(idCol).orderBy(col("__df"), col("__g"))
+      // vocabulary scales with the corpus: both sides shuffle on the
+      // shingle (merge pin — the static planner's aggregate estimate
+      // would broadcast a corpus-scaling build)
+      val prefix = ex.join(dfreq.hint("merge"), "__g")
+        .withColumn("__rk", row_number().over(w))
+        // prefix length = s - ceil(τ·s) + 1, ceil in exact integers:
+        // ceil(s·tPpm / 1e6) = (s·tPpm + 999999) div 1e6
+        .filter(expr(s"__rk <= __s - ((__s * ${tPpm}L + 999999) div 1000000) + 1"))
+      // ONE (shingle)-keyed shuffle serves the completeness gate, the
+      // in-bucket pair generation AND the length filter: buckets carry
+      // (id, set size) structs, sorted by id (ids are unique, so the
+      // struct sort IS the id sort)
+      val buckets = s.cache(prefix.groupBy("__g")
+        .agg(sort_array(collect_set(struct(col(idCol).as("id"), col("__s").as("s")))).as("ids"))
+        .filter(size(col("ids")) >= 2))
+      val biggest = buckets.agg(coalesce(max(size(col("ids"))), lit(0))).head().getInt(0)
+      if (biggest > maxBucket)
+        throw new IllegalStateException(
+          s"prefixFilterJaccard: largest prefix bucket has $biggest docs > maxBucket=$maxBucket; " +
+            "dropping it would break the exact-result contract. Raise threshold (shorter " +
+            "prefixes), raise maxBucket, or exact-dedup the spam cluster first.")
+      // in-bucket pairs with the PPJoin LENGTH FILTER applied during
+      // generation (J ≥ τ ⇒ min(sa,sb) ≥ τ·max(sa,sb)): sizes ride the
+      // bucket structs, so no join ever touches a pruned pair
+      val pairStructs = flatten(
+        transform(sequence(lit(0), size(col("ids")) - 2), i =>
+          transform(sequence(i + 1, size(col("ids")) - 1), j =>
+            struct(element_at(col("ids"), i + 1).getField("id").as("id_a"),
+                   element_at(col("ids"), j + 1).getField("id").as("id_b"),
+                   element_at(col("ids"), i + 1).getField("s").as("sa"),
+                   element_at(col("ids"), j + 1).getField("s").as("sb")))))
+      val pairs = buckets.select(explode(pairStructs).as("p"))
+        .select(col("p.id_a"), col("p.id_b"), col("p.sa"), col("p.sb"))
+        // PPJoin length filter in the same exact integers: J ≥ τ ⇒
+        // min·1e6 ≥ tPpm·max (no division, no floats)
+        .filter(least(col("sa"), col("sb")).cast("long") * lit(1000000L)
+          >= lit(tPpm) * greatest(col("sa"), col("sb")).cast("long"))
+        .dropDuplicates("id_a", "id_b")
+      // raw-string set compare (NOT verifyJaccard's xxhash64 payload):
+      // replayable bit-for-bit by an ANSI oracle. |union| = sa + sb − |∩|
+      // — the carried sizes spare the array_union pass. Join strategy
+      // pinned by measured corpus size, the embedCosine rule: past
+      // BroadcastSafeCorpusRows the id→shingle-set sides are driver-OOM
+      // liabilities → merge; below it AQE's broadcast plan wins.
+      val pin = nRows > BroadcastSafeCorpusRows
+      def side(n: String, v: String) = {
+        val s = sh.select(col(idCol).as(n), col("__sh").as(v))
+        if (pin) s.hint("merge") else s
+      }
+      Materialize.checkpoint(pairs
+        .join(side("id_a", "sh_a"), "id_a").join(side("id_b", "sh_b"), "id_b")
+        .withColumn("__i", size(array_intersect(col("sh_a"), col("sh_b"))))
+        .withColumn("jaccard",
+          col("__i").cast("double") / (col("sa") + col("sb") - col("__i")).cast("double"))
+        .filter(col("jaccard") >= threshold)
+        .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard")))
     }
-    // in-bucket pairs with the PPJoin LENGTH FILTER applied during
-    // generation (J ≥ τ ⇒ min(sa,sb) ≥ τ·max(sa,sb)): sizes ride the
-    // bucket structs, so no join ever touches a pruned pair
-    val pairStructs = flatten(
-      transform(sequence(lit(0), size(col("ids")) - 2), i =>
-        transform(sequence(i + 1, size(col("ids")) - 1), j =>
-          struct(element_at(col("ids"), i + 1).getField("id").as("id_a"),
-                 element_at(col("ids"), j + 1).getField("id").as("id_b"),
-                 element_at(col("ids"), i + 1).getField("s").as("sa"),
-                 element_at(col("ids"), j + 1).getField("s").as("sb")))))
-    val pairs = buckets.select(explode(pairStructs).as("p"))
-      .select(col("p.id_a"), col("p.id_b"), col("p.sa"), col("p.sb"))
-      // PPJoin length filter in the same exact integers: J ≥ τ ⇒
-      // min·1e6 ≥ tPpm·max (no division, no floats)
-      .filter(least(col("sa"), col("sb")).cast("long") * lit(1000000L)
-        >= lit(tPpm) * greatest(col("sa"), col("sb")).cast("long"))
-      .dropDuplicates("id_a", "id_b")
-    // raw-string set compare (NOT verifyJaccard's xxhash64 payload):
-    // replayable bit-for-bit by an ANSI oracle. |union| = sa + sb − |∩|
-    // — the carried sizes spare the array_union pass. Join strategy
-    // pinned by measured corpus size, the embedCosine rule: past
-    // BroadcastSafeCorpusRows the id→shingle-set sides are driver-OOM
-    // liabilities → merge; below it AQE's broadcast plan wins.
-    val pin = nRows > BroadcastSafeCorpusRows
-    def side(n: String, v: String) = {
-      val s = sh.select(col(idCol).as(n), col("__sh").as(v))
-      if (pin) s.hint("merge") else s
-    }
-    val result = pairs.join(side("id_a", "sh_a"), "id_a").join(side("id_b", "sh_b"), "id_b")
-      .withColumn("__i", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("jaccard",
-        col("__i").cast("double") / (col("sa") + col("sb") - col("__i")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
-      .localCheckpoint()
-    buckets.unpersist()
-    sh.unpersist()
-    result
   }
 
   /** EXACT set-CONTAINMENT join — the asymmetric sibling of
@@ -572,72 +565,67 @@ object Dedup {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
     val tPpm = math.floor(threshold * 1e6).toLong
-    val sh = df.select(col(idCol), tokens(col(textCol)).as("__toks"))
-      .select(col(idCol), array_distinct(shinglesOfTokens(col("__toks"), shingleN)).as("__sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nRows = sh.count()
-    val ex = sh.select(col(idCol), size(col("__sh")).as("__s"),
-      explode(col("__sh")).as("__g"))
-    val dfreq = ex.groupBy("__g").agg(count(lit(1)).as("__df"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(idCol).orderBy(col("__df"), col("__g"))
-    // every occurrence rides the bucket (the full inverted index);
-    // the prefix FLAG, not a prefix filter, marks the rarest
-    // s − ceil(τ·s) + 1 entries per doc
-    val flagged = ex.join(dfreq.hint("merge"), "__g")
-      .withColumn("__rk", row_number().over(w))
-      .withColumn("__p",
-        expr(s"__rk <= __s - ((__s * ${tPpm}L + 999999) div 1000000) + 1"))
-    val buckets = flagged.groupBy("__g")
-      .agg(sort_array(collect_set(struct(col(idCol).as("id"),
-        col("__s").as("s"), col("__p").as("p")))).as("ids"))
-      .filter(size(col("ids")) >= 2)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val biggest = buckets.agg(coalesce(max(size(col("ids"))), lit(0))).head().getInt(0)
-    if (biggest > maxBucket) {
-      buckets.unpersist(); sh.unpersist()
-      throw new IllegalStateException(
-        s"containmentPairs: largest shingle bucket has $biggest docs > maxBucket=$maxBucket; " +
-          "dropping it would break the exact-result contract. Strip stop-shingles past a df " +
-          "ceiling first, or raise maxBucket.")
+    Materialize.scoped { s =>
+      val sh = s.cache(df.select(col(idCol), tokens(col(textCol)).as("__toks"))
+        .select(col(idCol), array_distinct(shinglesOfTokens(col("__toks"), shingleN)).as("__sh")))
+      val nRows = sh.count()
+      val ex = sh.select(col(idCol), size(col("__sh")).as("__s"),
+        explode(col("__sh")).as("__g"))
+      val dfreq = ex.groupBy("__g").agg(count(lit(1)).as("__df"))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(idCol).orderBy(col("__df"), col("__g"))
+      // every occurrence rides the bucket (the full inverted index);
+      // the prefix FLAG, not a prefix filter, marks the rarest
+      // s − ceil(τ·s) + 1 entries per doc
+      val flagged = ex.join(dfreq.hint("merge"), "__g")
+        .withColumn("__rk", row_number().over(w))
+        .withColumn("__p",
+          expr(s"__rk <= __s - ((__s * ${tPpm}L + 999999) div 1000000) + 1"))
+      val buckets = s.cache(flagged.groupBy("__g")
+        .agg(sort_array(collect_set(struct(col(idCol).as("id"),
+          col("__s").as("s"), col("__p").as("p")))).as("ids"))
+        .filter(size(col("ids")) >= 2))
+      val biggest = buckets.agg(coalesce(max(size(col("ids"))), lit(0))).head().getInt(0)
+      if (biggest > maxBucket)
+        throw new IllegalStateException(
+          s"containmentPairs: largest shingle bucket has $biggest docs > maxBucket=$maxBucket; " +
+            "dropping it would break the exact-result contract. Strip stop-shingles past a df " +
+            "ceiling first, or raise maxBucket.")
+      val pairStructs = flatten(
+        transform(sequence(lit(0), size(col("ids")) - 2), i =>
+          transform(sequence(i + 1, size(col("ids")) - 1), j =>
+            struct(element_at(col("ids"), i + 1).getField("id").as("id_a"),
+                   element_at(col("ids"), j + 1).getField("id").as("id_b"),
+                   element_at(col("ids"), i + 1).getField("s").as("sa"),
+                   element_at(col("ids"), j + 1).getField("s").as("sb"),
+                   element_at(col("ids"), i + 1).getField("p").as("pa"),
+                   element_at(col("ids"), j + 1).getField("p").as("pb")))))
+      val pairs = buckets.select(explode(pairStructs).as("p"))
+        .select(col("p.id_a"), col("p.id_b"), col("p.sa"), col("p.sb"),
+          col("p.pa"), col("p.pb"))
+        // lossless keep rule: the smaller side's entry must be one of
+        // its prefix shingles (ties: either side qualifies)
+        .filter((col("sa") <= col("sb") && col("pa")) ||
+          (col("sb") <= col("sa") && col("pb")))
+        .dropDuplicates("id_a", "id_b")
+      val pin = nRows > BroadcastSafeCorpusRows
+      def side(n: String, v: String) = {
+        val s = sh.select(col(idCol).as(n), col("__sh").as(v))
+        if (pin) s.hint("merge") else s
+      }
+      // final filter on the exact rational (i / min is one IEEE division
+      // of two integers — engine-reproducible), the prefixFilterJaccard
+      // discipline: the ppm constant gates only the lossless candidate
+      // bounds, where FLOOR keeps them a superset
+      Materialize.checkpoint(pairs
+        .join(side("id_a", "sh_a"), "id_a").join(side("id_b", "sh_b"), "id_b")
+        .withColumn("__i", size(array_intersect(col("sh_a"), col("sh_b"))))
+        .withColumn("containment", col("__i").cast("double") /
+          least(col("sa"), col("sb")).cast("double"))
+        .filter(col("containment") >= threshold)
+        .select(col("id_a"), col("id_b"),
+          round(col("containment"), 6).as("containment")))
     }
-    val pairStructs = flatten(
-      transform(sequence(lit(0), size(col("ids")) - 2), i =>
-        transform(sequence(i + 1, size(col("ids")) - 1), j =>
-          struct(element_at(col("ids"), i + 1).getField("id").as("id_a"),
-                 element_at(col("ids"), j + 1).getField("id").as("id_b"),
-                 element_at(col("ids"), i + 1).getField("s").as("sa"),
-                 element_at(col("ids"), j + 1).getField("s").as("sb"),
-                 element_at(col("ids"), i + 1).getField("p").as("pa"),
-                 element_at(col("ids"), j + 1).getField("p").as("pb")))))
-    val pairs = buckets.select(explode(pairStructs).as("p"))
-      .select(col("p.id_a"), col("p.id_b"), col("p.sa"), col("p.sb"),
-        col("p.pa"), col("p.pb"))
-      // lossless keep rule: the smaller side's entry must be one of
-      // its prefix shingles (ties: either side qualifies)
-      .filter((col("sa") <= col("sb") && col("pa")) ||
-        (col("sb") <= col("sa") && col("pb")))
-      .dropDuplicates("id_a", "id_b")
-    val pin = nRows > BroadcastSafeCorpusRows
-    def side(n: String, v: String) = {
-      val s = sh.select(col(idCol).as(n), col("__sh").as(v))
-      if (pin) s.hint("merge") else s
-    }
-    // final filter on the exact rational (i / min is one IEEE division
-    // of two integers — engine-reproducible), the prefixFilterJaccard
-    // discipline: the ppm constant gates only the lossless candidate
-    // bounds, where FLOOR keeps them a superset
-    val result = pairs.join(side("id_a", "sh_a"), "id_a").join(side("id_b", "sh_b"), "id_b")
-      .withColumn("__i", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("containment", col("__i").cast("double") /
-        least(col("sa"), col("sb")).cast("double"))
-      .filter(col("containment") >= threshold)
-      .select(col("id_a"), col("id_b"),
-        round(col("containment"), 6).as("containment"))
-      .localCheckpoint()
-    buckets.unpersist()
-    sh.unpersist()
-    result
   }
 
   /** The 100 TB configuration of the near-dup slot: MinHash/LSH
@@ -672,47 +660,44 @@ object Dedup {
                            numHashes: Int = 32, bands: Int = 16,
                            maxBucket: Int = 10000): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val sh = df.select(col(idCol), tokens(col(textCol)).as("__toks"))
-      .select(col(idCol),
-        array_distinct(shinglesOfTokens(col("__toks"), shingleN)).as("__sh"))
-      .withColumn("__s", size(col("__sh")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nRows = sh.count() // materializes the cache, sizes the join pin
-    val banded = bandBuckets(
-      sh.withColumn("minhash", minhashSig(col("__sh"), numHashes)),
-      idCol, numHashes, bands)
-    // bucket lists persist for ONE extra pass that ACCOUNTS for the
-    // pathological-bucket cap instead of silently eating it: a dropped
-    // LSH bucket is a real recall-loss mode (a dense >maxBucket
-    // near-dup cluster loses its in-bucket pairs), distinct from the
-    // banding probability — the lossless twin THROWS in the analogous
-    // case, so the pruned path must at least be loud. Since r14 the
-    // numbers ALSO ride the returned frame as the named
-    // NearDupDropObservation (withDropMetric), landing in bench/scale
-    // artifacts next to spill instead of only a stderr line.
-    val buckets = bucketLists(banded, Seq("band", "bh"), idCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (db, dr, mx) = dropStats(buckets, maxBucket)
-    warnDrops(db, dr, mx, maxBucket, "minhashPrunedJaccard")
-    val pairs = pairsFromLists(buckets, maxBucket)
-    val pin = nRows > BroadcastSafeCorpusRows
-    def reScoreSide(n: String, shName: String, sName: String) = {
-      val s = sh.select(col(idCol).as(n), col("__sh").as(shName),
-        col("__s").as(sName))
-      if (pin) s.hint("merge") else s
+    Materialize.scoped { s =>
+      val sh = s.cache(df.select(col(idCol), tokens(col(textCol)).as("__toks"))
+        .select(col(idCol),
+          array_distinct(shinglesOfTokens(col("__toks"), shingleN)).as("__sh"))
+        .withColumn("__s", size(col("__sh"))))
+      val nRows = sh.count() // materializes the cache, sizes the join pin
+      val banded = bandBuckets(
+        sh.withColumn("minhash", minhashSig(col("__sh"), numHashes)),
+        idCol, numHashes, bands)
+      // bucket lists persist for ONE extra pass that ACCOUNTS for the
+      // pathological-bucket cap instead of silently eating it: a dropped
+      // LSH bucket is a real recall-loss mode (a dense >maxBucket
+      // near-dup cluster loses its in-bucket pairs), distinct from the
+      // banding probability — the lossless twin THROWS in the analogous
+      // case, so the pruned path must at least be loud. Since r14 the
+      // numbers ALSO ride the returned frame as the named
+      // NearDupDropObservation (withDropMetric), landing in bench/scale
+      // artifacts next to spill instead of only a stderr line.
+      val buckets = s.cache(bucketLists(banded, Seq("band", "bh"), idCol))
+      val (db, dr, mx) = dropStats(buckets, maxBucket)
+      warnDrops(db, dr, mx, maxBucket, "minhashPrunedJaccard")
+      val pairs = pairsFromLists(buckets, maxBucket)
+      val pin = nRows > BroadcastSafeCorpusRows
+      def reScoreSide(n: String, shName: String, sName: String) = {
+        val s = sh.select(col(idCol).as(n), col("__sh").as(shName),
+          col("__s").as(sName))
+        if (pin) s.hint("merge") else s
+      }
+      val result = Materialize.checkpoint(pairs
+        .join(reScoreSide("id_a", "sh_a", "sa"), "id_a")
+        .join(reScoreSide("id_b", "sh_b", "sb"), "id_b")
+        .withColumn("__i", size(array_intersect(col("sh_a"), col("sh_b"))))
+        .withColumn("jaccard",
+          col("__i").cast("double") / (col("sa") + col("sb") - col("__i")).cast("double"))
+        .filter(col("jaccard") >= threshold)
+        .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard")))
+      withDropMetric(result, db, dr, mx)
     }
-    val result = pairs
-      .join(reScoreSide("id_a", "sh_a", "sa"), "id_a")
-      .join(reScoreSide("id_b", "sh_b", "sb"), "id_b")
-      .withColumn("__i", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("jaccard",
-        col("__i").cast("double") / (col("sa") + col("sb") - col("__i")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
-      .localCheckpoint()
-    buckets.unpersist()
-    sh.unpersist()
-    withDropMetric(result, db, dr, mx)
   }
 
   /** The 100 TB configuration of the ASYMMETRIC containment slot
@@ -750,41 +735,38 @@ object Dedup {
                                maxBucket: Int = 10000): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
-    val sh = df.select(col(idCol), tokens(col(textCol)).as("__toks"))
-      .select(col(idCol),
-        array_distinct(shinglesOfTokens(col("__toks"), shingleN)).as("__sh"))
-      .withColumn("__s", size(col("__sh")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nRows = sh.count()
-    // bands = numHashes -> one hash per band: a single shared minhash
-    // value anywhere in the signature makes a candidate
-    val banded = bandBuckets(
-      sh.withColumn("minhash", minhashSig(col("__sh"), numHashes)),
-      idCol, numHashes, bands = numHashes)
-    val buckets = bucketLists(banded, Seq("band", "bh"), idCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (db, dr, mx) = dropStats(buckets, maxBucket)
-    warnDrops(db, dr, mx, maxBucket, "minhashPrunedContainment")
-    val pairs = pairsFromLists(buckets, maxBucket)
-    val pin = nRows > BroadcastSafeCorpusRows
-    def reScoreSide(n: String, shName: String, sName: String) = {
-      val s = sh.select(col(idCol).as(n), col("__sh").as(shName),
-        col("__s").as(sName))
-      if (pin) s.hint("merge") else s
+    Materialize.scoped { s =>
+      val sh = s.cache(df.select(col(idCol), tokens(col(textCol)).as("__toks"))
+        .select(col(idCol),
+          array_distinct(shinglesOfTokens(col("__toks"), shingleN)).as("__sh"))
+        .withColumn("__s", size(col("__sh"))))
+      val nRows = sh.count()
+      // bands = numHashes -> one hash per band: a single shared minhash
+      // value anywhere in the signature makes a candidate
+      val banded = bandBuckets(
+        sh.withColumn("minhash", minhashSig(col("__sh"), numHashes)),
+        idCol, numHashes, bands = numHashes)
+      val buckets = s.cache(bucketLists(banded, Seq("band", "bh"), idCol))
+      val (db, dr, mx) = dropStats(buckets, maxBucket)
+      warnDrops(db, dr, mx, maxBucket, "minhashPrunedContainment")
+      val pairs = pairsFromLists(buckets, maxBucket)
+      val pin = nRows > BroadcastSafeCorpusRows
+      def reScoreSide(n: String, shName: String, sName: String) = {
+        val s = sh.select(col(idCol).as(n), col("__sh").as(shName),
+          col("__s").as(sName))
+        if (pin) s.hint("merge") else s
+      }
+      val result = Materialize.checkpoint(pairs
+        .join(reScoreSide("id_a", "sh_a", "sa"), "id_a")
+        .join(reScoreSide("id_b", "sh_b", "sb"), "id_b")
+        .withColumn("__i", size(array_intersect(col("sh_a"), col("sh_b"))))
+        .withColumn("containment", col("__i").cast("double") /
+          least(col("sa"), col("sb")).cast("double"))
+        .filter(col("containment") >= threshold)
+        .select(col("id_a"), col("id_b"),
+          round(col("containment"), 6).as("containment")))
+      withDropMetric(result, db, dr, mx)
     }
-    val result = pairs
-      .join(reScoreSide("id_a", "sh_a", "sa"), "id_a")
-      .join(reScoreSide("id_b", "sh_b", "sb"), "id_b")
-      .withColumn("__i", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("containment", col("__i").cast("double") /
-        least(col("sa"), col("sb")).cast("double"))
-      .filter(col("containment") >= threshold)
-      .select(col("id_a"), col("id_b"),
-        round(col("containment"), 6).as("containment"))
-      .localCheckpoint()
-    buckets.unpersist()
-    sh.unpersist()
-    withDropMetric(result, db, dr, mx)
   }
 
   /** Exact dedup with a SURVIVOR POLICY and rewrite map: one row per
@@ -1172,86 +1154,81 @@ object Dedup {
                                 bands: Int = 16, threshold: Double = 0.7,
                                 maxBucket: Int = 100000): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val bsig = signatures(batch, idCol, textCol, shingleN, numHashes)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nBatch = bsig.count() // materializes the cache, sizes the pins
-    val pinBig = nBatch > BroadcastSafeCorpusRows
-    def pin(df: DataFrame) = if (pinBig) df.hint("merge") else df
+    Materialize.scoped { s =>
+      val bsig = s.cache(signatures(batch, idCol, textCol, shingleN, numHashes))
+      val nBatch = bsig.count() // materializes the cache, sizes the pins
+      val pinBig = nBatch > BroadcastSafeCorpusRows
+      def pin(df: DataFrame) = if (pinBig) df.hint("merge") else df
 
-    val bBands = bandBuckets(bsig, idCol, numHashes, bands)
-    // history band rows that share a bucket with ANY batch doc: the
-    // batch's distinct band keys gate the index scan — the index side
-    // is never shuffled on its own account (left_semi against a
-    // broadcast batch-key set at nightly batch sizes; a corpus-sized
-    // "batch" flips the gate join to merge by the same pin)
-    val bKeys = bBands.select(col("band"), col("bh")).distinct()
-    val iBands = bandBuckets(
-      index.select(col("hist_id").as("__hid"), col("minhash")),
-      "__hid", numHashes, bands)
-    val hHit = iBands.join(
-      if (pinBig) bKeys.hint("merge") else broadcast(bKeys),
-      Seq("band", "bh"), "left_semi")
-    // surviving history bucket lists, capped + drop-accounted (the
-    // minhashPrunedJaccard discipline — an over-cap bucket here is a
-    // spam cluster whose history matches would be lost; the numbers
-    // ride the returned frame as the named observation)
-    val hBuckets = hHit.groupBy(col("band"), col("bh"))
-      .agg(sort_array(collect_set(col("__hid"))).as("ids"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (db, dr, mx) = dropStats(hBuckets, maxBucket)
-    warnDrops(db, dr, mx, maxBucket, "incrementalNearDupIndexed")
-    val cand = bBands.join(pin(hBuckets.filter(size(col("ids")) <= maxBucket)),
-        Seq("band", "bh"))
-      .select(col(idCol), explode(col("ids")).as("__hid"))
-      .dropDuplicates(idCol, "__hid")
-    val rescored = cand
-      .join(pin(index.select(col("hist_id").as("__hid"), col("sh").as("sh_h"))),
-        "__hid")
-      .join(pin(bsig.select(col(idCol), col("sh").as("sh_b"))), idCol)
-      .filter(jaccard(col("sh_b"), col("sh_h")) >= threshold)
-    val histVerdict = rescored.groupBy(col(idCol))
-      .agg(min(col("__hid")).as("__hist_match"),
-        count(lit(1)).as("__n_hist"))
+      val bBands = bandBuckets(bsig, idCol, numHashes, bands)
+      // history band rows that share a bucket with ANY batch doc: the
+      // batch's distinct band keys gate the index scan — the index side
+      // is never shuffled on its own account (left_semi against a
+      // broadcast batch-key set at nightly batch sizes; a corpus-sized
+      // "batch" flips the gate join to merge by the same pin)
+      val bKeys = bBands.select(col("band"), col("bh")).distinct()
+      val iBands = bandBuckets(
+        index.select(col("hist_id").as("__hid"), col("minhash")),
+        "__hid", numHashes, bands)
+      val hHit = iBands.join(
+        if (pinBig) bKeys.hint("merge") else broadcast(bKeys),
+        Seq("band", "bh"), "left_semi")
+      // surviving history bucket lists, capped + drop-accounted (the
+      // minhashPrunedJaccard discipline — an over-cap bucket here is a
+      // spam cluster whose history matches would be lost; the numbers
+      // ride the returned frame as the named observation)
+      val hBuckets = s.cache(hHit.groupBy(col("band"), col("bh"))
+        .agg(sort_array(collect_set(col("__hid"))).as("ids")))
+      val (db, dr, mx) = dropStats(hBuckets, maxBucket)
+      warnDrops(db, dr, mx, maxBucket, "incrementalNearDupIndexed")
+      val cand = bBands.join(pin(hBuckets.filter(size(col("ids")) <= maxBucket)),
+          Seq("band", "bh"))
+        .select(col(idCol), explode(col("ids")).as("__hid"))
+        .dropDuplicates(idCol, "__hid")
+      val rescored = cand
+        .join(pin(index.select(col("hist_id").as("__hid"), col("sh").as("sh_h"))),
+          "__hid")
+        .join(pin(bsig.select(col(idCol), col("sh").as("sh_b"))), idCol)
+        .filter(jaccard(col("sh_b"), col("sh_h")) >= threshold)
+      val histVerdict = rescored.groupBy(col(idCol))
+        .agg(min(col("__hid")).as("__hist_match"),
+          count(lit(1)).as("__n_hist"))
 
-    // batch-internal near-dup components (batch-sized work). The
-    // bucket lists are built explicitly (not via pairsFromBuckets) so
-    // over-cap BATCH buckets get the same loud drop accounting the
-    // history path has — a silently-capped batch bucket would lose
-    // dup_batch pairs with no warning and no observation (ADVICE r14).
-    val bLists = bucketLists(bBands, Seq("band", "bh"), idCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (bdb, bdr, bmx) = dropStats(bLists, maxBucket)
-    warnDrops(bdb, bdr, bmx, maxBucket,
-      "incrementalNearDupIndexed (batch-internal)")
-    val bPairs = pairsFromLists(bLists, maxBucket)
-    val bEdges = bPairs
-      .join(bsig.select(col(idCol).as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(bsig.select(col(idCol).as("id_b"), col("sh").as("sh_b")), "id_b")
-      .filter(jaccard(col("sh_a"), col("sh_b")) >= threshold)
-      .select(col("id_a"), col("id_b"))
-    val comp = Components.connectedComponents(bEdges)
-      .withColumnRenamed("node", idCol)
+      // batch-internal near-dup components (batch-sized work). The
+      // bucket lists are built explicitly (not via pairsFromBuckets) so
+      // over-cap BATCH buckets get the same loud drop accounting the
+      // history path has — a silently-capped batch bucket would lose
+      // dup_batch pairs with no warning and no observation (ADVICE r14).
+      val bLists = s.cache(bucketLists(bBands, Seq("band", "bh"), idCol))
+      val (bdb, bdr, bmx) = dropStats(bLists, maxBucket)
+      warnDrops(bdb, bdr, bmx, maxBucket,
+        "incrementalNearDupIndexed (batch-internal)")
+      val bPairs = pairsFromLists(bLists, maxBucket)
+      val bEdges = bPairs
+        .join(bsig.select(col(idCol).as("id_a"), col("sh").as("sh_a")), "id_a")
+        .join(bsig.select(col(idCol).as("id_b"), col("sh").as("sh_b")), "id_b")
+        .filter(jaccard(col("sh_a"), col("sh_b")) >= threshold)
+        .select(col("id_a"), col("id_b"))
+      val comp = Components.connectedComponents(bEdges)
+        .withColumnRenamed("node", idCol)
 
-    val result = bsig.select(col(idCol))
-      .join(histVerdict, Seq(idCol), "left")
-      .join(comp, Seq(idCol), "left")
-      .select(col(idCol),
-        when(col("__hist_match").isNotNull, lit("dup_history"))
-          .when(col("component").isNotNull && col("component") =!= col(idCol),
-            lit("dup_batch"))
-          .otherwise(lit("new")).as("status"),
-        coalesce(col("__hist_match"),
-          when(col("component") =!= col(idCol), col("component")),
-          col(idCol)).as("canonical_id"),
-        coalesce(col("component"), col(idCol)).as("batch_component"),
-        coalesce(col("__n_hist"), lit(0L)).as("n_hist_matches"))
-      .localCheckpoint()
-    hBuckets.unpersist()
-    bLists.unpersist()
-    bsig.unpersist()
-    // ONE observation folding both candidate paths' drops (history
-    // band buckets + batch-internal buckets)
-    withDropMetric(result, db + bdb, dr + bdr, math.max(mx, bmx))
+      val result = Materialize.checkpoint(bsig.select(col(idCol))
+        .join(histVerdict, Seq(idCol), "left")
+        .join(comp, Seq(idCol), "left")
+        .select(col(idCol),
+          when(col("__hist_match").isNotNull, lit("dup_history"))
+            .when(col("component").isNotNull && col("component") =!= col(idCol),
+              lit("dup_batch"))
+            .otherwise(lit("new")).as("status"),
+          coalesce(col("__hist_match"),
+            when(col("component") =!= col(idCol), col("component")),
+            col(idCol)).as("canonical_id"),
+          coalesce(col("component"), col(idCol)).as("batch_component"),
+          coalesce(col("__n_hist"), lit(0L)).as("n_hist_matches")))
+      // ONE observation folding both candidate paths' drops (history
+      // band buckets + batch-internal buckets)
+      withDropMetric(result, db + bdb, dr + bdr, math.max(mx, bmx))
+    }
   }
 
   /** [[incrementalNearDupIndexed]] with the index derived inline from

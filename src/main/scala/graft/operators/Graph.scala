@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -63,7 +64,7 @@ object Graph {
     * frame and shrinks as the graph saturates. `reached` is merged
     * with each hop's candidates via a node-keyed FULL OUTER join and
     * stays HASH-PARTITIONED on node across hops (the join's output
-    * partitioning, preserved through the per-hop localCheckpoint), so
+    * partitioning, re-claimed on each per-hop checkpoint), so
     * only the new candidates shuffle — the r16 union+anti-join form
     * re-exchanged the ENTIRE reached set every hop (measured
     * 7.6×-of-linear shuffle at ×32; at a 100 TB graph with deep
@@ -77,53 +78,53 @@ object Graph {
   def bfsHops(edges: DataFrame, srcCol: String, dstCol: String,
               seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 1)
-    val e = edges
-      .select(col(srcCol).cast("long").as("node"), col(dstCol).cast("long").as("dst"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    e.count()
-    val spark = edges.sparkSession
-    // AQE partition COALESCING off for the state-building actions:
-    // the re-asserted hash claim (checkpointHashPartitioned's safety
-    // contract) requires the physical layout to be exactly
-    // hash(node) % P, which coalesced shuffle reads break. Restored
-    // in the finally; the returned frame is fully materialized
-    // (localCheckpoint) before restore, so later consumers run under
-    // the session's own config.
-    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-    val prevCoalesce = spark.conf.getOption(coalesceKey)
-    spark.conf.set(coalesceKey, "false")
-    try {
-      var reached = org.apache.spark.sql.GraftBridge.checkpointHashPartitioned(
-        seeds.select(col("node").cast("long").as("node")).distinct()
-          .select(col("node"), lit(0).as("hops"))
-          // seed the node-keyed physical layout the per-hop merge reuses
-          .repartition(col("node")),
-        Seq("node"))
-      var frontier = reached.select("node")
-      for (t <- 1 to maxHops) {
-        val cand = e.join(frontier, "node").select(col("dst").as("node")).distinct()
-          .select(col("node"), lit(t).as("__t"))
-        // full-outer merge instead of anti-join + union (VERDICT r16
-        // #3: the union form re-exchanged the ENTIRE reached set every
-        // hop — 7.6×-of-linear shuffle at ×32): reached stays
-        // hash-partitioned on node so only `cand` (the new frontier's
-        // expansion, which shrinks as the graph saturates) moves;
-        // first-visit wins (existing hops beat this hop's label); the
-        // checkpoint pins ONE evaluation per hop, truncates lineage,
-        // and re-asserts the layout claim a FullOuter join drops
-        reached = org.apache.spark.sql.GraftBridge.checkpointHashPartitioned(
-          reached.join(cand, Seq("node"), "full_outer")
-            .select(col("node"), coalesce(col("hops"), col("__t")).as("hops")),
-          Seq("node"), sortedWithinPartitions = true)
-        frontier = reached.filter(col("hops") === t).select("node")
-      }
-      e.unpersist()
-      reached
-    } finally {
-      prevCoalesce match {
-        case Some(v) => spark.conf.set(coalesceKey, v)
-        case None => spark.conf.unset(coalesceKey)
+    Materialize.scoped { s =>
+      val e = s.cache(edges
+        .select(col(srcCol).cast("long").as("node"), col(dstCol).cast("long").as("dst"))
+        .distinct())
+      e.count()
+      val spark = edges.sparkSession
+      // AQE partition COALESCING off for the state-building actions:
+      // the re-asserted hash claim (claimHashPartitioned's safety
+      // contract) requires the physical layout to be exactly
+      // hash(node) % P, which coalesced shuffle reads break. Restored
+      // in the finally; the returned frame is fully materialized
+      // (an eager checkpoint) before restore, so later consumers run
+      // under the session's own config.
+      val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
+      val prevCoalesce = spark.conf.getOption(coalesceKey)
+      spark.conf.set(coalesceKey, "false")
+      try {
+        var reached = org.apache.spark.sql.GraftBridge.claimHashPartitioned(
+          s.checkpoint(seeds.select(col("node").cast("long").as("node")).distinct()
+            .select(col("node"), lit(0).as("hops"))
+            // seed the node-keyed physical layout the per-hop merge reuses
+            .repartition(col("node"))),
+          Seq("node"))
+        var frontier = reached.select("node")
+        for (t <- 1 to maxHops) {
+          val cand = e.join(frontier, "node").select(col("dst").as("node")).distinct()
+            .select(col("node"), lit(t).as("__t"))
+          // full-outer merge instead of anti-join + union (VERDICT r16
+          // #3: the union form re-exchanged the ENTIRE reached set every
+          // hop — 7.6×-of-linear shuffle at ×32): reached stays
+          // hash-partitioned on node so only `cand` (the new frontier's
+          // expansion, which shrinks as the graph saturates) moves;
+          // first-visit wins (existing hops beat this hop's label); the
+          // checkpoint pins ONE evaluation per hop, truncates lineage,
+          // and re-asserts the layout claim a FullOuter join drops
+          reached = org.apache.spark.sql.GraftBridge.claimHashPartitioned(
+            s.checkpoint(reached.join(cand, Seq("node"), "full_outer")
+              .select(col("node"), coalesce(col("hops"), col("__t")).as("hops"))),
+            Seq("node"), sortedWithinPartitions = true)
+          frontier = reached.filter(col("hops") === t).select("node")
+        }
+        reached
+      } finally {
+        prevCoalesce match {
+          case Some(v) => spark.conf.set(coalesceKey, v)
+          case None => spark.conf.unset(coalesceKey)
+        }
       }
     }
   }
@@ -162,60 +163,52 @@ object Graph {
   def hitsPpm(edges: DataFrame, srcCol: String, dstCol: String,
               iters: Int = 3): DataFrame = {
     require(iters >= 1)
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val eRaw = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .distinct()
-      .persist(lvl)
-    val spine = eRaw.select(col("src").as("node")).union(eRaw.select(col("dst")))
-      .distinct()
-      .persist(lvl)
-    val nNodes = spine.count()
-    // past the broadcast-safe node count the edge list re-caches TWICE,
-    // pre-partitioned+sorted on src and on dst (the GraphX mirror-table
-    // trade): the h→a join keys on src and the a→h join on dst, and an
-    // unpartitioned cache re-exchanged the full O(E) frame on EVERY one
-    // of the 2·iters sort-merge joins (measured 9.9 GB shuffle write at
-    // ×100 for a ~330 MB edge list). eDst derives from the cached eSrc
-    // so the distinct computes once; with the claims in place,
-    // iterations exchange only the node-sized normalized frames. Below
-    // the pin the rank frames broadcast and the cached edge list never
-    // moves, so the re-layout would be pure overhead — skipped.
-    val (eSrc, eDst) =
-      if (nNodes > Dedup.BroadcastSafeCorpusRows) {
-        val es = eRaw.repartition(col("src")).sortWithinPartitions("src").persist(lvl)
-        es.count()
-        val ed = es.repartition(col("dst")).sortWithinPartitions("dst").persist(lvl)
-        ed.count()
-        eRaw.unpersist()
-        (es, ed)
-      } else (eRaw, eRaw)
-    def maxNorm(df: DataFrame, c: String): DataFrame = {
-      val mx = df.agg(greatest(max(col(c)), lit(1L)).as("mx"))
-      df.crossJoin(broadcast(mx))
-        .select(col("node"), expr(s"($c * 1000000) div mx").as(c))
+    Materialize.scoped { s =>
+      val eRaw = s.cache(edges
+        .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
+        .distinct())
+      val spine = s.cache(eRaw.select(col("src").as("node")).union(eRaw.select(col("dst")))
+        .distinct())
+      val nNodes = spine.count()
+      // past the broadcast-safe node count the edge list re-caches TWICE,
+      // pre-partitioned+sorted on src and on dst (the GraphX mirror-table
+      // trade): the h→a join keys on src and the a→h join on dst, and an
+      // unpartitioned cache re-exchanged the full O(E) frame on EVERY one
+      // of the 2·iters sort-merge joins (measured 9.9 GB shuffle write at
+      // ×100 for a ~330 MB edge list). eDst derives from the cached eSrc
+      // so the distinct computes once; with the claims in place,
+      // iterations exchange only the node-sized normalized frames. Below
+      // the pin the rank frames broadcast and the cached edge list never
+      // moves, so the re-layout would be pure overhead — skipped.
+      val (eSrc, eDst) =
+        if (nNodes > Dedup.BroadcastSafeCorpusRows) {
+          val es = s.cache(eRaw.repartition(col("src")).sortWithinPartitions("src"))
+          es.count()
+          val ed = s.cache(es.repartition(col("dst")).sortWithinPartitions("dst"))
+          ed.count()
+          s.release(eRaw)
+          (es, ed)
+        } else (eRaw, eRaw)
+      def maxNorm(df: DataFrame, c: String): DataFrame = {
+        val mx = df.agg(greatest(max(col(c)), lit(1L)).as("mx"))
+        df.crossJoin(broadcast(mx))
+          .select(col("node"), expr(s"($c * 1000000) div mx").as(c))
+      }
+      var hubs = spine.select(col("node"), lit(1000000L).as("h"))
+      var auths: DataFrame = null
+      for (i <- 1 to iters) {
+        val aRaw = eSrc.join(hubs.withColumnRenamed("node", "src"), "src")
+          .groupBy(col("dst").as("node")).agg(sum(col("h")).as("a"))
+        auths = s.checkpoint(maxNorm(spine.join(aRaw, Seq("node"), "left")
+          .select(col("node"), coalesce(col("a"), lit(0L)).as("a")), "a"))
+        val hRaw = eDst.join(auths.withColumnRenamed("node", "dst"), "dst")
+          .groupBy(col("src").as("node")).agg(sum(col("a")).as("h"))
+        hubs = s.checkpoint(maxNorm(spine.join(hRaw, Seq("node"), "left")
+          .select(col("node"), coalesce(col("h"), lit(0L)).as("h")), "h"))
+      }
+      Materialize.checkpoint(hubs.join(auths, "node")
+        .select(col("node"), col("h").as("hub_ppm"), col("a").as("auth_ppm")))
     }
-    var hubs = spine.select(col("node"), lit(1000000L).as("h"))
-    var auths: DataFrame = null
-    for (i <- 1 to iters) {
-      val aRaw = eSrc.join(hubs.withColumnRenamed("node", "src"), "src")
-        .groupBy(col("dst").as("node")).agg(sum(col("h")).as("a"))
-      auths = maxNorm(spine.join(aRaw, Seq("node"), "left")
-        .select(col("node"), coalesce(col("a"), lit(0L)).as("a")), "a")
-      auths = auths.localCheckpoint()
-      val hRaw = eDst.join(auths.withColumnRenamed("node", "dst"), "dst")
-        .groupBy(col("src").as("node")).agg(sum(col("a")).as("h"))
-      hubs = maxNorm(spine.join(hRaw, Seq("node"), "left")
-        .select(col("node"), coalesce(col("h"), lit(0L)).as("h")), "h")
-      hubs = hubs.localCheckpoint()
-    }
-    val result = hubs.join(auths, "node")
-      .select(col("node"), col("h").as("hub_ppm"), col("a").as("auth_ppm"))
-      .localCheckpoint()
-    eSrc.unpersist()
-    eDst.unpersist()
-    spine.unpersist()
-    result
   }
 
   /** Per-node TRIANGLE counts over an undirected graph — the local
@@ -242,41 +235,38 @@ object Graph {
     *
     * @return (node, n_triangles) for every node in ≥ 1 triangle. */
   def triangleCount(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val und = edges
-      .select(col(srcCol).cast("long").as("x"), col(dstCol).cast("long").as("y"))
-      .filter(col("x") =!= col("y"))
-      .select(least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val deg = und.select(col("a").as("node")).union(und.select(col("b")))
-      .groupBy("node").agg(count(lit(1)).as("dg"))
-    val keyed = und
-      .join(deg.select(col("node").as("a"), col("dg").as("da")), "a")
-      .join(deg.select(col("node").as("b"), col("dg").as("db")), "b")
-    val ord = keyed.select(
-        when(struct(col("da"), col("a")) < struct(col("db"), col("b")), col("a"))
-          .otherwise(col("b")).as("src"),
-        when(struct(col("da"), col("a")) < struct(col("db"), col("b")), col("b"))
-          .otherwise(col("a")).as("dst"),
-        when(struct(col("da"), col("a")) < struct(col("db"), col("b")), col("db"))
-          .otherwise(col("da")).as("kdg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ord.count() // materialize; und no longer needed after this
-    und.unpersist()
-    val x = ord.select(col("src").as("u"), col("dst").as("v"), col("kdg").as("kv"))
-    val y = ord.select(col("src").as("u"), col("dst").as("w"), col("kdg").as("kw"))
-    val wedges = x.join(y, Seq("u"))
-      .filter(struct(col("kv"), col("v")) < struct(col("kw"), col("w")))
-    val tris = wedges.join(
-        ord.select(col("src").as("v"), col("dst").as("w")), Seq("v", "w"))
-      .select(col("u"), col("v"), col("w"))
-    val result = tris.select(col("u").as("node"))
-      .unionByName(tris.select(col("v").as("node")))
-      .unionByName(tris.select(col("w").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("n_triangles"))
-      .localCheckpoint()
-    ord.unpersist()
-    result
+    Materialize.scoped { s =>
+      val und = s.cache(edges
+        .select(col(srcCol).cast("long").as("x"), col(dstCol).cast("long").as("y"))
+        .filter(col("x") =!= col("y"))
+        .select(least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))
+        .distinct())
+      val deg = und.select(col("a").as("node")).union(und.select(col("b")))
+        .groupBy("node").agg(count(lit(1)).as("dg"))
+      val keyed = und
+        .join(deg.select(col("node").as("a"), col("dg").as("da")), "a")
+        .join(deg.select(col("node").as("b"), col("dg").as("db")), "b")
+      val ord = s.cache(keyed.select(
+          when(struct(col("da"), col("a")) < struct(col("db"), col("b")), col("a"))
+            .otherwise(col("b")).as("src"),
+          when(struct(col("da"), col("a")) < struct(col("db"), col("b")), col("b"))
+            .otherwise(col("a")).as("dst"),
+          when(struct(col("da"), col("a")) < struct(col("db"), col("b")), col("db"))
+            .otherwise(col("da")).as("kdg")))
+      ord.count() // materialize; und no longer needed after this
+      s.release(und)
+      val x = ord.select(col("src").as("u"), col("dst").as("v"), col("kdg").as("kv"))
+      val y = ord.select(col("src").as("u"), col("dst").as("w"), col("kdg").as("kw"))
+      val wedges = x.join(y, Seq("u"))
+        .filter(struct(col("kv"), col("v")) < struct(col("kw"), col("w")))
+      val tris = wedges.join(
+          ord.select(col("src").as("v"), col("dst").as("w")), Seq("v", "w"))
+        .select(col("u"), col("v"), col("w"))
+      Materialize.checkpoint(tris.select(col("u").as("node"))
+        .unionByName(tris.select(col("v").as("node")))
+        .unionByName(tris.select(col("w").as("node")))
+        .groupBy("node").agg(count(lit(1)).as("n_triangles")))
+    }
   }
 
   def pagerankPpm(edges: DataFrame, srcCol: String, dstCol: String,
@@ -284,76 +274,71 @@ object Graph {
                   checkpointEvery: Int = 2,
                   redistributeDangling: Boolean = false): DataFrame = {
     require(iters >= 1 && dampingPpm >= 0 && dampingPpm <= 1000000L)
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val eRaw = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .distinct()
-      .persist(lvl)
-    val deg = eRaw.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-    val spineRaw = eRaw.select(col("src").as("node"))
-      .union(eRaw.select(col("dst")))
-      .distinct()
-      .join(deg, Seq("node"), "left")
-      .persist(lvl)
-    val nNodes = spineRaw.count() // materializes the caches, sizes the pin
-    val pin = nNodes > Dedup.BroadcastSafeCorpusRows
-    // on the pinned (merge-join) path the edge list and spine re-cache
-    // PRE-PARTITIONED AND SORTED on their join keys (the GraphX
-    // routing-table discipline): an unpartitioned cache made every
-    // iteration's sort-merge join RE-EXCHANGE the full O(E) frame —
-    // the term that dominated the graph family's ×100 shuffle. With
-    // the hash+order claims carried by the caches, iterations exchange
-    // only the node-sized contribs frame plus the map-side-combined
-    // per-dst sum. Below the pin the iterations broadcast contribs and
-    // never exchange the cached frames at all, so the re-layout would
-    // be pure overhead — the raw caches are kept as-is.
-    val (e, spine) =
-      if (pin) {
-        val ep = eRaw.repartition(col("src")).sortWithinPartitions("src").persist(lvl)
-        val sp = spineRaw.repartition(col("node")).sortWithinPartitions("node").persist(lvl)
-        ep.count(); sp.count()
-        eRaw.unpersist(); spineRaw.unpersist()
-        (ep, sp)
-      } else (eRaw, spineRaw)
-    val base = 1000000L - dampingPpm
-    var ranks = spine.select(col("node"), col("deg"), lit(1000000L).as("r"))
-    for (i <- 1 to iters) {
-      val contribs = ranks.filter(col("deg").isNotNull)
-        .select(col("node").as("src"), expr("r div deg").as("c"))
-      val summed =
-        (if (pin) e.hint("merge").join(contribs.hint("merge"), "src")
-         else e.join(broadcast(contribs), "src"))
-          .groupBy(col("dst").as("node"))
-          .agg(sum(col("c")).as("s"))
-      val joined = spine.join(summed, Seq("node"), "left")
-      ranks =
-        if (redistributeDangling) {
-          // the standard dangling-mass term (VERDICT r15 next-round
-          // #9): sink rank redistributes uniformly instead of
-          // leaking — ONE 1-row aggregate per iteration (a narrow
-          // filtered sum over the rank frame, broadcast as a
-          // constant), truncating `div nNodes` so the trajectory
-          // stays exact-integer and oracle-replayable
-          val dang = ranks.filter(col("deg").isNull)
-            .agg(coalesce(sum(col("r")), lit(0L)).as("dm"))
-          joined.crossJoin(broadcast(dang))
-            .select(col("node"), col("deg"),
-              (lit(base) + expr(s"($dampingPpm * (coalesce(s, cast(0 as bigint))" +
-                s" + dm div ${nNodes}L)) div 1000000")).as("r"))
-        } else {
-          joined.select(col("node"), col("deg"),
-            (lit(base) + expr(s"($dampingPpm * coalesce(s, cast(0 as bigint))) div 1000000"))
-              .as("r"))
-        }
-      if (i % checkpointEvery == 0 && i < iters)
-        ranks = ranks.localCheckpoint(eager = false)
+    Materialize.scoped { s =>
+      val eRaw = s.cache(edges
+        .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
+        .distinct())
+      val deg = eRaw.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
+      val spineRaw = s.cache(eRaw.select(col("src").as("node"))
+        .union(eRaw.select(col("dst")))
+        .distinct()
+        .join(deg, Seq("node"), "left"))
+      val nNodes = spineRaw.count() // materializes the caches, sizes the pin
+      val pin = nNodes > Dedup.BroadcastSafeCorpusRows
+      // on the pinned (merge-join) path the edge list and spine re-cache
+      // PRE-PARTITIONED AND SORTED on their join keys (the GraphX
+      // routing-table discipline): an unpartitioned cache made every
+      // iteration's sort-merge join RE-EXCHANGE the full O(E) frame —
+      // the term that dominated the graph family's ×100 shuffle. With
+      // the hash+order claims carried by the caches, iterations exchange
+      // only the node-sized contribs frame plus the map-side-combined
+      // per-dst sum. Below the pin the iterations broadcast contribs and
+      // never exchange the cached frames at all, so the re-layout would
+      // be pure overhead — the raw caches are kept as-is.
+      val (e, spine) =
+        if (pin) {
+          val ep = s.cache(eRaw.repartition(col("src")).sortWithinPartitions("src"))
+          val sp = s.cache(spineRaw.repartition(col("node")).sortWithinPartitions("node"))
+          ep.count(); sp.count()
+          s.release(eRaw); s.release(spineRaw)
+          (ep, sp)
+        } else (eRaw, spineRaw)
+      val base = 1000000L - dampingPpm
+      var ranks = spine.select(col("node"), col("deg"), lit(1000000L).as("r"))
+      for (i <- 1 to iters) {
+        val contribs = ranks.filter(col("deg").isNotNull)
+          .select(col("node").as("src"), expr("r div deg").as("c"))
+        val summed =
+          (if (pin) e.hint("merge").join(contribs.hint("merge"), "src")
+           else e.join(broadcast(contribs), "src"))
+            .groupBy(col("dst").as("node"))
+            .agg(sum(col("c")).as("s"))
+        val joined = spine.join(summed, Seq("node"), "left")
+        ranks =
+          if (redistributeDangling) {
+            // the standard dangling-mass term (VERDICT r15 next-round
+            // #9): sink rank redistributes uniformly instead of
+            // leaking — ONE 1-row aggregate per iteration (a narrow
+            // filtered sum over the rank frame, broadcast as a
+            // constant), truncating `div nNodes` so the trajectory
+            // stays exact-integer and oracle-replayable
+            val dang = ranks.filter(col("deg").isNull)
+              .agg(coalesce(sum(col("r")), lit(0L)).as("dm"))
+            joined.crossJoin(broadcast(dang))
+              .select(col("node"), col("deg"),
+                (lit(base) + expr(s"($dampingPpm * (coalesce(s, cast(0 as bigint))" +
+                  s" + dm div ${nNodes}L)) div 1000000")).as("r"))
+          } else {
+            joined.select(col("node"), col("deg"),
+              (lit(base) + expr(s"($dampingPpm * coalesce(s, cast(0 as bigint))) div 1000000"))
+                .as("r"))
+          }
+        if (i % checkpointEvery == 0 && i < iters)
+          ranks = s.checkpoint(ranks, eager = false)
+      }
+      Materialize.checkpoint(ranks
+        .select(col("node"), coalesce(col("deg"), lit(0L)).as("out_degree"),
+          col("r").as("rank_ppm")))
     }
-    val result = ranks
-      .select(col("node"), coalesce(col("deg"), lit(0L)).as("out_degree"),
-        col("r").as("rank_ppm"))
-      .localCheckpoint()
-    e.unpersist()
-    spine.unpersist()
-    result
   }
 }

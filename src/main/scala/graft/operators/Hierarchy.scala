@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -25,42 +26,35 @@ object Hierarchy {
     */
   def ancestors(edges: DataFrame, childCol: String, parentCol: String,
                 maxDepth: Int = 20): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    // Edges are joined every round and frontiers are re-materialized by
-    // the emptiness check — persist both (frontier lineage would
-    // otherwise deepen each round and recompute from scratch). All
-    // intermediates are released after the result is checkpointed.
-    val e = edges.select(col(childCol).as("node"), col(parentCol).as("anc"))
-      .filter(col("anc").isNotNull)
-      .withColumn("depth", lit(1))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val cached = scala.collection.mutable.ArrayBuffer[DataFrame](e)
-    var closure = e
-    var frontier = e
-    var d = 1
-    var done = false
-    while (d < maxDepth && !done) {
-      val next = frontier.alias("f")
-        .join(e.alias("e"), col("f.anc") === col("e.node"))
-        .select(col("f.node").as("node"), col("e.anc").as("anc"),
-          (col("f.depth") + 1).as("depth"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      cached += next
-      done = next.isEmpty
-      frontier = next
-      if (!done) closure = closure.unionByName(next)
-      d += 1
+    Materialize.scoped { s =>
+      // Edges are joined every round and frontiers are re-materialized by
+      // the emptiness check — cache both (frontier lineage would
+      // otherwise deepen each round and recompute from scratch). All
+      // intermediates are released after the result is checkpointed.
+      val e = s.cache(edges.select(col(childCol).as("node"), col(parentCol).as("anc"))
+        .filter(col("anc").isNotNull)
+        .withColumn("depth", lit(1)))
+      var closure = e
+      var frontier = e
+      var d = 1
+      var done = false
+      while (d < maxDepth && !done) {
+        val next = s.cache(frontier.alias("f")
+          .join(e.alias("e"), col("f.anc") === col("e.node"))
+          .select(col("f.node").as("node"), col("e.anc").as("anc"),
+            (col("f.depth") + 1).as("depth")))
+        done = next.isEmpty
+        frontier = next
+        if (!done) closure = closure.unionByName(next)
+        d += 1
+      }
+      if (!done) System.err.println(
+        s"[graft] Hierarchy.ancestors: maxDepth=$maxDepth reached with a non-empty " +
+          "frontier — the closure may be truncated (cycle or deeper hierarchy)")
+      // Checkpoint the closure ONCE (eager, truncates lineage); the
+      // scope then drops every per-round cache
+      Materialize.checkpoint(closure.dropDuplicates("node", "anc"))
     }
-    if (!done) System.err.println(
-      s"[graft] Hierarchy.ancestors: maxDepth=$maxDepth reached with a non-empty " +
-        "frontier — the closure may be truncated (cycle or deeper hierarchy)")
-    // Checkpoint the closure ONCE (eager, truncates lineage), then drop
-    // every per-round cache — same plan-stability benefit as keeping
-    // them, without leaking maxDepth cached frontiers into a long-lived
-    // session (VERDICT r1 #3).
-    val result = closure.dropDuplicates("node", "anc").localCheckpoint()
-    cached.foreach(_.unpersist())
-    result
   }
 
   /** Ancestor closure by PATH DOUBLING: O(log depth) rounds instead of
@@ -79,36 +73,31 @@ object Hierarchy {
     */
   def ancestorsDoubling(edges: DataFrame, childCol: String, parentCol: String,
                         maxDepth: Int = 1 << 20): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val e = edges.select(col(childCol).as("node"), col(parentCol).as("anc"))
-      .filter(col("anc").isNotNull)
-      .withColumn("depth", lit(1))
-    var closure = e.persist(StorageLevel.MEMORY_AND_DISK)
-    var size = closure.count()
-    var reach = 1L
-    var done = false
-    val cached = scala.collection.mutable.ArrayBuffer[DataFrame](closure)
-    while (!done && reach < maxDepth) {
-      val doubled = closure.alias("a")
-        .join(closure.alias("b"), col("a.anc") === col("b.node"))
-        .select(col("a.node").as("node"), col("b.anc").as("anc"),
-          (col("a.depth") + col("b.depth")).as("depth"))
-      val next = closure.unionByName(doubled)
-        .groupBy("node", "anc").agg(min(col("depth")).as("depth"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      cached += next
-      val nextSize = next.count()
-      done = nextSize == size // no new reachable pairs => fixpoint
-      size = nextSize
-      closure = next
-      reach *= 2
+    Materialize.scoped { s =>
+      var closure = s.cache(edges.select(col(childCol).as("node"), col(parentCol).as("anc"))
+        .filter(col("anc").isNotNull)
+        .withColumn("depth", lit(1)))
+      var size = closure.count()
+      var reach = 1L
+      var done = false
+      while (!done && reach < maxDepth) {
+        val doubled = closure.alias("a")
+          .join(closure.alias("b"), col("a.anc") === col("b.node"))
+          .select(col("a.node").as("node"), col("b.anc").as("anc"),
+            (col("a.depth") + col("b.depth")).as("depth"))
+        val next = s.cache(closure.unionByName(doubled)
+          .groupBy("node", "anc").agg(min(col("depth")).as("depth")))
+        val nextSize = next.count()
+        done = nextSize == size // no new reachable pairs => fixpoint
+        size = nextSize
+        closure = next
+        reach *= 2
+      }
+      if (!done) System.err.println(
+        s"[graft] Hierarchy.ancestorsDoubling: maxDepth=$maxDepth reached before " +
+          "fixpoint — the closure may be truncated (cycle or deeper hierarchy)")
+      Materialize.checkpoint(closure)
     }
-    if (!done) System.err.println(
-      s"[graft] Hierarchy.ancestorsDoubling: maxDepth=$maxDepth reached before " +
-        "fixpoint — the closure may be truncated (cycle or deeper hierarchy)")
-    val result = closure.localCheckpoint()
-    cached.foreach(_.unpersist())
-    result
   }
 
   /** HYBRID closure: the linear frontier walk while the hierarchy is
@@ -126,38 +115,31 @@ object Hierarchy {
     * closure queries' oracles pin. */
   def ancestorsAdaptive(edges: DataFrame, childCol: String, parentCol: String,
                         maxDepth: Int = 1 << 20, switchDepth: Int = 4): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     require(switchDepth >= 1, s"switchDepth >= 1; got $switchDepth")
-    val e = edges.select(col(childCol).as("node"), col(parentCol).as("anc"))
-      .filter(col("anc").isNotNull)
-      .withColumn("depth", lit(1))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val cached = scala.collection.mutable.ArrayBuffer[DataFrame](e)
-    var closure = e
-    var frontier = e
-    var d = 1
-    var done = false
-    while (d < math.min(switchDepth, maxDepth) && !done) {
-      val next = frontier.alias("f")
-        .join(e.alias("e"), col("f.anc") === col("e.node"))
-        .select(col("f.node").as("node"), col("e.anc").as("anc"),
-          (col("f.depth") + 1).as("depth"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      cached += next
-      done = next.isEmpty
-      frontier = next
-      if (!done) closure = closure.unionByName(next)
-      d += 1
-    }
-    val result =
-      if (done) closure.dropDuplicates("node", "anc").localCheckpoint()
+    Materialize.scoped { s =>
+      val e = s.cache(edges.select(col(childCol).as("node"), col(parentCol).as("anc"))
+        .filter(col("anc").isNotNull)
+        .withColumn("depth", lit(1)))
+      var closure = e
+      var frontier = e
+      var d = 1
+      var done = false
+      while (d < math.min(switchDepth, maxDepth) && !done) {
+        val next = s.cache(frontier.alias("f")
+          .join(e.alias("e"), col("f.anc") === col("e.node"))
+          .select(col("f.node").as("node"), col("e.anc").as("anc"),
+            (col("f.depth") + 1).as("depth")))
+        done = next.isEmpty
+        frontier = next
+        if (!done) closure = closure.unionByName(next)
+        d += 1
+      }
+      if (done) Materialize.checkpoint(closure.dropDuplicates("node", "anc"))
       else {
         // not converged by switchDepth: double from the accumulated
         // closure (deduped to min depth first — the doubling loop's
         // invariant surface)
-        var cur = closure.groupBy("node", "anc").agg(min(col("depth")).as("depth"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        cached += cur
+        var cur = s.cache(closure.groupBy("node", "anc").agg(min(col("depth")).as("depth")))
         var size = cur.count()
         var reach = d.toLong
         var fixed = false
@@ -166,10 +148,8 @@ object Hierarchy {
             .join(cur.alias("b"), col("a.anc") === col("b.node"))
             .select(col("a.node").as("node"), col("b.anc").as("anc"),
               (col("a.depth") + col("b.depth")).as("depth"))
-          val next = cur.unionByName(doubled)
-            .groupBy("node", "anc").agg(min(col("depth")).as("depth"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          cached += next
+          val next = s.cache(cur.unionByName(doubled)
+            .groupBy("node", "anc").agg(min(col("depth")).as("depth")))
           val nextSize = next.count()
           fixed = nextSize == size
           size = nextSize
@@ -179,10 +159,9 @@ object Hierarchy {
         if (!fixed) System.err.println(
           s"[graft] Hierarchy.ancestorsAdaptive: maxDepth=$maxDepth reached before " +
             "fixpoint — the closure may be truncated (cycle or deeper hierarchy)")
-        cur.localCheckpoint()
+        Materialize.checkpoint(cur)
       }
-    cached.foreach(_.unpersist())
-    result
+    }
   }
 
   /** Strategy selector for the closure queries' scale A/B

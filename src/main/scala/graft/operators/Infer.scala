@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Materialize
 import graft.functions.TextFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -95,7 +96,7 @@ object Infer {
     *
     * Scale shape (the Lloyd-round idiom): the per-doc bucket-count
     * MAP is built once (one doc-keyed shuffle, ≤ B+1 entries per doc)
-    * and persisted; each step is then a NARROW map (z, p, e from
+    * and checkpointed; each step is then a NARROW map (z, p, e from
     * literal weights riding the plan) plus ONE map-side-combined
     * aggregate whose reduced size is B+1 cells per partition
     * REGARDLESS of corpus rows, and a (B+1)-row collect (the
@@ -114,51 +115,50 @@ object Infer {
     require(iters >= 1 && lrDiv >= 1, "iters and lrDiv must be positive")
     val bucket = (conv(substring(md5(concat(lit(salt), col("__tok"))), 1, 3), 16, 10)
       .cast("long") % buckets).cast("int")
-    // one doc-keyed shuffle builds the persisted per-doc feature map;
-    // the bias pseudo-feature (bucket -1, x 1) rides inside it so each
-    // step's gradient explode covers bias and weights in one pass
-    val docFeats = docs
-      .select(col(idCol), label.cast("boolean").as("__y"),
-        explode(featTokens(col(textCol), charNgram)).as("__tok"))
-      .filter(length(col("__tok")) > 0)
-      .withColumn("__b", bucket)
-      .groupBy(col(idCol), col("__y"), col("__b"))
-      .agg(count(lit(1)).as("__x"))
-      .groupBy(col(idCol), col("__y"))
-      .agg(map_concat(
-        map_from_entries(collect_list(struct(col("__b"), col("__x")))),
-        map(lit(-1), lit(1L))).as("__m"))
-      // localCheckpoint (not persist): same materialize-once, but the
-      // LOGICAL plan truncates to a LogicalRDD leaf — every iteration
-      // re-analyzes its step plan from docFeats, and with the full
-      // explode/groupBy build tree under it the driver re-walked that
-      // tree once per iteration (driver-bound per the r18 sampling)
-      .localCheckpoint()
-    val nDocs = docFeats.count() // sizes updates
-    require(nDocs > 0, "trainLogistic: no docs with >= 1 token")
-    var bias = 0L
-    var w = IndexedSeq.fill(buckets)(0L)
-    for (_ <- 1 to iters) {
-      // literal lookup array: index 1 = bias (key -1), 2.. = buckets
-      val wArr = (bias +: w).toArray
-      val z = aggregate(map_entries(col("__m")), lit(0L),
-        (acc, e) => acc + element_at(lit(wArr), e("key") + lit(2)) * e("value"))
-      val e = (least(lit(1000000L), greatest(lit(0L), lit(500000L) + expr("__z div 4")))
-        - when(col("__y"), lit(1000000L)).otherwise(lit(0L)))
-      val grads = docFeats
-        .withColumn("__z", z)
-        .withColumn("__e", e)
-        .select(col("__e"), explode(map_entries(col("__m"))).as("__kv"))
-        .groupBy(col("__kv.key").as("b"))
-        .agg(sum(col("__e") * col("__kv.value")).as("g"))
-        .collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
-        .withDefaultValue(0L)
-      val denom = nDocs * lrDiv
-      bias -= grads(-1) / denom
-      w = w.indices.map(b => w(b) - grads(b) / denom)
+    Materialize.scoped { s =>
+      // one doc-keyed shuffle builds the per-doc feature map; the bias
+      // pseudo-feature (bucket -1, x 1) rides inside it so each step's
+      // gradient explode covers bias and weights in one pass. It is
+      // checkpointed, not cached: every iteration re-analyzes its step
+      // plan from docFeats, and a LogicalRDD leaf spares the planner a
+      // walk of the explode/groupBy build tree per iteration
+      val docFeats = s.checkpoint(docs
+        .select(col(idCol), label.cast("boolean").as("__y"),
+          explode(featTokens(col(textCol), charNgram)).as("__tok"))
+        .filter(length(col("__tok")) > 0)
+        .withColumn("__b", bucket)
+        .groupBy(col(idCol), col("__y"), col("__b"))
+        .agg(count(lit(1)).as("__x"))
+        .groupBy(col(idCol), col("__y"))
+        .agg(map_concat(
+          map_from_entries(collect_list(struct(col("__b"), col("__x")))),
+          map(lit(-1), lit(1L))).as("__m")))
+      val nDocs = docFeats.count() // sizes updates
+      require(nDocs > 0, "trainLogistic: no docs with >= 1 token")
+      var bias = 0L
+      var w = IndexedSeq.fill(buckets)(0L)
+      for (_ <- 1 to iters) {
+        // literal lookup array: index 1 = bias (key -1), 2.. = buckets
+        val wArr = (bias +: w).toArray
+        val z = aggregate(map_entries(col("__m")), lit(0L),
+          (acc, e) => acc + element_at(lit(wArr), e("key") + lit(2)) * e("value"))
+        val e = (least(lit(1000000L), greatest(lit(0L), lit(500000L) + expr("__z div 4")))
+          - when(col("__y"), lit(1000000L)).otherwise(lit(0L)))
+        val grads = docFeats
+          .withColumn("__z", z)
+          .withColumn("__e", e)
+          .select(col("__e"), explode(map_entries(col("__m"))).as("__kv"))
+          .groupBy(col("__kv.key").as("b"))
+          .agg(sum(col("__e") * col("__kv.value")).as("g"))
+          .collect()
+          .map(r => r.getInt(0) -> r.getLong(1)).toMap
+          .withDefaultValue(0L)
+        val denom = nDocs * lrDiv
+        bias -= grads(-1) / denom
+        w = w.indices.map(b => w(b) - grads(b) / denom)
+      }
+      (w, bias)
     }
-    (w, bias)
   }
 
   /** MULTICLASS classifier training — one-vs-rest logistic regression
@@ -190,62 +190,61 @@ object Infer {
     require(iters >= 1 && lrDiv >= 1, "iters and lrDiv must be positive")
     val bucket = (conv(substring(md5(concat(lit(salt), col("__tok"))), 1, 3), 16, 10)
       .cast("long") % buckets).cast("int")
-    val docFeats = docs
-      .select(col(idCol), classCol.cast("string").as("__y"),
-        explode(featTokens(col(textCol), charNgram)).as("__tok"))
-      .filter(length(col("__tok")) > 0)
-      .withColumn("__b", bucket)
-      .groupBy(col(idCol), col("__y"), col("__b"))
-      .agg(count(lit(1)).as("__x"))
-      .groupBy(col(idCol), col("__y"))
-      .agg(map_concat(
-        map_from_entries(collect_list(struct(col("__b"), col("__x")))),
-        map(lit(-1), lit(1L))).as("__m"))
-      // localCheckpoint, not persist — see trainLogistic: iterations
-      // re-analyze their step plan per round, so the shared feature
-      // map must be a plan LEAF, not a cached explode/groupBy subtree
-      .localCheckpoint()
-    val nDocs = docFeats.count()
-    require(nDocs > 0, "trainOvr: no docs with >= 1 token")
-    val classes = docFeats.select("__y").distinct().collect()
-      .map(_.getString(0)).sorted.toSeq
-    var model: Map[String, (Long, IndexedSeq[Long])] =
-      classes.map(c => c -> (0L, IndexedSeq.fill(buckets)(0L))).toMap
-    for (_ <- 1 to iters) {
-      // all K score columns in ONE projection: the former per-class
-      // withColumn chain re-ran full plan analysis K times per
-      // iteration over a K-deep projection stack (the classic
-      // withColumn-in-a-loop driver tax)
-      val zCols = classes.zipWithIndex.map { case (c, i) =>
-        val (b0, w0) = model(c)
-        val wArr = (b0 +: w0).toArray
-        aggregate(map_entries(col("__m")), lit(0L),
-          (acc, e) => acc + element_at(lit(wArr), e("key") + lit(2)) * e("value"))
-          .as(s"__z$i")
+    Materialize.scoped { s =>
+      // checkpointed, not cached: see trainLogistic
+      val docFeats = s.checkpoint(docs
+        .select(col(idCol), classCol.cast("string").as("__y"),
+          explode(featTokens(col(textCol), charNgram)).as("__tok"))
+        .filter(length(col("__tok")) > 0)
+        .withColumn("__b", bucket)
+        .groupBy(col(idCol), col("__y"), col("__b"))
+        .agg(count(lit(1)).as("__x"))
+        .groupBy(col(idCol), col("__y"))
+        .agg(map_concat(
+          map_from_entries(collect_list(struct(col("__b"), col("__x")))),
+          map(lit(-1), lit(1L))).as("__m")))
+      val nDocs = docFeats.count()
+      require(nDocs > 0, "trainOvr: no docs with >= 1 token")
+      val classes = docFeats.select("__y").distinct().collect()
+        .map(_.getString(0)).sorted.toSeq
+      var model: Map[String, (Long, IndexedSeq[Long])] =
+        classes.map(c => c -> (0L, IndexedSeq.fill(buckets)(0L))).toMap
+      for (_ <- 1 to iters) {
+        // all K score columns in ONE projection: the former per-class
+        // withColumn chain re-ran full plan analysis K times per
+        // iteration over a K-deep projection stack (the classic
+        // withColumn-in-a-loop driver tax)
+        val zCols = classes.zipWithIndex.map { case (c, i) =>
+          val (b0, w0) = model(c)
+          val wArr = (b0 +: w0).toArray
+          aggregate(map_entries(col("__m")), lit(0L),
+            (acc, e) => acc + element_at(lit(wArr), e("key") + lit(2)) * e("value"))
+            .as(s"__z$i")
+        }
+        val frame = docFeats.select(col("*") +: zCols: _*)
+        val eArr = array(classes.zipWithIndex.map { case (c, i) =>
+          struct(lit(i).as("ci"),
+            (least(lit(1000000L), greatest(lit(0L), lit(500000L) + expr(s"__z$i div 4")))
+              - when(col("__y") === c, lit(1000000L)).otherwise(lit(0L))).as("e"))
+        }: _*)
+        val grads = frame
+          .select(explode(eArr).as("__ce"), col("__m"))
+          .select(col("__ce.ci").as("ci"), col("__ce.e").as("e"),
+            explode(map_entries(col("__m"))).as("__kv"))
+          .groupBy(col("ci"), col("__kv.key").as("b"))
+          .agg(sum(col("e") * col("__kv.value")).as("g"))
+          .collect()
+          .map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
+          .withDefaultValue(0L)
+        val denom = nDocs * lrDiv
+        model = classes.zipWithIndex.map { case (c, i) =>
+          val (b0, w0) = model(c)
+          c -> (b0 - grads((i, -1)) / denom,
+            w0.indices.map(b => w0(b) - grads((i, b)) / denom))
+        }.toMap
       }
-      val frame = docFeats.select(col("*") +: zCols: _*)
-      val eArr = array(classes.zipWithIndex.map { case (c, i) =>
-        struct(lit(i).as("ci"),
-          (least(lit(1000000L), greatest(lit(0L), lit(500000L) + expr(s"__z$i div 4")))
-            - when(col("__y") === c, lit(1000000L)).otherwise(lit(0L))).as("e"))
-      }: _*)
-      val grads = frame
-        .select(explode(eArr).as("__ce"), col("__m"))
-        .select(col("__ce.ci").as("ci"), col("__ce.e").as("e"),
-          explode(map_entries(col("__m"))).as("__kv"))
-        .groupBy(col("ci"), col("__kv.key").as("b"))
-        .agg(sum(col("e") * col("__kv.value")).as("g"))
-        .collect()
-        .map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
-        .withDefaultValue(0L)
-      val denom = nDocs * lrDiv
-      model = classes.zipWithIndex.map { case (c, i) =>
-        val (b0, w0) = model(c)
-        c -> (b0 - grads((i, -1)) / denom,
-          w0.indices.map(b => w0(b) - grads((i, b)) / denom))
-      }.toMap
+      classes.map(c => (c, model(c)._2, model(c)._1))
     }
-    classes.map(c => (c, model(c)._2, model(c)._1))
   }
 
   /** Argmax PREDICTION over [[trainOvr]]'s K heads in ONE pass — the

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Materialize
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -33,58 +34,54 @@ object LangModel {
     *    frames; the corpus-scaling cost table joins back by shuffle
     *    (merge pin — a broadcast build here would grow with the
     *    corpus), the 1-row V broadcasts;
-    *  - the result is localCheckpoint-ed before the caches drop.
+    *  - the result is checkpointed; the caches are released on return.
     * Nothing all-pairs, nothing driver-side beyond the 1-row V. */
   def bigramSurprisal(df: DataFrame, idCol: String, textCol: String,
                       keepPpm: Long): DataFrame = {
     val toks = df.select(col(idCol), tokens(col(textCol)).as("__toks"))
       .filter(size(col("__toks")) >= 2)
-    // NARROW persist: the raw (doc, w1, w2) stream caches without a
-    // shuffle — the per-doc multiplicity fold isn't worth its own
-    // corpus-wide shuffle (real text rarely repeats a bigram within a
-    // doc; the count/sum in the final fold handles it either way)
-    val bi = toks.select(col(idCol),
-        explode(zip_with(
-          slice(col("__toks"), lit(1), size(col("__toks")) - 1),
-          slice(col("__toks"), lit(2), size(col("__toks")) - 1),
-          (a, b) => struct(a.as("w1"), b.as("w2")))).as("__bg"))
-      .select(col(idCol), col("__bg.w1").as("__w1"), col("__bg.w2").as("__w2"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val c12 = bi.groupBy("__w1", "__w2").agg(count(lit(1)).as("__c12"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materializes both caches and measures the bigram vocabulary in
-    // one pass — the cost-join strategy pin below is sized by MEASURED
-    // vocab rows, not a planner estimate (the Dedup
-    // BroadcastSafeCorpusRows rule: below it a broadcast hash join
-    // keeps the corpus-sized probe side narrow and sort-free; past it
-    // the build would scale with the corpus → merge)
-    val nVocab = c12.count()
-    val pinMerge = nVocab > Dedup.BroadcastSafeCorpusRows
-    val c1 = c12.groupBy("__w1").agg(sum(col("__c12")).as("__c1"))
-    val vocab = c12.agg(countDistinct(col("__w2")).as("__v"))
-    val costs0 = c12.join(if (pinMerge) c1.hint("merge") else broadcast(c1), "__w1")
-      .crossJoin(broadcast(vocab))
-      .select(col("__w1"), col("__w2"),
-        expr("(__c1 + __v) div (__c12 + 1)").as("__cost"))
-    val costs = if (pinMerge) costs0.hint("merge") else broadcast(costs0)
-    val result = bi.join(costs, Seq("__w1", "__w2"))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_bigrams"), sum(col("__cost")).as("total_cost"))
-      // the ppm lift runs in DECIMAL: total_cost is a per-doc sum of
-      // costs each bounded by (c1 + V), which scales with corpus token
-      // count — on a multi-billion-token corpus a long doc's
-      // total_cost·1e6 would exceed 2^63 in int64. DECIMAL(30,0)·1e6
-      // needs precision 38, exact; the integral divide lands back in a
-      // long. The RESULT stays int64-exact while the per-doc MEAN cost
-      // < 2^63/1e6 ≈ 9.2e12 — i.e. while prefix counts stay below ~9e12
-      // tokens, the same tens-of-TB bound [[dsirWeight]] documents.
-      .withColumn("mean_cost_ppm",
-        expr("cast(total_cost as decimal(30,0)) * 1000000 div n_bigrams"))
-      .withColumn("keep", col("mean_cost_ppm") <= keepPpm)
-      .localCheckpoint()
-    bi.unpersist()
-    c12.unpersist()
-    result
+    Materialize.scoped { s =>
+      // NARROW cache: the raw (doc, w1, w2) stream caches without a
+      // shuffle — the per-doc multiplicity fold isn't worth its own
+      // corpus-wide shuffle (real text rarely repeats a bigram within a
+      // doc; the count/sum in the final fold handles it either way)
+      val bi = s.cache(toks.select(col(idCol),
+          explode(zip_with(
+            slice(col("__toks"), lit(1), size(col("__toks")) - 1),
+            slice(col("__toks"), lit(2), size(col("__toks")) - 1),
+            (a, b) => struct(a.as("w1"), b.as("w2")))).as("__bg"))
+        .select(col(idCol), col("__bg.w1").as("__w1"), col("__bg.w2").as("__w2")))
+      val c12 = s.cache(bi.groupBy("__w1", "__w2").agg(count(lit(1)).as("__c12")))
+      // materializes both caches and measures the bigram vocabulary in
+      // one pass — the cost-join strategy pin below is sized by MEASURED
+      // vocab rows, not a planner estimate (the Dedup
+      // BroadcastSafeCorpusRows rule: below it a broadcast hash join
+      // keeps the corpus-sized probe side narrow and sort-free; past it
+      // the build would scale with the corpus → merge)
+      val nVocab = c12.count()
+      val pinMerge = nVocab > Dedup.BroadcastSafeCorpusRows
+      val c1 = c12.groupBy("__w1").agg(sum(col("__c12")).as("__c1"))
+      val vocab = c12.agg(countDistinct(col("__w2")).as("__v"))
+      val costs0 = c12.join(if (pinMerge) c1.hint("merge") else broadcast(c1), "__w1")
+        .crossJoin(broadcast(vocab))
+        .select(col("__w1"), col("__w2"),
+          expr("(__c1 + __v) div (__c12 + 1)").as("__cost"))
+      val costs = if (pinMerge) costs0.hint("merge") else broadcast(costs0)
+      Materialize.checkpoint(bi.join(costs, Seq("__w1", "__w2"))
+        .groupBy(col(idCol))
+        .agg(count(lit(1)).as("n_bigrams"), sum(col("__cost")).as("total_cost"))
+        // the ppm lift runs in DECIMAL: total_cost is a per-doc sum of
+        // costs each bounded by (c1 + V), which scales with corpus token
+        // count — on a multi-billion-token corpus a long doc's
+        // total_cost·1e6 would exceed 2^63 in int64. DECIMAL(30,0)·1e6
+        // needs precision 38, exact; the integral divide lands back in a
+        // long. The RESULT stays int64-exact while the per-doc MEAN cost
+        // < 2^63/1e6 ≈ 9.2e12 — i.e. while prefix counts stay below ~9e12
+        // tokens, the same tens-of-TB bound [[dsirWeight]] documents.
+        .withColumn("mean_cost_ppm",
+          expr("cast(total_cost as decimal(30,0)) * 1000000 div n_bigrams"))
+        .withColumn("keep", col("mean_cost_ppm") <= keepPpm))
+    }
   }
 
   // ──────────── frozen-model train/apply split (r15) ────────────
@@ -125,35 +122,33 @@ object LangModel {
                            textCol: String, keepPpm: Long): DataFrame = {
     val toks = df.select(col(idCol), tokens(col(textCol)).as("__toks"))
       .filter(size(col("__toks")) >= 2)
-    val bi = toks.select(col(idCol),
-        explode(zip_with(
-          slice(col("__toks"), lit(1), size(col("__toks")) - 1),
-          slice(col("__toks"), lit(2), size(col("__toks")) - 1),
-          (a, b) => struct(a.as("w1"), b.as("w2")))).as("__bg"))
-      .select(col(idCol), col("__bg.w1").as("__w1"), col("__bg.w2").as("__w2"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val c12 = model.select(col("w1").as("__w1"), col("w2").as("__w2"),
-      col("c12").as("__c12"))
-    val nVocab = c12.count()
-    val pinMerge = nVocab > Dedup.BroadcastSafeCorpusRows
-    def pinModel(d: DataFrame) = if (pinMerge) d.hint("merge") else broadcast(d)
-    val c1 = c12.groupBy("__w1").agg(sum(col("__c12")).as("__c1"))
-    val vocab = c12.agg(countDistinct(col("__w2")).as("__v"))
-    val result = bi
-      .join(pinModel(c12), Seq("__w1", "__w2"), "left")
-      .join(pinModel(c1), Seq("__w1"), "left")
-      .crossJoin(broadcast(vocab))
-      .select(col(idCol),
-        expr("(coalesce(__c1, cast(0 as bigint)) + __v) div (coalesce(__c12, cast(0 as bigint)) + 1)")
-          .as("__cost"))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_bigrams"), sum(col("__cost")).as("total_cost"))
-      .withColumn("mean_cost_ppm",
-        expr("cast(total_cost as decimal(30,0)) * 1000000 div n_bigrams"))
-      .withColumn("keep", col("mean_cost_ppm") <= keepPpm)
-      .localCheckpoint()
-    bi.unpersist()
-    result
+    Materialize.scoped { s =>
+      val bi = s.cache(toks.select(col(idCol),
+          explode(zip_with(
+            slice(col("__toks"), lit(1), size(col("__toks")) - 1),
+            slice(col("__toks"), lit(2), size(col("__toks")) - 1),
+            (a, b) => struct(a.as("w1"), b.as("w2")))).as("__bg"))
+        .select(col(idCol), col("__bg.w1").as("__w1"), col("__bg.w2").as("__w2")))
+      val c12 = model.select(col("w1").as("__w1"), col("w2").as("__w2"),
+        col("c12").as("__c12"))
+      val nVocab = c12.count()
+      val pinMerge = nVocab > Dedup.BroadcastSafeCorpusRows
+      def pinModel(d: DataFrame) = if (pinMerge) d.hint("merge") else broadcast(d)
+      val c1 = c12.groupBy("__w1").agg(sum(col("__c12")).as("__c1"))
+      val vocab = c12.agg(countDistinct(col("__w2")).as("__v"))
+      Materialize.checkpoint(bi
+        .join(pinModel(c12), Seq("__w1", "__w2"), "left")
+        .join(pinModel(c1), Seq("__w1"), "left")
+        .crossJoin(broadcast(vocab))
+        .select(col(idCol),
+          expr("(coalesce(__c1, cast(0 as bigint)) + __v) div (coalesce(__c12, cast(0 as bigint)) + 1)")
+            .as("__cost"))
+        .groupBy(col(idCol))
+        .agg(count(lit(1)).as("n_bigrams"), sum(col("__cost")).as("total_cost"))
+        .withColumn("mean_cost_ppm",
+          expr("cast(total_cost as decimal(30,0)) * 1000000 div n_bigrams"))
+        .withColumn("keep", col("mean_cost_ppm") <= keepPpm))
+    }
   }
 
   /** The TRAIN half of [[dsirWeight]] as a persistable model: per-token
@@ -179,7 +174,7 @@ object LangModel {
     val totals = counts.agg(sum(col("__cr")).as("__nr"), sum(col("__ct")).as("__nt"))
     val countSide = if (nVocab > Dedup.BroadcastSafeCorpusRows)
       counts.hint("merge") else broadcast(counts)
-    val result = df
+    Materialize.checkpoint(df
       .select(col(idCol), explode(tokens(col(textCol))).as("tok"))
       .filter(length(col("tok")) > 0)
       .join(countSide, Seq("tok"), "left")
@@ -192,9 +187,7 @@ object LangModel {
       .agg(count(lit(1)).as("n_tokens"), sum(col("__lift")).as("__total"))
       .withColumn("mean_lift_ppm", expr("__total div n_tokens"))
       .withColumn("keep", col("mean_lift_ppm") >= keepPpm)
-      .select(col(idCol), col("n_tokens"), col("mean_lift_ppm"), col("keep"))
-      .localCheckpoint()
-    result
+      .select(col(idCol), col("n_tokens"), col("mean_lift_ppm"), col("keep")))
   }
 
   /** DSIR-style importance weighting (Xie et al.'s data selection via
@@ -225,32 +218,28 @@ object LangModel {
   def dsirWeight(df: DataFrame, idCol: String, textCol: String,
                  targetFilter: org.apache.spark.sql.Column,
                  keepPpm: Long, scale: Long = 1000000L): DataFrame = {
-    val toks = df.select(col(idCol), targetFilter.as("__tgt"),
-        explode(tokens(col(textCol))).as("tok"))
-      .filter(length(col("tok")) > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val counts = toks.groupBy("tok")
-      .agg(count(lit(1)).as("__cr"),
-        sum(when(col("__tgt"), 1L).otherwise(0L)).as("__ct"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nVocab = counts.count() // materializes both caches, sizes the pin
-    val totals = counts.agg(sum(col("__cr")).as("__nr"), sum(col("__ct")).as("__nt"))
-    val gains = counts.crossJoin(broadcast(totals))
-      .select(col("tok"),
-        expr(s"((__ct + 1) * $scale div (__cr + 1)) * __nr div (__nt + 1)")
-          .as("__lift"))
-    val gainSide = if (nVocab > Dedup.BroadcastSafeCorpusRows)
-      gains.hint("merge") else broadcast(gains)
-    val result = toks.join(gainSide, "tok")
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_tokens"),
-        sum(col("__lift")).as("__total"))
-      .withColumn("mean_lift_ppm", expr("__total div n_tokens"))
-      .withColumn("keep", col("mean_lift_ppm") >= keepPpm)
-      .select(col(idCol), col("n_tokens"), col("mean_lift_ppm"), col("keep"))
-      .localCheckpoint()
-    toks.unpersist()
-    counts.unpersist()
-    result
+    Materialize.scoped { s =>
+      val toks = s.cache(df.select(col(idCol), targetFilter.as("__tgt"),
+          explode(tokens(col(textCol))).as("tok"))
+        .filter(length(col("tok")) > 0))
+      val counts = s.cache(toks.groupBy("tok")
+        .agg(count(lit(1)).as("__cr"),
+          sum(when(col("__tgt"), 1L).otherwise(0L)).as("__ct")))
+      val nVocab = counts.count() // materializes both caches, sizes the pin
+      val totals = counts.agg(sum(col("__cr")).as("__nr"), sum(col("__ct")).as("__nt"))
+      val gains = counts.crossJoin(broadcast(totals))
+        .select(col("tok"),
+          expr(s"((__ct + 1) * $scale div (__cr + 1)) * __nr div (__nt + 1)")
+            .as("__lift"))
+      val gainSide = if (nVocab > Dedup.BroadcastSafeCorpusRows)
+        gains.hint("merge") else broadcast(gains)
+      Materialize.checkpoint(toks.join(gainSide, "tok")
+        .groupBy(col(idCol))
+        .agg(count(lit(1)).as("n_tokens"),
+          sum(col("__lift")).as("__total"))
+        .withColumn("mean_lift_ppm", expr("__total div n_tokens"))
+        .withColumn("keep", col("mean_lift_ppm") >= keepPpm)
+        .select(col(idCol), col("n_tokens"), col("mean_lift_ppm"), col("keep")))
+    }
   }
 }

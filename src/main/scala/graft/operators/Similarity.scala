@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Materialize
 import graft.functions.VectorFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -365,45 +366,43 @@ object Similarity {
         val p = math.max(1, corpus.sparkSession.sparkContext.defaultParallelism)
         xs.repartition(p, col("x_id")).join(broadcast(ys), "cid")
       } else xs.join(ys, "cid")
-    val pairs = joined
-      .withColumn("cos_ppb",
-        floor(when(col("__xn") === 0 || col("__yn") === 0, lit(0.0))
-          .otherwise(VectorFunctions.vecDot(col("__xv"), col("__yv")) /
-            (col("__xn") * col("__yn"))) * 1e9).cast("long"))
-      // negative-cosine candidates are never translations; dropping
-      // them here also keeps EVERY div operand nonnegative, where
-      // Spark's truncating `div` and DuckDB's flooring `//` agree
-      .filter(col("cos_ppb") >= 0)
-      .select(col("x_id"), col("y_id"), col("cos_ppb"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // per-side kNN means over the candidate set, kept as exact longs:
-    // sum of the top-k ppb cosines (order-independent), truncated avg
-    def kAvg(side: String, other: String, out: String) = {
-      val w = Window.partitionBy(col(side))
-        .orderBy(col("cos_ppb").desc, col(other).asc)
-      pairs.withColumn("__rk", row_number().over(w))
-        .filter(col("__rk") <= k)
-        .groupBy(col(side))
-        .agg(expr(s"sum(cos_ppb) div count(*)").as(out))
+    Materialize.scoped { s =>
+      val pairs = s.cache(joined
+        .withColumn("cos_ppb",
+          floor(when(col("__xn") === 0 || col("__yn") === 0, lit(0.0))
+            .otherwise(VectorFunctions.vecDot(col("__xv"), col("__yv")) /
+              (col("__xn") * col("__yn"))) * 1e9).cast("long"))
+        // negative-cosine candidates are never translations; dropping
+        // them here also keeps EVERY div operand nonnegative, where
+        // Spark's truncating `div` and DuckDB's flooring `//` agree
+        .filter(col("cos_ppb") >= 0)
+        .select(col("x_id"), col("y_id"), col("cos_ppb")))
+      // per-side kNN means over the candidate set, kept as exact longs:
+      // sum of the top-k ppb cosines (order-independent), truncated avg
+      def kAvg(side: String, other: String, out: String) = {
+        val w = Window.partitionBy(col(side))
+          .orderBy(col("cos_ppb").desc, col(other).asc)
+        pairs.withColumn("__rk", row_number().over(w))
+          .filter(col("__rk") <= k)
+          .groupBy(col(side))
+          .agg(expr(s"sum(cos_ppb) div count(*)").as(out))
+      }
+      val ax = kAvg("x_id", "y_id", "__ax")
+      val ay = kAvg("y_id", "x_id", "__ay")
+      val margined = pairs.join(ax, "x_id").join(ay, "y_id")
+        .filter(col("__ax") + col("__ay") > 0)
+        .withColumn("margin_ppm",
+          expr("(cos_ppb * 2000000) div (__ax + __ay)"))
+      val bx = Window.partitionBy(col("x_id"))
+        .orderBy(col("margin_ppm").desc, col("y_id").asc)
+      val by = Window.partitionBy(col("y_id"))
+        .orderBy(col("margin_ppm").desc, col("x_id").asc)
+      Materialize.checkpoint(margined
+        .withColumn("__bx", row_number().over(bx))
+        .withColumn("__by", row_number().over(by))
+        .filter(col("__bx") === 1 && col("__by") === 1 &&
+          col("margin_ppm") >= minMarginPpm)
+        .select(col("x_id"), col("y_id"), col("cos_ppb"), col("margin_ppm")))
     }
-    val ax = kAvg("x_id", "y_id", "__ax")
-    val ay = kAvg("y_id", "x_id", "__ay")
-    val margined = pairs.join(ax, "x_id").join(ay, "y_id")
-      .filter(col("__ax") + col("__ay") > 0)
-      .withColumn("margin_ppm",
-        expr("(cos_ppb * 2000000) div (__ax + __ay)"))
-    val bx = Window.partitionBy(col("x_id"))
-      .orderBy(col("margin_ppm").desc, col("y_id").asc)
-    val by = Window.partitionBy(col("y_id"))
-      .orderBy(col("margin_ppm").desc, col("x_id").asc)
-    val result = margined
-      .withColumn("__bx", row_number().over(bx))
-      .withColumn("__by", row_number().over(by))
-      .filter(col("__bx") === 1 && col("__by") === 1 &&
-        col("margin_ppm") >= minMarginPpm)
-      .select(col("x_id"), col("y_id"), col("cos_ppb"), col("margin_ppm"))
-      .localCheckpoint()
-    pairs.unpersist()
-    result
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Materialize
 import graft.functions.TextFunctions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -241,9 +242,10 @@ object Tokenize {
     * never equal l (r is non-empty), so the fold's look-behind never
     * re-merges a token the scan would have skipped.
     *
-    * Per-round lineage is localCheckpoint-truncated (the Components
+    * Per-round lineage is truncated by a checkpoint (the Components
     * lesson: 100 rounds of HOF transforms would otherwise stack into
-    * one giant plan). */
+    * one giant plan); each round's checkpoint is released once the
+    * next one is made. */
   def trainBpeDistributed(df: DataFrame, textCol: String,
                           numMerges: Int = 100): Seq[(String, String)] = {
     val spark = df.sparkSession
@@ -253,39 +255,40 @@ object Tokenize {
     val adjPairs = expr(
       "transform(sequence(0, size(syms) - 2), " +
         "i -> struct(element_at(syms, i + 1) as l, element_at(syms, i + 2) as r))")
-    var words = df.select(explode(TextFunctions.bpeTokens(col(textCol))).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("n"))
-      .select(charSplit.as("syms"), col("n"))
-      .filter(size(col("syms")) >= 2)
-      .localCheckpoint()
-    val merges = mutable.ArrayBuffer[(String, String)]()
-    var continue = true
-    while (merges.size < numMerges && continue) {
-      val top = words.select(explode(adjPairs).as("p"), col("n"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("n")).as("cnt"))
-        .orderBy(col("cnt").desc, col("l"), col("r"))
-        .limit(1)
-        .as[(String, String, Long)].collect()
-      if (top.isEmpty || top.head._3 < 2) continue = false // same stop rule as trainBpe
-      else {
-        val (l, r, _) = top.head
-        merges += ((l, r))
-        val mergedTok = lit(l + r)
-        val applied = words.select(
-          aggregate(col("syms"), array().cast("array<string>"), (acc, s) =>
-            when(size(acc) > 0 && element_at(acc, -1) === lit(l) && s === lit(r),
-              concat(slice(acc, lit(1), size(acc) - 1), array(mergedTok)))
-              .otherwise(concat(acc, array(s)))).as("syms"),
-          col("n"))
-          .filter(size(col("syms")) >= 2) // fully-merged words can't pair again
-        val next = applied.localCheckpoint()
-        words.unpersist()
-        words = next
+    Materialize.scoped { s =>
+      var words = s.checkpoint(df
+        .select(explode(TextFunctions.bpeTokens(col(textCol))).as("w"))
+        .groupBy("w").agg(count(lit(1)).as("n"))
+        .select(charSplit.as("syms"), col("n"))
+        .filter(size(col("syms")) >= 2))
+      val merges = mutable.ArrayBuffer[(String, String)]()
+      var continue = true
+      while (merges.size < numMerges && continue) {
+        val top = words.select(explode(adjPairs).as("p"), col("n"))
+          .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+          .agg(sum(col("n")).as("cnt"))
+          .orderBy(col("cnt").desc, col("l"), col("r"))
+          .limit(1)
+          .as[(String, String, Long)].collect()
+        if (top.isEmpty || top.head._3 < 2) continue = false // same stop rule as trainBpe
+        else {
+          val (l, r, _) = top.head
+          merges += ((l, r))
+          val mergedTok = lit(l + r)
+          val applied = words.select(
+            aggregate(col("syms"), array().cast("array<string>"), (acc, s) =>
+              when(size(acc) > 0 && element_at(acc, -1) === lit(l) && s === lit(r),
+                concat(slice(acc, lit(1), size(acc) - 1), array(mergedTok)))
+                .otherwise(concat(acc, array(s)))).as("syms"),
+            col("n"))
+            .filter(size(col("syms")) >= 2) // fully-merged words can't pair again
+          val next = s.checkpoint(applied)
+          s.release(words)
+          words = next
+        }
       }
+      merges.toSeq
     }
-    words.unpersist()
-    merges.toSeq
   }
 
   /** Merge table as a DataFrame — spec-table symmetry with

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Materialize
 import graft.operators.{Cleaning, Components, Dedup, Derive, Ids, Joins, LangModel, Mix, Pack, Reshape, Select, Split, Tokenize}
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -248,9 +249,9 @@ object QueriesPipeline {
       .filter(col("keep")).select("doc_id")
     val kept = docs.join(lmKeep, "doc_id")
     // 2. exact dedup (min-id survivor per fingerprint)
-    val canon = docs
-      .join(Dedup.exact(kept, "doc_id", "text").select("doc_id"), "doc_id")
-      .localCheckpoint(eager = false) // feeds pair-gen AND the reps filter
+    // canon feeds pair-gen AND the reps filter
+    val canon = Materialize.checkpoint(docs
+      .join(Dedup.exact(kept, "doc_id", "text").select("doc_id"), "doc_id"), eager = false)
     // 3. near-dup components over the J>=0.5 pair set — strategy
     // selects the pair GENERATOR only; both emit the same schema and
     // bit-exact jaccard, so everything downstream is shared. "auto"
@@ -302,9 +303,9 @@ object QueriesPipeline {
                                   through: String, budget: Long): DataFrame = {
     import graft.functions.TextFunctions.{shinglesOfTokens, tokens}
     // 5. global token budget; output is CONFIG-BOUNDED from here on
-    val sel = Select.tokenBudget(scored, "doc_id", "n_tokens",
-        "mean_lift_ppm", budget = budget)
-      .localCheckpoint(eager = false) // consumed by split, pack, manifest
+    // consumed by split, pack, manifest
+    val sel = Materialize.checkpoint(Select.tokenBudget(scored, "doc_id", "n_tokens",
+      "mean_lift_ppm", budget = budget), eager = false)
     if (through == "sel") return sel
     // 6. leak-free split on residual 5-shingle overlap of the selection
     val sh5 = docs.join(sel.select("doc_id"), "doc_id")
@@ -312,8 +313,9 @@ object QueriesPipeline {
         explode(shinglesOfTokens(tokens(col("text")), 5)).as("sh"))
       .distinct()
     val edges = Dedup.pairsFromBuckets(sh5, Seq("sh"), "doc_id", maxBucket = 20)
-    val spl = Split.leakFree(sel.select("doc_id"), "doc_id", edges)
-      .localCheckpoint(eager = false) // consumed by pack and manifest
+    // consumed by pack and manifest
+    val spl = Materialize.checkpoint(Split.leakFree(sel.select("doc_id"), "doc_id", edges),
+      eager = false)
     if (through == "spl") return spl
     // 7. pack the train split into 512-token context windows
     val trainCounts = sel
@@ -361,9 +363,8 @@ object QueriesPipeline {
     * [[curateThrough]] stage-3 shape over the epoch corpus. */
   private[graft] def epochReps(exactIndex: DataFrame, hist: DataFrame,
                                strategy: String = "auto"): DataFrame = {
-    val canon = hist.join(
-        exactIndex.select(col("hist_id").as("doc_id")).distinct(), "doc_id")
-      .localCheckpoint(eager = false)
+    val canon = Materialize.checkpoint(hist.join(
+      exactIndex.select(col("hist_id").as("doc_id")).distinct(), "doc_id"), eager = false)
     val pairs = nearDupPairs(canon, strategy)
     val comp = Components.connectedComponents(pairs)
       .withColumnRenamed("node", "doc_id")
@@ -431,16 +432,14 @@ object QueriesPipeline {
     val kept = docsAll.join(
       LangModel.surprisalApplyCounts(lm, docsAll, "doc_id", "text", keepPpm)
         .filter(col("keep")).select("doc_id"), "doc_id")
-    val canon = docsAll
-      .join(Dedup.exact(kept, "doc_id", "text").select("doc_id"), "doc_id")
-      .localCheckpoint(eager = false)
+    val canon = Materialize.checkpoint(docsAll
+      .join(Dedup.exact(kept, "doc_id", "text").select("doc_id"), "doc_id"), eager = false)
     val pairs = nearDupPairs(canon, "auto")
     val comp = Components.connectedComponents(pairs)
       .withColumnRenamed("node", "doc_id")
-    val reps = canon.join(comp, Seq("doc_id"), "left")
+    val reps = Materialize.checkpoint(canon.join(comp, Seq("doc_id"), "left")
       .filter(coalesce(col("component"), col("doc_id")) === col("doc_id"))
-      .drop("component")
-      .localCheckpoint(eager = false)
+      .drop("component"), eager = false)
     val dsir = LangModel.tokenCounts(reps.filter(histPred), "text",
       col("lang") === "en")
     val scored = LangModel.dsirApplyCounts(dsir, reps, "doc_id", "text")
@@ -817,10 +816,10 @@ object QueriesPipeline {
       val cleaned = Dedup.dedupSpans(deduped, "doc_id", "text",
           spanTokens = 8, maxOccur = 1)
         .select(col("doc_id"), col("n_removed"), col("clean_text"))
-      val scored = cleaned.join(docs.select("doc_id", "lang"), "doc_id")
+      val scored = Materialize.checkpoint(cleaned.join(docs.select("doc_id", "lang"), "doc_id")
         .select(col("doc_id"), col("lang"), col("n_removed"),
           tokenCountOfTokens(tokens(col("clean_text"))).as("n_tokens"))
-        .filter(col("n_tokens") >= 20)
+        .filter(col("n_tokens") >= 20),
         // stage boundary: Mix consumes its input twice (lang counts +
         // the replication join), and everything upstream of here is
         // the full dedup chain — materialize the per-doc METADATA
@@ -830,7 +829,7 @@ object QueriesPipeline {
         // at PLAN-BUILD time (PlanAuditSpec instantiates every query);
         // the first real action materializes the checkpoint and the
         // second consumer reuses it — same runtime shape as eager
-        .localCheckpoint(eager = false)
+        eager = false)
       Mix.temperature(scored, "doc_id", "lang", alpha = 0.5)
         .select("doc_id", "lang", "copy_idx", "weight_ppm",
           "n_tokens", "n_removed")

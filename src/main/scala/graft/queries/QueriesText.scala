@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Materialize
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions
 import graft.multimodal.Media
@@ -1357,37 +1358,33 @@ object QueriesText {
       // argument: a faked decode cannot produce formula-matching
       // hashes from compressed containers), brute-forces the full
       // hash graph, and walks the same closure via recursive CTE.
-      val sig = Media.aHash(s, Media.asMediaTable(Tables(s, d).documents))
-        .toDF().persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nodes = sig.groupBy("ahash").agg(min(col("media_id")).as("node"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val banded = nodes.select(col("node"),
-        posexplode(array((0 until 4).map(b =>
-          expr(s"shiftright(ahash, ${16 * b}) & 65535")): _*)).as(Seq("band", "bv")))
-      val sizes = banded.groupBy("band", "bv").agg(count(lit(1)).as("__n"))
-      val maxBucket = sizes.agg(coalesce(max(col("__n")), lit(0L))).head().getLong(0)
-      require(maxBucket <= 4096,
-        s"aHash band bucket of $maxBucket DISTINCT hashes exceeds the 4096 " +
-        "completeness cap: near-dup edges would be silently dropped")
-      val cand = Dedup.pairsFromBuckets(banded, Seq("band", "bv"), "node",
-        maxBucket = 4096)
-      val edges = cand
-        .join(nodes.select(col("node").as("id_a"), col("ahash").as("__ha")), "id_a")
-        .join(nodes.select(col("node").as("id_b"), col("ahash").as("__hb")), "id_b")
-        .filter(expr("bit_count(__ha ^ __hb) <= 3"))
-        .select(col("id_a"), col("id_b"))
-      val comp = graft.operators.Components.connectedComponents(edges)
-        .withColumnRenamed("node", "__cn")
-      val out = sig.join(nodes, "ahash")
-        .join(comp, col("node") === col("__cn"), "left")
-        .withColumn("canonical_id", coalesce(col("component"), col("node")))
-        .select(col("media_id"), col("canonical_id"),
-          (col("media_id") === col("canonical_id")).as("is_canonical"))
-        .orderBy("media_id")
-        .localCheckpoint()
-      sig.unpersist()
-      nodes.unpersist()
-      out
+      Materialize.scoped { m =>
+        val sig = m.cache(Media.aHash(s, Media.asMediaTable(Tables(s, d).documents)).toDF())
+        val nodes = m.cache(sig.groupBy("ahash").agg(min(col("media_id")).as("node")))
+        val banded = nodes.select(col("node"),
+          posexplode(array((0 until 4).map(b =>
+            expr(s"shiftright(ahash, ${16 * b}) & 65535")): _*)).as(Seq("band", "bv")))
+        val sizes = banded.groupBy("band", "bv").agg(count(lit(1)).as("__n"))
+        val maxBucket = sizes.agg(coalesce(max(col("__n")), lit(0L))).head().getLong(0)
+        require(maxBucket <= 4096,
+          s"aHash band bucket of $maxBucket DISTINCT hashes exceeds the 4096 " +
+          "completeness cap: near-dup edges would be silently dropped")
+        val cand = Dedup.pairsFromBuckets(banded, Seq("band", "bv"), "node",
+          maxBucket = 4096)
+        val edges = cand
+          .join(nodes.select(col("node").as("id_a"), col("ahash").as("__ha")), "id_a")
+          .join(nodes.select(col("node").as("id_b"), col("ahash").as("__hb")), "id_b")
+          .filter(expr("bit_count(__ha ^ __hb) <= 3"))
+          .select(col("id_a"), col("id_b"))
+        val comp = graft.operators.Components.connectedComponents(edges)
+          .withColumnRenamed("node", "__cn")
+        Materialize.checkpoint(sig.join(nodes, "ahash")
+          .join(comp, col("node") === col("__cn"), "left")
+          .withColumn("canonical_id", coalesce(col("component"), col("node")))
+          .select(col("media_id"), col("canonical_id"),
+            (col("media_id") === col("canonical_id")).as("is_canonical"))
+          .orderBy("media_id"))
+      }
     }),
 
     "q_media_thumbs" -> ((s, d) => {

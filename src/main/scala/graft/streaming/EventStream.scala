@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Materialize
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -349,7 +350,7 @@ object EventStream {
     * snapshot, which the batch oracle — global last-writer-wins, the
     * exact q_cdc_apply SQL — hash-checks. The snapshot seeds state at
     * version (epoch, -1), strictly below every real event. State is
-    * localCheckpoint-pinned per batch (lineage cannot grow with batch
+    * checkpointed per batch (lineage cannot grow with batch
     * count); at scale it is a bucketed table and tombstones age out by
     * a version floor. */
   def runCdcEquivalent(spark: SparkSession, sfDir: String): DataFrame = {
@@ -359,7 +360,7 @@ object EventStream {
       lit("upsert").as("_op"),
       to_timestamp(lit("1970-01-01 00:00:00")).as("ts"),
       lit(-1L).cast("long").as("event_id"))
-    var state = target0.localCheckpoint()
+    var state = Materialize.checkpoint(target0)
     val log = eventsSource(spark, sfDir).select(
       col("user_id").as("c_custkey"),
       concat(lit("cdc-"), col("event_id")).as("c_name"),
@@ -369,9 +370,8 @@ object EventStream {
       col("ts"), col("event_id"))
     withNarrowShuffle(spark) {
       val q = sinkForeachBatch(log) { (batch, _) =>
-        state = graft.operators.Merge.mergeVersioned(state, batch.toDF(),
-          Seq("c_custkey"), versionCols = Seq("ts", "event_id"))
-          .localCheckpoint()
+        state = Materialize.checkpoint(graft.operators.Merge.mergeVersioned(state, batch.toDF(),
+          Seq("c_custkey"), versionCols = Seq("ts", "event_id")))
       }.start()
       awaitDrained(q)
     }
@@ -408,28 +408,29 @@ object EventStream {
   def pipelineIncremental(spark: SparkSession, events: DataFrame, customer: DataFrame,
                           eventsDir: String, docsDir: String)
                          (pipeline: (DataFrame, DataFrame) => DataFrame) =
-    sinkForeachBatch(events) { (batch, batchId) =>
-      batch.persist()
-      // idempotent on replay: foreachBatch is at-least-once, so the
-      // raw append is keyed by batchId and OVERWRITTEN on redelivery
-      // — a retried batch replaces its own partition instead of
-      // double-counting events in every later recompute
-      batch.write.mode("overwrite").parquet(s"$eventsDir/batch_$batchId")
-      val dirty = batch.select("user_id").distinct()
-      val history = spark.read.parquet(s"$eventsDir/batch_*")
-        .join(dirty, Seq("user_id"), "left_semi")
-      val recomputed = pipeline(history, customer)
-      val existing = latestCompleteVersion(spark, docsDir, below = Some(batchId)) match {
-        case Some(prev) =>
-          spark.read.parquet(prev.toString).join(dirty, Seq("user_id"), "left_anti")
-        case None => recomputed.limit(0)
+    sinkForeachBatch(events) { (raw, batchId) =>
+      Materialize.scoped { s =>
+        val batch = s.cache(raw)
+        // idempotent on replay: foreachBatch is at-least-once, so the
+        // raw append is keyed by batchId and OVERWRITTEN on redelivery
+        // — a retried batch replaces its own partition instead of
+        // double-counting events in every later recompute
+        batch.write.mode("overwrite").parquet(s"$eventsDir/batch_$batchId")
+        val dirty = batch.select("user_id").distinct()
+        val history = spark.read.parquet(s"$eventsDir/batch_*")
+          .join(dirty, Seq("user_id"), "left_semi")
+        val recomputed = pipeline(history, customer)
+        val existing = latestCompleteVersion(spark, docsDir, below = Some(batchId)) match {
+          case Some(prev) =>
+            spark.read.parquet(prev.toString).join(dirty, Seq("user_id"), "left_anti")
+          case None => recomputed.limit(0)
+        }
+        // new snapshot dir — the read side (v_<prev>) is never touched,
+        // so a failure here cannot destroy prior state
+        existing.unionByName(recomputed)
+          .write.mode("overwrite").parquet(s"$docsDir/v_$batchId")
+        pruneVersions(spark, docsDir, keepFrom = batchId - 1)
       }
-      // new snapshot dir — the read side (v_<prev>) is never touched,
-      // so a failure here cannot destroy prior state
-      existing.unionByName(recomputed)
-        .write.mode("overwrite").parquet(s"$docsDir/v_$batchId")
-      pruneVersions(spark, docsDir, keepFrom = batchId - 1)
-      batch.unpersist()
     }
 
   /** Latest complete (_SUCCESS-bearing) docs snapshot written by

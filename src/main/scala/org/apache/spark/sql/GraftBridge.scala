@@ -23,7 +23,8 @@ object GraftBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** Re-assert a hash-partitioning CLAIM on a localCheckpoint'd frame.
+  /** Re-assert a hash-partitioning CLAIM on a checkpointed frame
+    * (one made by `graft.Materialize`).
     *
     * Iterative operators (BFS's reached-set merge) keep their state
     * frame physically hash-partitioned on the key across iterations,
@@ -33,8 +34,8 @@ object GraftBridge {
     * though the COALESCED key column is exactly hash-distributed), and
     * the next iteration's EnsureRequirements re-exchanges the whole
     * state frame. This rebuilds the checkpoint's LogicalRDD with
-    * HashPartitioning(cols, actual partition count) so the next join
-    * only shuffles the small side.
+    * HashPartitioning(cols, actual partition count) over the same RDD
+    * so the next join only shuffles the small side.
     *
     * SAFETY CONTRACT (the caller proves, not this helper): the frame's
     * physical layout must BE hash(cols) % numPartitions — i.e. it came
@@ -48,9 +49,8 @@ object GraftBridge {
     * claim lets the next sort-merge join skip re-sorting the big
     * side. Returns the input unchanged when the plan is not a
     * LogicalRDD. */
-  def checkpointHashPartitioned(df: DataFrame, cols: Seq[String],
-                                sortedWithinPartitions: Boolean = false): DataFrame = {
-    val cp = df.localCheckpoint()
+  def claimHashPartitioned(cp: DataFrame, cols: Seq[String],
+                           sortedWithinPartitions: Boolean = false): DataFrame = {
     val ds = cp.asInstanceOf[classic.Dataset[_]]
     ds.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>

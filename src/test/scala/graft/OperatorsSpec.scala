@@ -596,43 +596,56 @@ class CacheHygieneSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  // Iterative/persisting operators must release every intermediate
-  // cache before returning: the only block allowed to survive a call
-  // is the operator's own checkpointed result (cleaned by the
-  // ContextCleaner once unreferenced). Previously each call leaked
-  // maxDepth frontier caches / the signature cache (VERDICT r1 #3).
-  private def persisted = spark.sparkContext.getPersistentRDDs.size
+  // Every cache and checkpoint goes through graft.Materialize, whose
+  // release rule these cases pin: a call leaves behind at most its own
+  // checkpointed result, and a call that throws leaves nothing cached.
+  // Sets of RDD ids, not sizes: an unrelated RDD reaped meanwhile
+  // cannot mask a new one.
+  private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** Run `body`; return its value and the ids of the RDDs it left persisted. */
+  private def leftBehind[T](body: => T): (T, Set[Int]) = {
+    val before = persisted
+    val out = body
+    (out, persisted -- before)
+  }
+
+  /** The checkpointed RDD a result frame reads. */
+  private def own(df: org.apache.spark.sql.DataFrame): Set[Int] =
+    org.apache.spark.sql.GraftBridge.analyzedPlan(df) match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => Set(lr.rdd.id)
+      case _ => Set.empty
+    }
+
+  private def cacheManager =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
 
   test("Hierarchy.ancestors releases all frontier caches") {
     val edges = (10L until 200L).map(k => (k, k / 10)).toDF("child", "parent")
-    val before = persisted
-    val closure = graft.operators.Hierarchy.ancestors(edges, "child", "parent", maxDepth = 8)
+    val (closure, left) = leftBehind(
+      graft.operators.Hierarchy.ancestors(edges, "child", "parent", maxDepth = 8))
     assert(closure.count() > 0)
-    assert(persisted <= before + 1, s"leaked caches: $before -> $persisted")
+    assert(left == own(closure), s"leaked: ${left -- own(closure)}")
   }
 
   test("Components.connectedComponents bounds its checkpoint footprint") {
-    // star contraction localCheckpoints every intermediate (the edge
-    // plan would otherwise be re-embedded per round and the plan
-    // string alone OOMs at high diameter); checkpoint blocks are
-    // ContextCleaner-reaped on GC rather than explicitly unpersisted,
-    // so the footprint is bounded per call, not zero
+    // star contraction checkpoints every intermediate (the edge plan
+    // would otherwise be re-embedded per round and the plan string
+    // alone OOMs at high diameter); all but the result's checkpoint
+    // are released on return, so each call leaves at most one RDD
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
-    val before = persisted
-    val labels = graft.operators.Components.connectedComponents(edges)
+    val (labels, first) = leftBehind(graft.operators.Components.connectedComponents(edges))
     assert(labels.count() == 5)
-    val perCall = persisted - before
-    assert(perCall <= 12, s"checkpoint footprint too large: $before -> $persisted")
-    // a second call gets the SAME absolute per-call budget — not a
-    // bound relative to the first call's footprint: the ContextCleaner
-    // reaps asynchronously, so the instantaneous count wobbles with GC
-    // timing and a lucky-small first call (e.g. 1 after an eager reap)
-    // would make a relative slack tighter than the budget the first
-    // assertion itself grants (observed flake: first call 1, second 8)
-    val mid = persisted
-    graft.operators.Components.connectedComponents(edges).count()
-    assert(persisted - mid <= 12,
-      s"cross-call accumulation: $mid -> $persisted (first call: $perCall)")
+    assert(first.size <= 1, s"checkpoint footprint too large: $first")
+    val (_, second) = leftBehind(graft.operators.Components.connectedComponents(edges).count())
+    assert(second.size <= 1, s"cross-call accumulation: $second (first call: $first)")
+  }
+
+  test("Components.connectedComponents on a chain leaves only its result's checkpoint") {
+    val chain = (1L to 40L).map(k => (k, k + 1)).toDF("id_a", "id_b")
+    val (labels, left) = leftBehind(graft.operators.Components.connectedComponents(chain))
+    assert(left == own(labels), s"leaked: ${left -- own(labels)}")
+    assert(labels.select("component").distinct().as[Long].collect().toSeq == Seq(1L))
   }
 
   test("Dedup.minHashLsh / ngramJaccard release the signature caches") {
@@ -641,9 +654,61 @@ class CacheHygieneSpec extends AnyFunSuite {
       (2L, "the quick brown fox jumps over the lazy dog today!"),
       (3L, "entirely different words about distributed query engines"))
       .toDF("doc_id", "text")
-    val before = persisted
-    Dedup.minHashLsh(docs, "doc_id", "text").count()
-    Dedup.ngramJaccard(docs, "doc_id", "text").count()
-    assert(persisted <= before + 2, s"leaked caches: $before -> $persisted")
+    val ((lsh, ngram), left) = leftBehind(
+      (Dedup.minHashLsh(docs, "doc_id", "text"), Dedup.ngramJaccard(docs, "doc_id", "text")))
+    lsh.count(); ngram.count()
+    assert(left == own(lsh) ++ own(ngram), s"leaked: ${left -- own(lsh) -- own(ngram)}")
+  }
+
+  test("Infer.trainOvr leaves no RDD behind") {
+    val docs = Seq((1L, "the cat sat on the mat", "en"), (2L, "le chat est sur le tapis", "fr"),
+      (3L, "a dog ran in the park", "en"), (4L, "un chien court au parc", "fr"))
+      .toDF("doc_id", "text", "lang")
+    val (model, left) = leftBehind(
+      Infer.trainOvr(docs, "doc_id", "text", col("lang"), buckets = 16, iters = 2))
+    assert(model.map(_._1) == Seq("en", "fr"))
+    assert(left.isEmpty, s"leaked: $left")
+  }
+
+  test("Graph.bfsHops leaves only its result's checkpoint") {
+    val edges = (1L to 12L).map(k => (k, k + 1)).toDF("src", "dst")
+    val (hops, left) = leftBehind(
+      graft.operators.Graph.bfsHops(edges, "src", "dst", Seq(1L).toDF("node"), maxHops = 5))
+    assert(hops.count() == 6)
+    assert(left == own(hops), s"leaked: ${left -- own(hops)}")
+  }
+
+  test("a failing input leaves nothing cached (Select.tokenBudget, Dedup.minHashLsh)") {
+    // spark.range, not a local Seq: over a local Seq the optimizer
+    // (ConvertToLocalRelation) evaluates the poisoned row inside
+    // persist itself, before anything is cached
+    val poisoned = spark.range(0, 40).select(col("id").as("doc_id"),
+      when(col("id") === 17, raise_error(lit("poisoned row")))
+        .otherwise(col("id") % 5).as("score"),
+      lit(10L).as("n_tokens"),
+      when(col("id") === 17, raise_error(lit("poisoned row")))
+        .otherwise(concat(lit("document number "), col("id").cast("string"))).as("text"))
+    spark.catalog.clearCache()
+    assert(cacheManager.isEmpty)
+    intercept[Exception](
+      Select.tokenBudget(poisoned, "doc_id", "n_tokens", "score", budget = 100L))
+    assert(cacheManager.isEmpty, "Select.tokenBudget left a cache registered")
+    intercept[Exception](Dedup.minHashLsh(poisoned, "doc_id", "text"))
+    assert(cacheManager.isEmpty, "Dedup.minHashLsh left a cache registered")
+  }
+
+  test("materialization calls appear only in graft.Materialize") {
+    import scala.jdk.CollectionConverters._
+    val banned = """\.persist\(|unpersist\(|\.localCheckpoint\(|StorageLevel""".r
+    val root = java.nio.file.Paths.get(sys.props("user.dir"), "src", "main", "scala")
+    val sources = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toList
+    assert(sources.exists(_.endsWith("graft/Materialize.scala")), s"no sources under $root")
+    val offenders = for {
+      p <- sources if !p.endsWith("graft/Materialize.scala")
+      (line, i) <- java.nio.file.Files.readAllLines(p).asScala.zipWithIndex
+      if banned.findFirstIn(line).isDefined
+    } yield s"${root.relativize(p)}:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
   }
 }
