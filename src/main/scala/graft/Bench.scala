@@ -1,6 +1,7 @@
 package graft
 
 import java.util.concurrent.atomic.AtomicLong
+import scala.collection.immutable.ListMap
 
 /** Perf harness: executes every query's FULL plan (noop sink — a
   * count() would let Catalyst prune computed columns) and prints ONE
@@ -131,32 +132,17 @@ object Bench {
     }
     val todo = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    // Iteration order knob (SPARK_GRAFT_ITER_ORDER):
-    //  - passmajor (default since r8): iterations INTERLEAVED across
-    //    full-suite passes — machine contention is bursty on multi-
-    //    minute timescales (VERDICT r6/r7 measured 1.3-2x uniform
-    //    noise during driver sessions), so spreading a query's
-    //    attempts gives each an independent draw and the min lands on
-    //    the quietest pass.
-    //  - backtoback (the r6-and-earlier method): a query's iterations
-    //    run consecutively — min-of-2 samples a warm back-to-back
-    //    rerun (page cache, JIT, shuffle files all hot), which reads
-    //    systematically faster. The r8 series switch shifted every
-    //    per-query min ~1.39x on unchanged code; BENCH_LOCAL_r09
-    //    captures BOTH orders once to bridge the series (VERDICT r8
-    //    next-round #1).
-    val passMajor =
-      sys.env.getOrElse("SPARK_GRAFT_ITER_ORDER", "passmajor") != "backtoback"
+    // Iterations run PASS-MAJOR: interleaved across full-suite passes.
+    // Machine contention is bursty on multi-minute timescales (VERDICT
+    // r6/r7 measured 1.3-2x uniform noise on shared hosts), so
+    // spreading a query's attempts gives each an independent draw and
+    // the min lands on the quietest pass.
     val attemptsByQuery =
       scala.collection.mutable.Map[String, Vector[(Double, Map[String, Long])]]()
         .withDefaultValue(Vector.empty)
     val errByQuery = scala.collection.mutable.Map[String, String]()
-    val schedule: Seq[(Int, Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame)])] =
-      if (passMajor) (1 to iters).map(p => p -> todo)
-      else Seq(1 -> todo.flatMap(q => Seq.fill(iters)(q)))
-    schedule.foreach { case (pass, queue) =>
-      queue.foreach { case (name, fn) =>
+    (1 to iters).foreach { pass =>
+      todo.foreach { case (name, fn) =>
         ensureAlive()
         listener.reset()
         bcast.reset()
@@ -187,7 +173,7 @@ object Bench {
             "neardup_dropped_rows" -> bcast.ndDroppedRows.get,
             "neardup_largest_bucket" -> bcast.ndLargestBucket.get))
       }
-      System.err.println(s"[bench] --- pass $pass/${if (passMajor) iters else 1} complete ---")
+      System.err.println(s"[bench] --- pass $pass/$iters complete ---")
     }
     val runs = todo.map { case (name, _) =>
       val ok = attemptsByQuery(name).filter(_._1 >= 0)
@@ -210,33 +196,17 @@ object Bench {
     // tail-capped log capture (~2000 chars incl. the sbt trailer), so it
     // lists queries heaviest-first and stops at a hard line budget with an
     // `omitted` count — the headline total always covers every query.
-    // JSON string escape for err messages (same posture as Verify's)
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val fullJson = {
-      val qs = runs.map { case (k, v, m, err) =>
-        "\"" + k + "\":{\"sec\":" + v +
-          m.toSeq.sortBy(_._1).map { case (mk, mv) => ",\"" + mk + "\":" + mv }.mkString +
-          (if (err == null) "" else ",\"err\":" + jstr(err)) +
-          "}"
-      }.mkString("{", ",", "}")
-      // n_queries stamped from the SAME collection the map serializes
-      // (VERDICT r16 #8: a commit message hand-wrote "all 197 queries"
-      // over a 196-query dump — counts must come from the artifact)
-      s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,""" +
-        s""""n_queries":${runs.size},""" +
-        s""""iter_order":"${if (passMajor) "passmajor" else "backtoback"}",""" +
-        s""""queries":$qs,"sf":"$sfDir"}"""
-    }
-    try {
-      val p = java.nio.file.Paths.get("target/bench_full.json")
-      java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.write(p, fullJson.getBytes("UTF-8"))
-    } catch { case e: Throwable => System.err.println(s"[bench] full dump failed: $e") }
+    // n_queries stamped from the SAME collection the map serializes
+    // (VERDICT r16 #8: a commit message hand-wrote "all 197 queries"
+    // over a 196-query dump — counts must come from the artifact)
+    val fullJson = ListMap("metric" -> "total", "value" -> total, "unit" -> "sec",
+      "failed" -> failed, "n_queries" -> runs.size,
+      "queries" -> ListMap.from(runs.map { case (k, v, m, err) =>
+        k -> (ListMap[String, Any]("sec" -> v) ++ m.toSeq.sortBy(_._1) ++
+          Option(err).map("err" -> _)) }),
+      "sf" -> sfDir)
+    try Json.writeFile("target/bench_full.json", fullJson)
+    catch { case e: Throwable => System.err.println(s"[bench] full dump failed: $e") }
     val lineBudget = 1500
     // Locale.ROOT: the f interpolator uses the JVM default locale, and a
     // comma-decimal locale would emit unparseable JSON
@@ -257,12 +227,12 @@ object Bench {
       files.lastOption.flatMap { f =>
         val txt = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
         """"value"\s*:\s*([0-9.Ee+-]+)""".r.findFirstMatchIn(txt)
-          .map(m => s""","local_ref":{"file":"${f.getName}","value":${m.group(1)}}""")
+          .map(m => s""","local_ref":{"file":${Json.write(f.getName)},"value":${m.group(1)}}""")
       }.getOrElse("")
     }
-    val header = s"""{"metric":"total","value":${f3(total)},"unit":"sec","failed":$failed,"n_queries":${runs.size}$localRef,"sf":"$sfDir","queries":{"""
+    val header = s"""{"metric":"total","value":${f3(total)},"unit":"sec","failed":$failed,"n_queries":${runs.size}$localRef,"sf":${Json.write(sfDir)},"queries":{"""
     val entries = results.sortBy(-_._2)
-      .map { case (k, v) => "\"" + k + "\":" + f3(v) }
+      .map { case (k, v) => Json.write(k) + ":" + f3(v) }
     val sb = new StringBuilder(header)
     var kept = 0
     entries.foreach { e =>

@@ -1,24 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // Fail FAST on bench-only env knobs: q_curate_e2e reads these from
-    // the shared queries map, and a stray exported var would make the
-    // DuckDB oracle check a non-default chain (the pruned strategy can
-    // diverge spuriously at the recall margin on non-test corpora; a
-    // scaled budget changes the manifest outright). The invocation
-    // convention ("Verify never sets them") is now enforced, not
-    // assumed.
-    val benchOnly = Seq("SPARK_GRAFT_NEARDUP", "SPARK_GRAFT_CURATE_BUDGET",
-        "SPARK_GRAFT_CURATE_KEEPPPM")
-      .filter(sys.env.contains)
+    // Fail FAST on bench-only env knobs: the curation queries read
+    // these from the shared queries map, and a stray exported var
+    // would make the DuckDB oracle check a non-default chain (a scaled
+    // budget or LM gate changes the manifest outright). The invocation
+    // convention ("Verify never sets them") is enforced, not assumed.
+    val benchOnly =
+      Seq("SPARK_GRAFT_CURATE_BUDGET", "SPARK_GRAFT_CURATE_KEEPPPM").filter(sys.env.contains)
     require(benchOnly.isEmpty,
       s"bench-only env knob(s) ${benchOnly.mkString(", ")} set — Verify " +
         "must check the default config; unset them (the oracle SQL " +
-        "replays the default lossless chain at the default budget)")
+        "replays the default chain at the default budget)")
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query names (local iteration
     // on a subset; the driver always runs the full surface)
@@ -42,23 +37,10 @@ object Verify {
           Option(e.getMessage).getOrElse("").linesIterator.take(3).mkString(" | ")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    Files.writeString(Paths.get(s"$outDir/_failed.json"),
-      failed.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
+    // Json escapes every control char: a tab or CR in an oracle's SQL
+    // must not make a reader's json.load fail and drop every oracle.
+    Json.writeFile(s"$outDir/oracle_sql.json", SparkEntry.oracleSql)
+    Json.writeFile(s"$outDir/_failed.json", failed)
     spark.stop()
   }
 }

@@ -36,14 +36,6 @@ object TextFunctions {
     * corpus quality filters (Gopher/C4-style heuristics). */
   def stopwordRatio(c: Column): Column = stopwordRatioOfTokens(tokens(c))
 
-  /** Mean token length of the normalized text. */
-  def meanWordLen(c: Column): Column = {
-    val toks = tokens(c)
-    when(size(toks) === 0, lit(0.0)).otherwise(
-      aggregate(toks, lit(0L), (acc, t) => acc + length(t)).cast("double") /
-        size(toks).cast("double"))
-  }
-
   /** Composite quality score in [0,1] from PRE-COMPUTED raw components
     * — the single definition of the weights/thresholds (keep the
     * oracle SQL replicas in QueriesText in sync). */
@@ -67,13 +59,6 @@ object TextFunctions {
     "de" -> Seq("der", "die", "und", "das", "ist"),
     "es" -> Seq("el", "los", "las", "una", "es"),
     "zh" -> Seq("de", "shi", "le", "zai", "he"))
-
-  /** Per-language marker-hit count (occurrences, not distinct — each
-    * marker token counts every time it appears). `isin` compiles to a
-    * single In/InSet membership test per token instead of an equality
-    * chain. */
-  def langScore(c: Column, markers: Seq[String]): Column =
-    size(filter(tokens(c), t => t.isin(markers: _*)))
 
   /** Predicted language: argmax of marker hits, 'und' when all zero.
     * Ties resolve in LangMarkers order (en first). Convenience form —

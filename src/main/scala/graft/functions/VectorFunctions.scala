@@ -169,15 +169,6 @@ object LongVecDot {
     s
   }
 
-  /** Overflow-checked loop = an ANSI-mode fold (throws ArithmeticException). */
-  def dotExact(x: Array[Long], y: Array[Long]): Long = {
-    val n = math.min(x.length, y.length)
-    var s = 0L
-    var i = 0
-    while (i < n) { s = Math.addExact(s, Math.multiplyExact(x(i), y(i))); i += 1 }
-    s
-  }
-
   /** In-place ArrayData reads — no per-evaluation copies. */
   def dotData(x: ArrayData, y: ArrayData): Long = {
     val n = math.min(x.numElements(), y.numElements())

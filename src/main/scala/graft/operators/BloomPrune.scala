@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
 object BloomPrune {
 
   /** WHEN to inject, pinned from the measured payoff curve rather than
-    * intuition (BloomBench on the ×32 corpus, broadcast disabled —
+    * intuition (SCALE_r14 `bloom_join_ab`: ×32 corpus, broadcast disabled —
     * the dim-too-big-to-broadcast regime; ratios are bloom/plain TOTAL
     * query shuffle-write, so both sides include the common aggregation
     * shuffle and the isolated fact-side saving is stronger):

@@ -85,12 +85,7 @@ object Cleaning {
   def dropRequiredNulls(required: Seq[String])(df: DataFrame): DataFrame =
     df.filter(required.map(col(_).isNotNull).reduce(_ && _))
 
-  /** Remove rows whose key appears in a skip list (literal list →
-    * codegen'd NOT IN; for large lists use an anti join instead). */
-  def dropSkipList(colName: String, skip: Seq[String])(df: DataFrame): DataFrame =
-    df.filter(!col(colName).isin(skip: _*))
-
-  /** Large skip list variant: broadcast anti join. */
+  /** Remove rows whose key appears in a skip list: broadcast anti join. */
   def dropSkipListLarge(df: DataFrame, skipDf: DataFrame, key: String): DataFrame =
     df.join(broadcast(skipDf), Seq(key), "left_anti")
 

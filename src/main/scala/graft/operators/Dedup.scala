@@ -1124,8 +1124,8 @@ object Dedup {
     *     unpaired);
     *   - `n_hist_matches`: qualifying history matches (audit).
     *
-    * Scale shape (the O(batch) claim, measured by IncrementalBench's
-    * neardup axis):
+    * Scale shape (the O(batch) claim, measured in SCALE_r16
+    * `incremental_dedup_history_axis`, neardup_indexed rows):
     *  - batch signatures: one narrow pass over batch text, persisted
     *    (feeds banding, both re-score sides, and the verdict spine);
     *  - history candidates: the index is scanned ONCE, narrowly —

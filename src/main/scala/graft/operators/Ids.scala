@@ -10,16 +10,10 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * `monotonically_increasing_id()` (jobs/load/solr/mgi_phenotype_mapper
   * .py:131, mp_mapper.py:234) — ids that depend on the RDD's partition
   * layout, so two runs of the same pipeline over the same data can
-  * disagree. Both operators here are REPRODUCIBLE functions of the data
-  * alone.
+  * disagree. The surrogate id here is a REPRODUCIBLE function of the
+  * data alone (content-keyed md5 ids are [[Cleaning.withUniqueId]]).
   */
 object Ids {
-
-  /** Content-keyed id: md5 over the key columns (null-safe, '|'
-    * separated) — see [[Cleaning.withUniqueId]]; re-exported here so
-    * both id patterns live behind one door. */
-  def contentId(df: DataFrame, idCol: String, keyCols: Seq[String]): DataFrame =
-    Cleaning.withUniqueId(idCol, keyCols)(df)
 
   /** Positional SURROGATE id: dense 1..N longs assigned in md5(key)
     * order — reproducible across runs, partition layouts, and cluster

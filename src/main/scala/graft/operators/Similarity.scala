@@ -169,7 +169,9 @@ object Similarity {
     * Scale shape: cells shuffle once by id for the vector fetch; the
     * probe table (queries × nprobe) and query vectors broadcast; the
     * candidate fan-out is |probed cells| × cell size, never all
-    * pairs. Size nlist with [[Cluster.kForCorpus]].
+    * pairs. Size nlist with [[Cluster.kForCorpus]]. Recall and probe
+    * cost vs nprobe at 64k and 400k vectors: SCALE_r14
+    * `ivf_recall_curve_x32` / `ivf_recall_curve_x200`.
     *
     * Probe paths (the [[Cluster.LiteralAssignMaxK]] discipline —
     * the centroid-scoring expression tree is nlist × dim nodes, a
@@ -188,21 +190,37 @@ object Similarity {
   def ivfInt8TopK(corpus: DataFrame, queryFilter: Column, k: Int,
                   nlist: Int = 8, iters: Int = 2, nprobe: Int = 2,
                   idCol: String = "vec_id", vecCol: String = "embedding",
-                  literalProbeMaxK: Int = Cluster.LiteralAssignMaxK): DataFrame =
-    ivfInt8TopKOn(Cluster.trainInt8(corpus, idCol, vecCol, nlist, iters),
-      corpus, queryFilter, k, nprobe, idCol, vecCol, literalProbeMaxK)
-
-  /** [[ivfInt8TopK]] over an ALREADY-TRAINED index — the build/probe
-    * split a real deployment has (train once, sweep nprobe), and what
-    * lets the recall harness (graft.RecallBench) attribute cost to
-    * the probe instead of re-paying training per sweep point. */
-  private[graft] def ivfInt8TopKOn(tr: Cluster.Trained,
-                  corpus: DataFrame, queryFilter: Column, k: Int, nprobe: Int,
-                  idCol: String = "vec_id", vecCol: String = "embedding",
                   literalProbeMaxK: Int = Cluster.LiteralAssignMaxK): DataFrame = {
+    val tr = Cluster.trainInt8(corpus, idCol, vecCol, nlist, iters)
     val cells = tr.assigned // (id, q, cid, dist)
-    val probed = probeCells(tr, corpus, queryFilter, nprobe, idCol,
-      literalProbeMaxK)
+    // the probe set — (query_id, cid), each query's `nprobe` nearest
+    // assignment cells. Query rows' quantized vectors come from the
+    // same assignment frame — same grid, no re-quantization drift
+    val qids = corpus.filter(queryFilter)
+      .select(col(idCol).cast("long").as("id"))
+    val qq = cells.join(broadcast(qids), Seq("id"))
+      .select(col("id").as("query_id"), col("q"))
+    val probed =
+      if (tr.assignCentroids.size <= literalProbeMaxK) {
+        // the SAME scored-struct builder as Cluster.assignLiteral —
+        // one definition keeps probe and assignment bit-identical
+        val scoredCells = Cluster.scoredCellStructs(tr.assignCentroids)
+        qq.withColumn("__p", slice(array_sort(scoredCells), 1, nprobe))
+          .select(col("query_id"), explode(col("__p").getField("cid")).as("cid"))
+      } else {
+        import graft.functions.VectorFunctions.vecDotLong
+        val cdf = Cluster.centroidFrame(corpus.sparkSession, tr.assignCentroids)
+        val byDist = Window.partitionBy(col("query_id"))
+          .orderBy(col("__dist").asc, col("cid").asc)
+        qq.withColumn("aa", vecDotLong(col("q"), col("q")))
+          .withColumn("cid", explode(sequence(lit(0), lit(tr.assignCentroids.size - 1))))
+          .join(cdf, "cid")
+          .select(col("query_id"), col("cid"),
+            (col("aa") - lit(2L) * vecDotLong(col("q"), col("cq")) + col("bb")).as("__dist"))
+          .withColumn("__rk", row_number().over(byDist))
+          .filter(col("__rk") <= nprobe)
+          .select(col("query_id"), col("cid"))
+      }
     val corpusVec = corpus.select(col(idCol).cast("long").as("id"), col(vecCol))
     val qVec = corpus.filter(queryFilter)
       .select(col(idCol).cast("long").as("query_id"), col(vecCol).as("__qv"))
@@ -218,45 +236,6 @@ object Similarity {
       .filter(col("rk") <= k)
       .select(col("query_id"), col("id").as("neighbor_id"),
         round(col("cosine"), 6).as("cosine"), col("rk"))
-  }
-
-  /** The probe set of [[ivfInt8TopKOn]] — (query_id, cid), each
-    * query's `nprobe` nearest assignment cells — exposed so the recall
-    * harness can ADJUDICATE a flat recall curve (which cells did probe
-    * N add, and were they empty?) against the exact same probe
-    * construction the production path executes, instead of a
-    * re-derivation that could hide a plumbing bug. */
-  private[graft] def probeCells(tr: Cluster.Trained, corpus: DataFrame,
-                  queryFilter: Column, nprobe: Int,
-                  idCol: String = "vec_id",
-                  literalProbeMaxK: Int = Cluster.LiteralAssignMaxK): DataFrame = {
-    val cells = tr.assigned // (id, q, cid, dist)
-    // query rows' quantized vectors come from the same assignment
-    // frame — same grid, no re-quantization drift
-    val qids = corpus.filter(queryFilter)
-      .select(col(idCol).cast("long").as("id"))
-    val qq = cells.join(broadcast(qids), Seq("id"))
-      .select(col("id").as("query_id"), col("q"))
-    if (tr.assignCentroids.size <= literalProbeMaxK) {
-        // the SAME scored-struct builder as Cluster.assignLiteral —
-        // one definition keeps probe and assignment bit-identical
-        val scoredCells = Cluster.scoredCellStructs(tr.assignCentroids)
-        qq.withColumn("__p", slice(array_sort(scoredCells), 1, nprobe))
-          .select(col("query_id"), explode(col("__p").getField("cid")).as("cid"))
-      } else {
-        import graft.functions.VectorFunctions.vecDotLong
-        val cdf = Cluster.centroidFrame(corpus.sparkSession, tr.assignCentroids)
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(col("__dist").asc, col("cid").asc)
-        qq.withColumn("aa", vecDotLong(col("q"), col("q")))
-          .withColumn("cid", explode(sequence(lit(0), lit(tr.assignCentroids.size - 1))))
-          .join(cdf, "cid")
-          .select(col("query_id"), col("cid"),
-            (col("aa") - lit(2L) * vecDotLong(col("q"), col("cq")) + col("bb")).as("__dist"))
-          .withColumn("__rk", row_number().over(w))
-          .filter(col("__rk") <= nprobe)
-          .select(col("query_id"), col("cid"))
-    }
   }
 
   /** Multi-table LSH ANN: a query's candidates are the union of its

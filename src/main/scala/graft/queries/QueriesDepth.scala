@@ -608,8 +608,9 @@ object QueriesDepth {
       // instead of user alone, with a per-(user, bucket) carry-in
       // rollup restoring cross-bucket LOCF — the "range-split by time
       // upstream" mitigation for the ordered-scan as-of's hot-key
-      // limit, measured against q_asof_plan on the SkewGen corpus in
-      // the scale matrix. Identical output, same ASOF LEFT JOIN oracle.
+      // limit, measured against q_asof_plan on hot-key corpora in
+      // SCALE_r16 `asof_range_split_crossover`. Identical output, same
+      // ASOF LEFT JOIN oracle.
       val t = Tables(s, d)
       val ev = t.events
       val clicks = ev.filter(col("event_type") === "click")

@@ -253,7 +253,7 @@ object QueriesExtra {
       val edges = t.orders.filter(col("o_orderkey") >= 10)
         .select(col("o_orderkey").as("child"),
           (col("o_orderkey") / 10).cast("long").as("parent"))
-      Hierarchy.ancestorsByEnv(edges, "child", "parent", maxDepth = 10)
+      Hierarchy.ancestors(edges, "child", "parent", maxDepth = 10)
         .orderBy("node", "depth")
     }),
 
@@ -326,7 +326,7 @@ object QueriesExtra {
         .select(col("o_orderkey").as("child"),
           (col("o_orderkey") / 10).cast("long").as("parent"))
       Hierarchy.ancestorArrays(
-          Hierarchy.ancestorsByEnv(edges, "child", "parent", maxDepth = 10))
+          Hierarchy.ancestors(edges, "child", "parent", maxDepth = 10))
         .select(col("node"),
           array_join(transform(col("ancestors"), a => a.cast("string")), ",")
             .as("anc_path"),

@@ -182,48 +182,9 @@ object QueriesPipeline {
     * tail joins are AQE-broadcast dimension joins at any corpus size.
     * Stage boundaries localCheckpoint(eager=false) exactly where a
     * production pipeline would materialize an intermediate table
-    * (the q_corpus_e2e discipline). */
-  private[graft] def curateManifest(docs0: DataFrame,
-                                    nearDupStrategy: String = "auto",
-                                    budget: Long = 12000L,
-                                    keepPpm: Long = 35000000L,
-                                    corpusSizeHint: Option[Long] = None): DataFrame =
-    curateThrough(docs0, nearDupStrategy, "manifest", budget, keepPpm,
-      corpusSizeHint)
-
-  /** Measured crossover for the AUTO near-dup strategy (r14, VERDICT
-    * r13 #3): below this many post-exact-dedup docs the lossless
-    * prefix filter wins (its bucket shuffle is small and the chain
-    * stays verifiable end-to-end against one oracle); above it the
-    * minhash-pruned generator wins — the ×32/×100 A/B measured the
-    * prefix-shingle shuffle at 24.9 GB with 80.7 GB spill vs the
-    * banded signature path's 2.2 GB / 0 spill for an IDENTICAL
-    * manifest (SCALE_r13 curate_neardup_strategy_ab). The corpora pin
-    * the crossover loosely — lossless was still fine at ×10 (~50k
-    * docs) and clearly losing at ×32 (~160k) — so the threshold sits
-    * between, and deliberately ABOVE [[Dedup.BroadcastSafeCorpusRows]]
-    * (the two knobs gate different costs: join build sides vs pair-
-    * generation shuffle). Env SPARK_GRAFT_NEARDUP still overrides
-    * both ways; Verify fails fast if it is set. */
-  val AutoPrunedMinDocs: Long = 100000L
-
-  /** The pure auto rule, exposed for CurateStrategySpec to pin both
-    * sides of the threshold without benching a 100k-doc corpus. */
-  private[graft] def resolveNearDupStrategy(strategy: String, canonDocs: => Long,
-                                            autoMinDocs: Long = AutoPrunedMinDocs): String =
-    strategy match {
-      case "auto" => if (canonDocs > autoMinDocs) "pruned" else "lossless"
-      case s => s
-    }
-
-  /** [[curateManifest]] cut off after a named stage — the measurement
-    * surface CurateDecomp uses to ATTRIBUTE the chain's shuffle volume
-    * to its stages at scale (cumulative-prefix diffs). `through` is one
-    * of `pairs` (stages 1–3's pair generation), `sel` (…components +
-    * DSIR + token budget), `spl` (…shingle-edge leak-free split),
-    * `manifest` (the full chain). The "manifest" path is exactly the
-    * former curateManifest body — same frames, same checkpoints. */
-  /** `corpusSizeHint` (r15, VERDICT r14 next-round #6): a production
+    * (the q_corpus_e2e discipline).
+    *
+    * `corpusSizeHint` (r15, VERDICT r14 next-round #6): a production
     * Targets run that already KNOWS its post-exact-dedup corpus size
     * (from the previous night's manifest, or an upstream count) can
     * pass it to skip the auto-strategy's resolving count() action —
@@ -234,14 +195,11 @@ object QueriesPipeline {
     * The hint changes WHICH pair generator runs, never the manifest —
     * CurateStrategySpec pins both resolutions against the explicit
     * strategies. */
-  private[graft] def curateThrough(docs0: DataFrame, nearDupStrategy: String,
-                                   through: String,
-                                   budget: Long = 12000L,
-                                   keepPpm: Long = 35000000L,
-                                   corpusSizeHint: Option[Long] = None): DataFrame = {
-    require(Set("pairs", "sel", "spl", "manifest")(through),
-      s"unknown stage '$through'")
-    import graft.functions.TextFunctions.{shinglesOfTokens, tokens}
+  private[graft] def curateManifest(docs0: DataFrame,
+                                    nearDupStrategy: String = "auto",
+                                    budget: Long = 12000L,
+                                    keepPpm: Long = 35000000L,
+                                    corpusSizeHint: Option[Long] = None): DataFrame = {
     val docs = docs0.select(col("doc_id"), col("text"), col("lang"))
     // 1. LM filter (docs with <2 tokens carry no bigram signal: dropped)
     val lmKeep = LangModel.bigramSurprisal(docs, "doc_id", "text",
@@ -261,7 +219,6 @@ object QueriesPipeline {
     // verify/oracle scale auto always lands on lossless, so the
     // chained DuckDB oracle keeps checking the default chain.
     val pairs = nearDupPairs(canon, nearDupStrategy, corpusSizeHint)
-    if (through == "pairs") return pairs
     val comp = Components.connectedComponents(pairs)
       .withColumnRenamed("node", "doc_id")
     val reps = canon.join(comp, Seq("doc_id"), "left")
@@ -272,11 +229,35 @@ object QueriesPipeline {
         targetFilter = col("lang") === "en", keepPpm = 1000000L)
       .select("doc_id", "n_tokens", "mean_lift_ppm")
     // 5.–7. the config-bounded tail, shared with the incremental DAG
-    manifestTail(docs, scored, through, budget)
+    manifestTail(docs, scored, budget)
   }
 
+  /** Measured crossover for the AUTO near-dup strategy (r14, VERDICT
+    * r13 #3): below this many post-exact-dedup docs the lossless
+    * prefix filter wins (its bucket shuffle is small and the chain
+    * stays verifiable end-to-end against one oracle); above it the
+    * minhash-pruned generator wins — the ×32/×100 A/B measured the
+    * prefix-shingle shuffle at 24.9 GB with 80.7 GB spill vs the
+    * banded signature path's 2.2 GB / 0 spill for an IDENTICAL
+    * manifest (SCALE_r13 curate_neardup_strategy_ab). The corpora pin
+    * the crossover loosely — lossless was still fine at ×10 (~50k
+    * docs) and clearly losing at ×32 (~160k) — so the threshold sits
+    * between, and deliberately ABOVE [[Dedup.BroadcastSafeCorpusRows]]
+    * (the two knobs gate different costs: join build sides vs pair-
+    * generation shuffle). */
+  val AutoPrunedMinDocs: Long = 100000L
+
+  /** The pure auto rule, exposed for CurateStrategySpec to pin both
+    * sides of the threshold without benching a 100k-doc corpus. */
+  private[graft] def resolveNearDupStrategy(strategy: String, canonDocs: => Long,
+                                            autoMinDocs: Long = AutoPrunedMinDocs): String =
+    strategy match {
+      case "auto" => if (canonDocs > autoMinDocs) "pruned" else "lossless"
+      case s => s
+    }
+
   /** The ONE near-dup pair-generator selection (curate stage 3),
-    * shared by [[curateThrough]], [[epochReps]] and
+    * shared by [[curateManifest]], [[epochReps]] and
     * [[curatePinnedBatch]] so the strategy rule and the generator
     * configs can never diverge between the batch and incremental
     * chains. Both generators emit the same schema and bit-exact
@@ -292,7 +273,7 @@ object QueriesPipeline {
         s"nearDupStrategy must be 'auto', 'lossless' or 'pruned', got '$other'")
     }
 
-  /** Stages 5–7 of [[curateThrough]] — token budget, leak-free split,
+  /** Stages 5–7 of [[curateManifest]] — token budget, leak-free split,
     * packing, manifest assembly — parameterized by the SCORED set so
     * the batch chain and the incremental DAG (r15) ride the identical
     * code (DAG output == batch output by construction wherever their
@@ -300,13 +281,12 @@ object QueriesPipeline {
     * the selection's shingle edges and the manifest's lang column;
     * everything here is CONFIG-BOUNDED past the budget cut. */
   private[graft] def manifestTail(docs: DataFrame, scored: DataFrame,
-                                  through: String, budget: Long): DataFrame = {
+                                  budget: Long): DataFrame = {
     import graft.functions.TextFunctions.{shinglesOfTokens, tokens}
     // 5. global token budget; output is CONFIG-BOUNDED from here on
     // consumed by split, pack, manifest
     val sel = Materialize.checkpoint(Select.tokenBudget(scored, "doc_id", "n_tokens",
       "mean_lift_ppm", budget = budget), eager = false)
-    if (through == "sel") return sel
     // 6. leak-free split on residual 5-shingle overlap of the selection
     val sh5 = docs.join(sel.select("doc_id"), "doc_id")
       .select(col("doc_id"),
@@ -316,7 +296,6 @@ object QueriesPipeline {
     // consumed by pack and manifest
     val spl = Materialize.checkpoint(Split.leakFree(sel.select("doc_id"), "doc_id", edges),
       eager = false)
-    if (through == "spl") return spl
     // 7. pack the train split into 512-token context windows
     val trainCounts = sel
       .join(spl.filter(col("split") === "train").select("doc_id"), "doc_id")
@@ -360,7 +339,7 @@ object QueriesPipeline {
   /** Exact-survivor reps of the history epoch: canon docs (the exact
     * index's survivors) → lossless prefix-filter pairs at the curate
     * threshold → connected components → min-id representatives. The
-    * [[curateThrough]] stage-3 shape over the epoch corpus. */
+    * [[curateManifest]] stage-3 shape over the epoch corpus. */
   private[graft] def epochReps(exactIndex: DataFrame, hist: DataFrame,
                                strategy: String = "auto"): DataFrame = {
     val canon = Materialize.checkpoint(hist.join(
@@ -381,7 +360,7 @@ object QueriesPipeline {
     * `canonical_id` is the doc downstream rewrites to (itself for
     * `lm_drop`/`new`). Each stage only sees the previous stage's
     * survivors, so the triage narrows as it proceeds (the
-    * [[curateThrough]] stage order). */
+    * [[curateManifest]] stage order). */
   private[graft] def nightVerdicts(lmModel: DataFrame, exactIndex: DataFrame,
                                    ndIndex: DataFrame, batch: DataFrame,
                                    keepPpm: Long = 35000000L): DataFrame = {
@@ -416,11 +395,11 @@ object QueriesPipeline {
   }
 
   /** The pinned-model BATCH RECOMPUTE the incremental DAG must equal
-    * (CurateIncrementalSpec): the [[curateThrough]] chain over
+    * (CurateIncrementalSpec): the [[curateManifest]] chain over
     * history ∪ batch with the LM and DSIR models trained on the
     * `histPred` epoch only — i.e. exactly what re-running the whole
     * corpus through the deployed (frozen) models computes. With
-    * histPred = lit(true) this IS curateThrough's lossless chain
+    * histPred = lit(true) this IS curateManifest's lossless chain
     * (apply(model(d), d) == train-and-score — the spec locks it). */
   private[graft] def curatePinnedBatch(docsAll0: DataFrame,
                                        histPred: org.apache.spark.sql.Column,
@@ -444,22 +423,18 @@ object QueriesPipeline {
       col("lang") === "en")
     val scored = LangModel.dsirApplyCounts(dsir, reps, "doc_id", "text")
       .select("doc_id", "n_tokens", "mean_lift_ppm")
-    manifestTail(docsAll, scored, "manifest", budget)
+    manifestTail(docsAll, scored, budget)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     "q_curate_e2e" -> ((s, d) => {
-      // SPARK_GRAFT_NEARDUP pins the near-dup pair generator for the
-      // SCALE A/B rows (lossless/pruned controls); Verify FAILS FAST
-      // if it is set (enforced, not a convention). The default is
-      // "auto" since r14: the measured-size rule picks lossless at
-      // verify/oracle scale (so the chained DuckDB oracle still
-      // checks the lossless chain) and pruned past
-      // AutoPrunedMinDocs — the ×32/×100 crossover the r13 A/B
-      // measured; CurateStrategySpec proves the strategies produce
-      // the identical manifest and pins both sides of the rule
-      val strat = sys.env.getOrElse("SPARK_GRAFT_NEARDUP", "auto")
+      // The near-dup pair generator runs the "auto" rule: lossless at
+      // verify/oracle scale (so the chained DuckDB oracle checks the
+      // lossless chain) and pruned past AutoPrunedMinDocs — the
+      // ×32/×100 crossover in SCALE_r16 curate_neardup_strategy_ab;
+      // CurateStrategySpec proves the strategies produce the
+      // identical manifest and pins both sides of the rule
       // SPARK_GRAFT_CURATE_BUDGET scales the stage-5 token budget with
       // the corpus in the SCALE ladder only (a fixed 12k budget empties
       // the manifest past ~×32, so the ×100 tier would exercise stages
@@ -480,7 +455,7 @@ object QueriesPipeline {
       // knob value applies the same rule to its own measured p90.
       val keepPpm = sys.env.get("SPARK_GRAFT_CURATE_KEEPPPM")
         .map(_.toLong).getOrElse(35000000L)
-      curateManifest(Tables(s, d).documents, strat, budget, keepPpm)
+      curateManifest(Tables(s, d).documents, budget = budget, keepPpm = keepPpm)
         .orderBy("doc_id")
     }),
 
@@ -643,7 +618,7 @@ object QueriesPipeline {
                 "doc_id", "text")
               .select("doc_id", "n_tokens", "mean_lift_ppm")
             manifestTail(docsAll(sp),
-              up("hist_scored").unionByName(scoredB), "manifest", incBudget)
+              up("hist_scored").unionByName(scoredB), incBudget)
           })))
       Targets.read(s, root, "manifest").orderBy("doc_id")
     }),

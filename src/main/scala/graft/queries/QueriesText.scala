@@ -600,7 +600,7 @@ object QueriesText {
       // function of the data that DuckDB replays with every loop
       // unrolled. The production config (assignCells defaults,
       // sampling ON past the ceiling) is certified structurally at
-      // 400k vectors by TwoLevelBench (SCALE_r10); THIS config proves
+      // 400k vectors (SCALE_r14 `two_level_kmeans_x200`); THIS config proves
       // the machinery's arithmetic bit-for-bit where an oracle can
       // reach it.
       graft.operators.Cluster.kmeansTwoLevel(Tables(s, d).embeddings,

@@ -60,7 +60,7 @@ class BloomPruneSpec extends AnyFunSuite {
   }
 
   test("shouldInject agrees with the measured payoff curve's sign at all three points") {
-    // BloomBench (x32, broadcast disabled) measured total-shuffle
+    // SCALE_r14 bloom_join_ab (x32, broadcast disabled) measured total-shuffle
     // ratios 0.104 / 0.418 / 1.023 at fact selectivities 0.10 / 0.40 /
     // 1.00 — wins at the first two, a pure-overhead loss at the third.
     // The heuristic must carry the same signs.

@@ -245,7 +245,7 @@ class EmptyInputSpec extends AnyFunSuite {
 
   test("round-2 operators tolerate empty inputs") {
     val emptyEdges = Seq.empty[(Long, Long)].toDF("c", "p")
-    assert(Hierarchy.ancestorsDoubling(emptyEdges, "c", "p").count() == 0)
+    assert(Hierarchy.ancestors(emptyEdges, "c", "p").count() == 0)
     assert(Hierarchy.ancestorArrays(
       Hierarchy.ancestors(emptyEdges, "c", "p")).count() == 0)
 
@@ -309,37 +309,11 @@ class DepthOpsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  test("ancestorsDoubling matches the linear walk on a chain") {
-    val edges = Seq((4L, 3L), (3L, 2L), (2L, 1L), (1L, 0L)).toDF("c", "p")
-    val lin = Hierarchy.ancestors(edges, "c", "p")
-      .as[(Long, Long, Int)].collect().toSet
-    val dbl = Hierarchy.ancestorsDoubling(edges, "c", "p")
-      .as[(Long, Long, Int)].collect().toSet
-    assert(dbl == lin)
-    assert(dbl.contains((4L, 0L, 4)))
-  }
-
-  test("ancestorsAdaptive: linear-phase-only, post-switch, and deep-chain all match the walk") {
-    // a 12-deep chain: switchDepth=4 forces the doubling flip (4
-    // linear rounds + ~2 doubling rounds); switchDepth=20 stays
-    // linear-only; both must equal the plain walk's closure exactly
-    val edges = (1L to 12L).map(i => (i, i - 1)).toDF("c", "p")
-    val lin = Hierarchy.ancestors(edges, "c", "p", maxDepth = 20)
-      .as[(Long, Long, Int)].collect().toSet
-    val flip = Hierarchy.ancestorsAdaptive(edges, "c", "p", maxDepth = 64, switchDepth = 4)
-      .as[(Long, Long, Int)].collect().toSet
-    val noFlip = Hierarchy.ancestorsAdaptive(edges, "c", "p", maxDepth = 64, switchDepth = 20)
-      .as[(Long, Long, Int)].collect().toSet
-    assert(flip == lin, "post-switch hybrid equals the linear walk")
-    assert(noFlip == lin, "shallow-phase hybrid equals the linear walk")
-    assert(flip.contains((12L, 0L, 12)))
-  }
-
-  test("ancestorsDoubling keeps MIN depth on a diamond DAG") {
+  test("ancestors keeps MIN depth on a diamond DAG") {
     // 3 -> {2a, 2b} -> 1 plus a shortcut 3 -> 1: min path length is 1
     val edges = Seq((3L, 21L), (3L, 22L), (21L, 1L), (22L, 1L), (3L, 1L))
       .toDF("c", "p")
-    val m = Hierarchy.ancestorsDoubling(edges, "c", "p")
+    val m = Hierarchy.ancestors(edges, "c", "p")
       .as[(Long, Long, Int)].collect().map(r => (r._1, r._2) -> r._3).toMap
     assert(m((3L, 1L)) == 1)
     assert(m((3L, 21L)) == 1 && m((21L, 1L)) == 1)
@@ -710,5 +684,50 @@ class CacheHygieneSpec extends AnyFunSuite {
       if banned.findFirstIn(line).isDefined
     } yield s"${root.relativize(p)}:${i + 1}: ${line.trim}"
     assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
+
+  test("src/main reads only the inventoried env vars, each from its own file") {
+    // Every engine knob, with the files that read it. A knob outside
+    // this list, or read from another file, fails here; so does an env
+    // read whose name is not a literal on its own line, which this
+    // audit could not see.
+    import scala.jdk.CollectionConverters._
+    val pipeline = "graft/queries/QueriesPipeline.scala"
+    val allowed = Map(
+      "SPARK_GRAFT_CPUS" -> Set("graft/GraftSession.scala"),
+      "SPARK_GRAFT_SHUFFLE_PARTITIONS" -> Set("graft/GraftSession.scala"),
+      "SPARK_GRAFT_STREAM_PARTITIONS" -> Set("graft/streaming/EventStream.scala"),
+      "SPARK_GRAFT_SF_DIR" -> Set("graft/Bench.scala"),
+      "SPARK_GRAFT_ITERS" -> Set("graft/Bench.scala"),
+      "SPARK_GRAFT_ONLY" -> Set("graft/Bench.scala"),
+      "SPARK_GRAFT_CURATE_BUDGET" -> Set(pipeline, "graft/Verify.scala"),
+      "SPARK_GRAFT_CURATE_KEEPPPM" -> Set(pipeline, "graft/Verify.scala"))
+    val envRead = """sys\.env|getenv|envOr(Else|None)""".r
+    val name = """"([A-Z][A-Z0-9_]*)"""".r
+    val root = java.nio.file.Paths.get(sys.props("user.dir"), "src", "main", "scala")
+    val lines = for {
+      p <- java.nio.file.Files.walk(root).iterator().asScala.toList
+      if p.toString.endsWith(".scala")
+      file = root.relativize(p).toString
+      (line, i) <- java.nio.file.Files.readAllLines(p).asScala.zipWithIndex
+      code = line.trim if !code.startsWith("//") && !code.startsWith("*") && !code.startsWith("/*")
+    } yield (file, i + 1, code)
+    val reads = lines.filter { case (_, _, code) => envRead.findFirstIn(code).isDefined }
+    val unnamed = reads.collect {
+      case (f, n, code) if name.findFirstIn(code).isEmpty => s"$f:$n: $code"
+    }
+    val knobs = lines.flatMap { case (f, n, code) =>
+      val names = name.findAllMatchIn(code).map(_.group(1)).toList
+      val read = envRead.findFirstIn(code).isDefined
+      names.filter(k => read || k.startsWith("SPARK_GRAFT_")).map(k => (k, f, s"$f:$n: $code"))
+    }
+    val offenders = unnamed ++ knobs.collect {
+      case (k, f, where) if !allowed.getOrElse(k, Set.empty[String])(f) => where
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+    // the inventory is exact: a knob that is no longer read leaves the list
+    val seen = knobs.map { case (k, f, _) => (k, f) }.toSet
+    val stale = for ((k, fs) <- allowed.toSeq; f <- fs if !seen((k, f))) yield s"$k in $f"
+    assert(stale.isEmpty, stale.mkString("stale inventory entries: ", ", ", ""))
   }
 }

@@ -668,6 +668,23 @@ class EntrySpec extends AnyFunSuite {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracles without queries: $missing")
   }
+
+  test("oracle_sql.json and _failed.json content round-trips through ObjectMapper") {
+    import scala.jdk.CollectionConverters._
+    val nasty = "SELECT '\"q\"', 'a\\b'\tFROM t\r\n-- \u0001 end"
+    val oracle = SparkEntry.oracleSql + ("q_nasty" -> nasty)
+    val failed = scala.collection.mutable.LinkedHashMap(
+      "q_nasty" -> s"RuntimeException: $nasty", "q_plain" -> "boom")
+    val dir = java.nio.file.Files.createTempDirectory("graft-json")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper
+    def readBack(name: String): Map[String, String] = mapper
+      .readValue(dir.resolve(name).toFile, classOf[java.util.Map[String, String]])
+      .asScala.toMap
+    Json.writeFile(s"$dir/oracle_sql.json", oracle)
+    Json.writeFile(s"$dir/_failed.json", failed)
+    assert(readBack("oracle_sql.json") == oracle)
+    assert(readBack("_failed.json") == failed.toMap)
+  }
 }
 
 class TokenizerSpec extends AnyFunSuite {

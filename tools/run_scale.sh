@@ -1,8 +1,7 @@
 #!/bin/bash
 # Round scale workflow: derive x10/x32/x100 corpora, bench the full
-# suite at x1/x10 and the scale-critical family at x32/x100, sweep the
-# shuffle-partitions knob on the array-growth queries, then assemble
-# AND GATE the report (tools/scale_report.py exits 1 on any
+# suite at x1/x10 and the scale-critical family at x32/x100, then
+# assemble AND GATE the report (tools/scale_report.py exits 1 on any
 # super-linear time growth, corpus-scaling broadcast build, or crashed
 # query that lacks a documented expected-growth model).
 #
@@ -100,8 +99,8 @@ bench full_x10.json target/scale/x10 SPARK_GRAFT_CURATE_BUDGET=$BUDGET_X10
 
 # core family x1/x10 are FILTERED from the full runs (same harness,
 # same numbers); x32/x100 run the family directly. x100 runs at
-# shuffle.partitions=128 — the deployment knob scales with data (the
-# partitions matrix below measures that knob in isolation).
+# shuffle.partitions=128 — the deployment knob scales with data
+# (SCALE_r14 partitions_matrix measured that knob in isolation).
 # r17 DELTA: the full_x1/x10 dumps are REUSED from the r16-session-2
 # campaign (identical code for those queries); the queries whose plans
 # changed this round (BFS merge-form, URL userinfo fold, SFT tie-break,
@@ -130,7 +129,7 @@ commit_tier scale_x10.json "x10 tier (full_x10 + r17 delta)"
 # (GraftSession scaladoc) scales partitions with data so per-task
 # state stays flat — the r8 testdata regeneration deepened the
 # ancestor-array workload enough that 32 partitions OOM a task at x32
-# (the partitions_matrix below measures that boundary directly).
+# (SCALE_r14 partitions_matrix measured that boundary directly).
 # x32 runs the family in the SAME fresh-JVM chunks as x100: r13
 # measured the single-JVM 51-query x32 run OOMing a task at the START
 # OF PASS 2 (q_ancestor_arrays, after a clean full first pass) — the
@@ -188,34 +187,13 @@ if qs:
               open('target/scale_x32.json', 'w'))
 EOF
 commit_tier scale_x32.json "x32 tier (9 fresh-JVM chunks)"
-# near-dup strategy A/B at x32 (VERDICT r11 #3; r14 adds the AUTO
-# default): scale_x32.json's q_curate_e2e row now runs the "auto"
-# strategy (160k docs > AutoPrunedMinDocs -> the rule must pick
-# pruned); these two pinned rows are the explicit controls either side
-# of it (output proven identical by CurateStrategySpec)
-bench curate_pruned_x32.json target/scale/x32 \
-  SPARK_GRAFT_ONLY=q_curate_e2e SPARK_GRAFT_NEARDUP=pruned \
-  SPARK_GRAFT_SHUFFLE_PARTITIONS=64 SPARK_GRAFT_STREAM_PARTITIONS=16 \
-  SPARK_GRAFT_CURATE_BUDGET=$BUDGET_X32
-bench curate_lossless_x32.json target/scale/x32 \
-  SPARK_GRAFT_ONLY=q_curate_e2e SPARK_GRAFT_NEARDUP=lossless \
-  SPARK_GRAFT_SHUFFLE_PARTITIONS=64 SPARK_GRAFT_STREAM_PARTITIONS=16 \
-  SPARK_GRAFT_CURATE_BUDGET=$BUDGET_X32
-# per-stage shuffle attribution for the crossover note (VERDICT r11 #2);
-# spill bytes ride every row (VERDICT r12 #5/#8)
-if [ ! -f target/curate_decomp_x32.json ]; then
-  echo "== curate decomp -> curate_decomp_x32.json"
-  env SPARK_GRAFT_SF_DIR=target/scale/x32 SPARK_GRAFT_DECOMP_TAG=x32 \
-    SPARK_GRAFT_SHUFFLE_PARTITIONS=64 SPARK_GRAFT_CURATE_BUDGET=$BUDGET_X32 \
-    sbt -batch "runMain graft.CurateDecomp" 2>&1 | grep -E '^\[decomp\]' || true
-fi
 # x100 runs the family in the same FOUR fresh-JVM chunks (r9: a
 # single-JVM x100 run wedges or OOMs by the second pass; r13: even a
 # 19-query chunk OOM'd once the corpus-scaled curate budget shared a
 # JVM with the stateful stream queries — c4 isolates it).
 # r16: c1 splits at x100 — q_ancestor_arrays OOM'd a task at p128
 # inside the 16-query c1 JVM (its per-task ancestor-array volume is
-# total/partitions; the partitions matrix below measures exactly this
+# total/partitions; SCALE_r14 partitions_matrix measured exactly this
 # boundary). It runs ALONE at p256, the knob's own measured relief
 # point; the other 15 queries keep the fleet-standard p128.
 bench scale_x100_c1a.json target/scale/x100 SPARK_GRAFT_ONLY=q_ancestor_arrays \
@@ -256,197 +234,6 @@ for pair in "8:$CHUNK_C8" "9:$CHUNK_C9" "2:$CHUNK_C2" "3:$CHUNK_C3" "4:$CHUNK_C4
     SPARK_GRAFT_CURATE_BUDGET=$BUDGET_X100 SPARK_GRAFT_CURATE_KEEPPPM=$KEEPPPM_X100
   merge_x100 "through chunk c$i"
 done
-# pruned-strategy x100 row (VERDICT r12 #4: the x32 A/B gets its x100
-# sibling, both strategies non-degenerate under the scaled budget);
-# r14 adds the lossless control since the main row now runs "auto"
-bench curate_pruned_x100.json target/scale/x100 \
-  SPARK_GRAFT_ONLY=q_curate_e2e SPARK_GRAFT_NEARDUP=pruned \
-  SPARK_GRAFT_SHUFFLE_PARTITIONS=128 SPARK_GRAFT_STREAM_PARTITIONS=32 \
-  SPARK_GRAFT_CURATE_BUDGET=$BUDGET_X100 SPARK_GRAFT_CURATE_KEEPPPM=$KEEPPPM_X100
-bench curate_lossless_x100.json target/scale/x100 \
-  SPARK_GRAFT_ONLY=q_curate_e2e SPARK_GRAFT_NEARDUP=lossless \
-  SPARK_GRAFT_SHUFFLE_PARTITIONS=128 SPARK_GRAFT_STREAM_PARTITIONS=32 \
-  SPARK_GRAFT_CURATE_BUDGET=$BUDGET_X100 SPARK_GRAFT_CURATE_KEEPPPM=$KEEPPPM_X100
-# (the per-chunk merge_x100 above already rebuilt + committed the tier)
-
-# r17: the A/B-stress extras below (closure strategies, as-of hot-key
-# suite incl. the x1000ev/x200emb corpus gens, IVF recall sweeps, bloom
-# A/B, incremental-history axis, partitions matrix) re-measure code
-# UNTOUCHED this round — their committed numbers live in SCALE_r16.
-# SPARK_GRAFT_SKIP_EXTRAS=1 skips them so the session budget goes to
-# the tier evidence the verdict flagged; run without the flag to
-# regenerate them (idempotent — existing dumps are reused).
-if [ -z "$SPARK_GRAFT_SKIP_EXTRAS" ]; then
-# closure-strategy A/B (VERDICT r8 next-round #5): the x100 linear-walk
-# run above is the control; re-run the two closure queries with the
-# doubling and adaptive strategies and let scale_report fold the
-# spill/wall comparison into the artifact — either outcome is the
-# measurement.
-for strat in doubling adaptive; do
-  bench closure_${strat}_x100.json target/scale/x100 \
-    SPARK_GRAFT_ONLY=q_ancestor_arrays,q_hierarchy \
-    SPARK_GRAFT_SHUFFLE_PARTITIONS=128 SPARK_GRAFT_CLOSURE=$strat
-done
-
-# as-of hot-key stress (VERDICT r8 next-round #7): 30% of the x10
-# events remapped onto ONE user (SkewGen), then the two as-of forms
-# measured against the uniform x10 control. AsOfJoinExec hash-clusters
-# by user, so AQE's skew split (SortMergeJoin-only) cannot help — this
-# MEASURES the documented hot-key limit instead of asserting it.
-if [ ! -d target/scale/x10skew ]; then
-  echo "== skewgen x10 (30% hot user)"
-  sbt -batch "runMain graft.SkewGen target/scale/x10 target/scale/x10skew 30" \
-    2>&1 | grep -E '^\[skewgen\]' || true
-fi
-bench asof_skew_x10.json target/scale/x10skew \
-  SPARK_GRAFT_ONLY=q_asof_plan,q_asof_backward
-
-# hot-key MITIGATION A/B on the same skew corpus: plain-keyed
-# q_asof_plan vs the range-split q_asof_split (oracle-checked
-# identical output) in one session — does splitting the hot user
-# across ~30 day-buckets shrink the straggler?
-bench asof_split_x10skew.json target/scale/x10skew \
-  SPARK_GRAFT_ONLY=q_asof_plan,q_asof_split
-
-# crossover sweep (VERDICT r9 next-round #3): at x10/30%-hot the
-# split LOSES (r9: 1.70 vs 0.99 s — the carry-rollup overhead exceeds
-# a ~0.5 s straggler). Raise the pressure until the straggler
-# dominates: hotter key (60/90% of events on ONE user) and a bigger
-# corpus (x32/60%). Both signs at every point are the measurement;
-# scale_report assembles the crossover table and the decision rule.
-for hot in 60 90; do
-  if [ ! -d target/scale/x10skew$hot ]; then
-    echo "== skewgen x10 ($hot% hot user)"
-    sbt -batch "runMain graft.SkewGen target/scale/x10 target/scale/x10skew$hot $hot" \
-      2>&1 | grep -E '^\[skewgen\]' || true
-  fi
-  bench asof_split_x10skew$hot.json target/scale/x10skew$hot \
-    SPARK_GRAFT_ONLY=q_asof_plan,q_asof_split
-done
-if [ ! -d target/scale/x32skew60 ]; then
-  echo "== skewgen x32 (60% hot user)"
-  sbt -batch "runMain graft.SkewGen target/scale/x32 target/scale/x32skew60 60" \
-    2>&1 | grep -E '^\[skewgen\]' || true
-fi
-bench asof_split_x32skew60.json target/scale/x32skew60 \
-  SPARK_GRAFT_ONLY=q_asof_plan,q_asof_split SPARK_GRAFT_SHUFFLE_PARTITIONS=64
-
-# the WINNING sign of the crossover: an events-only x1000 corpus
-# (100M rows) at 90% hot puts ~18M filtered rows on ONE key — the
-# plain form's wall becomes a single serial-scan straggler (measured
-# 32.7 vs the split's 15.7 s, with 4x lower peak task memory).
-# Events-only is deliberate: the as-of pair reads nothing else, and
-# ScaleGen's documents charPerms ceiling (432 bijections) doesn't
-# apply to a table-filtered run.
-if [ ! -d target/scale/x1000ev ]; then
-  echo "== scalegen x1000 (events only)"
-  sbt -batch "runMain graft.ScaleGen $SF target/scale/x1000ev 1000 events" \
-    2>&1 | grep -E '^\[scalegen\]' || true
-fi
-if [ ! -d target/scale/x1000skew90 ]; then
-  echo "== skewgen x1000 (90% hot user)"
-  sbt -batch "runMain graft.SkewGen target/scale/x1000ev target/scale/x1000skew90 90" \
-    2>&1 | grep -E '^\[skewgen\]' || true
-fi
-bench asof_split_x1000skew90.json target/scale/x1000skew90 \
-  SPARK_GRAFT_ONLY=q_asof_plan,q_asof_split SPARK_GRAFT_SHUFFLE_PARTITIONS=128
-
-# two-level k-means certification (VERDICT r9 next-round #2): a
-# 400k-vector corpus ABOVE the flat ceiling (4096 x 64 = 262k) —
-# embeddings replicated x200, every other table untouched. assignCells
-# must auto-escalate to kmeansTwoLevel and the full semantic-dedup
-# tail must complete with bounded cells.
-if [ ! -d target/scale/x200emb ]; then
-  echo "== scalegen x200 (embeddings only)"
-  sbt -batch "runMain graft.ScaleGen $SF target/scale/x200emb 200 embeddings" \
-    2>&1 | grep -E '^\[scalegen\]' || true
-fi
-if [ ! -f target/twolevel_x200.json ]; then
-  echo "== two-level kmeans -> twolevel_x200.json"
-  env SPARK_GRAFT_SF_DIR=target/scale/x200emb SPARK_GRAFT_TWOLEVEL_TAG=x200 \
-    sbt -batch "runMain graft.TwoLevelBench" 2>&1 | grep -E '^\[twolevel\]' || true
-fi
-
-# IVF recall-vs-cost where cost is REAL (VERDICT r10 next-round #3):
-# the 64k-vector curve was job-overhead-bound (cost-FLAT); re-sweep on
-# the 400k x200emb corpus where cell scans outweigh per-job overhead.
-# targetCellSize=128 keeps the derived nlist (3125) inside the flat
-# ceiling while still exercising the broadcast-join probe; k=250 sits
-# above the 199 verbatim ScaleGen copies per query (the same
-# k-above-copy-count rule the x32 sweep documents).
-if [ ! -f target/recall_x200.json ]; then
-  echo "== IVF recall sweep @400k -> recall_x200.json"
-  env SPARK_GRAFT_SF_DIR=target/scale/x200emb SPARK_GRAFT_RECALL_TAG=x200 \
-    SPARK_GRAFT_RECALL_CELL=128 SPARK_GRAFT_RECALL_K=250 \
-    sbt -batch "runMain graft.RecallBench" 2>&1 | grep -E '^\[recall\]' || true
-fi
-
-# incremental-dedup history axis (VERDICT r9 next-round #5): FIXED
-# batch, history x1/x10/x32 — the O(batch) claim measured directly
-# (wall ~flat; only the narrow (fp, min-id) index scales with history)
-if [ ! -f target/incremental_hist.json ]; then
-  echo "== incremental history axis -> incremental_hist.json"
-  sbt -batch "runMain graft.IncrementalBench" 2>&1 | grep -E '^\[inc\]' || true
-fi
-
-# IVF recall-vs-cost curve at scale (VERDICT r9 next-round #6):
-# x32 corpus (64k vectors), nlist derived by kForCorpus (1000 —
-# exercises the join-path probe), nprobe swept 1/2/4/8 against
-# brute-force truth computed in the same session
-if [ ! -f target/recall_x32.json ]; then
-  echo "== IVF recall sweep -> recall_x32.json"
-  env SPARK_GRAFT_SF_DIR=target/scale/x32 \
-    sbt -batch "runMain graft.RecallBench" 2>&1 | grep -E '^\[recall\]' || true
-fi
-
-# bloom-join A/B: fact shuffle-bytes with vs without the prune, on the
-# x32 corpus, broadcast disabled (the dim-too-big regime) — the
-# measurement BloomPrune.scala exists for.
-if [ ! -f target/bloom_x32.json ]; then
-  echo "== bloom A/B -> bloom_x32.json"
-  env SPARK_GRAFT_SF_DIR=target/scale/x32 SPARK_GRAFT_BLOOM_TAG=x32 \
-    sbt -batch "runMain graft.BloomBench" 2>&1 | grep -E '^\[bloom\]' || true
-fi
-
-# partitions knob, measured in isolation on the x32 corpus, default 8g
-# JVM, partitions 32 -> 128 -> 256: the two array-growth queries (whose
-# per-task ancestor-array volume is total/partitions), the global-sort
-# query (spill is sort-buffer/partitions), and the unique-key
-# countDistinct (partial-agg hash state is rows/partitions). peak mem
-# and spill must fall as partitions rise — the deployment knob, shown
-# rather than asserted. The sweep runs as TWO PAIRS per point merged
-# into one part_p$p.json: the r12 AND r13 campaigns both measured the
-# 4-heavy-query co-resident JVM OOMing at p32/p128 on pass 2 (all four
-# retain array/sort state at once — co-residency pressure, not the
-# knob; the same queries pass inside the mixed 16-query x32 chunks),
-# which left the matrix a single-point p256 row two rounds running.
-for p in 32 128 256; do
-  if [ ! -f target/part_p$p.json ]; then
-    bench part_p${p}_a.json target/scale/x32 \
-      SPARK_GRAFT_ONLY=q_ancestor_arrays,q_hierarchy \
-      SPARK_GRAFT_SHUFFLE_PARTITIONS=$p
-    bench part_p${p}_b.json target/scale/x32 \
-      SPARK_GRAFT_ONLY=q_observations,q_file_provenance \
-      SPARK_GRAFT_SHUFFLE_PARTITIONS=$p
-  fi
-  if [ ! -f target/part_p$p.json ]; then
-    python3 - <<EOF
-import json
-qs = {}
-for h in ('a', 'b'):
-    try:
-        qs.update(json.load(open(f'target/part_p${p}_{h}.json'))['queries'])
-    except FileNotFoundError:
-        pass
-if qs:
-    json.dump({"queries": qs, "sf": "target/scale/x32"},
-              open('target/part_p${p}.json', 'w'))
-EOF
-  fi
-done
-
-fi
-
 # assemble + gate LAST, then refuse success unless the merged artifact
 # at the repo root is NEWER than every dump it folds (the r11/r12
 # sequencing defect: the end-of-round snapshot committed while the

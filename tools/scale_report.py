@@ -9,9 +9,6 @@ ScaleGen-derived corpora, copied from target/bench_full.json):
   target/scale_x{1,10,32,100}.json   core scale-critical family
   target/scale2_x{1,10,32,100}.json  extended heavy/iterative set
   target/full_x{1,10}.json           the FULL query suite
-  target/part_p{32,128,256}.json     x32 corpus, q_ancestor_arrays +
-                                     q_hierarchy, shuffle.partitions
-                                     swept via SPARK_GRAFT_SHUFFLE_PARTITIONS
 
 For each query: seconds, shuffle-write bytes, peak task memory, spill,
 and (round 6+) the max broadcast build side (rows/bytes) at each
@@ -82,9 +79,9 @@ NOTES = {
         "same decimal-tree model as q_hierarchy (ancestor ARRAY per node: "
         "rows x depth both grow), expected ~depth-factor over linear. "
         "Round 5 carried a 'needs a 16 GiB JVM at 32 partitions' caveat; "
-        "the partitions_matrix sweep and the x100 tier IN THIS ARTIFACT'S "
-        "OWN queries dict retire it MEASURED: every sweep point and x100 "
-        "row completes on the default 8g heap — the external sorts SPILL "
+        "SCALE_r14's partitions_matrix sweep and the x100 tier IN THIS "
+        "ARTIFACT'S OWN queries dict retire it MEASURED: every sweep "
+        "point and x100 row completes on the default 8g heap — the external sorts SPILL "
         "instead of OOMing, wall-time is flat across the sweep, and under "
         "AQE the task-size knob is the advisory partition size (AQE "
         "re-coalesces whatever shuffle.partitions says), not the raw "
@@ -158,7 +155,7 @@ NOTES = {
         "past the pin they flip to merge joins — the same designed "
         "size-conditional crossover q_dedup_semantic/q_ngram_lm document. "
         "Post-flip growth is honest: x10->x32 is 1.36x over linear, the "
-        "residual being near-dup candidate-pair growth. The "
+        "residual being near-dup candidate-pair growth. The SCALE_r16 "
         "curate_neardup_strategy_ab decomposition (cumulative-prefix "
         "diffs) pins WHERE the x32 bytes live: the stage-3 pair "
         "GENERATION segment owns 5726 of 5758 MB (the prefix-filter "
@@ -172,14 +169,14 @@ NOTES = {
         "past AutoPrunedMinDocs (100k docs) — so the x32/x100 entries "
         "in the queries dict are the PRUNED profile by rule, with the "
         "explicit lossless/pruned controls and the auto adjudication "
-        "in curate_neardup_strategy_ab."),
+        "in SCALE_r16 curate_neardup_strategy_ab."),
     "q_ingest_night": (
         "the nightly-ingest DAG (persisted fingerprint index -> verdicts "
         "-> refreshed index) WRITES its three stages as parquet targets — "
         "wall includes real table writes, and shuffle carries only the "
         "narrow (fp, min-id) index, so growth is linear-in-index and "
         "sublinear in wall (x10 at 0.22-of-linear). The history axis "
-        "(incremental_dedup_history_axis) is the operator's real "
+        "(SCALE_r16 incremental_dedup_history_axis) is the operator's real "
         "measurement: fixed batch, indexed wall exponent ~0."),
     "q_approx_distinct": (
         "the CERTIFIED plan: next to the HLL sketches it carries exact "
@@ -209,7 +206,7 @@ NOTES = {
         "the measured certification cost."),
     "q_ingest_neardup": (
         "the nightly near-dup ingest DAG on a 70/30 split of the SCALED "
-        "corpus: unlike the IncrementalBench neardup axis (fixed batch, "
+        "corpus: unlike the history axis's neardup rows (fixed batch, "
         "growing history — the operator's O(batch) measurement), here "
         "batch AND history both scale with the factor, and candidate "
         "volume additionally tracks the corpus's near-dup pair density "
@@ -217,7 +214,7 @@ NOTES = {
         "per stratum), so modestly super-linear wall at the top factor "
         "is the expected model, not index drift. Wall also includes the "
         "DAG's three real parquet target writes (the q_ingest_night "
-        "model). The O(batch) claim is certified by "
+        "model). The O(batch) claim is certified by SCALE_r16 "
         "incremental_dedup_history_axis's neardup_indexed_* rows."),
     "q_token_bpe_dist": (
         "each of the 30 merge rounds is one map-side-combined pair-count "
@@ -260,8 +257,8 @@ FULL_NOTES = {
         "pre-aggregation gets zero reduction, so the aggregation hash "
         "state is the full row count spread over however many tasks AQE "
         "actually schedules (cache-miss growth makes measured wall "
-        "super-linear). The partitions_matrix sweeps this query 32->256: "
-        "wall-time is FLAT (~22-24 s at x32) and the 8g heap holds at "
+        "super-linear). SCALE_r14's partitions_matrix swept this query "
+        "32->256: wall-time is FLAT (~22-24 s at x32) and the 8g heap holds at "
         "every setting — hash aggregation spills; at 100 TB "
         "approx_count_distinct is the stated alternative "
         "(q_approx_distinct)."),
@@ -403,8 +400,8 @@ def main(out_path):
         "config_note": (
             "x1/x10 run at the default shuffle.partitions=32; x32 at 64 and "
             "x100 at 128 (SPARK_GRAFT_SHUFFLE_PARTITIONS) — scaling "
-            "partitions with data is the deployment contract, measured in "
-            "isolation by partitions_matrix. Streaming runners likewise "
+            "partitions with data is the deployment contract. Streaming "
+            "runners likewise "
             "scale their stateful-shuffle width (4/16/32 via "
             "SPARK_GRAFT_STREAM_PARTITIONS). All runs: local[32], 8g "
             "driver JVM."),
@@ -500,272 +497,6 @@ def main(out_path):
             "total_x1_sec": round(sum(v["x1_sec"] for v in sec.values()), 1),
             "total_x10_sec": round(sum(v["x10_sec"] for v in sec.values()), 1),
         }
-
-    # ---- bloom-join A/B (x32 corpus, broadcast disabled) ----
-    if os.path.exists("target/bloom_x32.json"):
-        with open("target/bloom_x32.json") as fh:
-            report["bloom_join_ab"] = json.load(fh)
-
-    # ---- closure-strategy A/B (x100 corpus) ----
-    # control = the linear-walk entries in the x100 core run; doubling/
-    # adaptive re-run just the closure queries with SPARK_GRAFT_CLOSURE
-    closure = {}
-    for strat in ("doubling", "adaptive"):
-        path = f"target/closure_{strat}_x100.json"
-        if os.path.exists(path):
-            with open(path) as fh:
-                closure[strat] = json.load(fh)["queries"]
-    if closure and runs.get(100):
-        ab = {}
-        for q in ("q_ancestor_arrays", "q_hierarchy"):
-            if q not in runs[100]:
-                continue
-            ab[q] = {"linear": entry_at(runs[100][q])}
-            for strat, data in closure.items():
-                if q in data:
-                    ab[q][strat] = entry_at(data[q])
-        report["closure_strategy_ab_x100"] = {
-            "note": (
-                "Same x100 corpus and partitioning; only the closure "
-                "strategy differs (linear frontier walk vs path doubling vs "
-                "the adaptive hybrid that flips to doubling past depth 4). "
-                "The question on the table (VERDICT r8 #5): does doubling "
-                "cut the linear walk's external-sort spill at this depth, "
-                "or does shuffling the whole closure per round cost more "
-                "than the saved rounds? Both outcomes are evidence; the "
-                "numbers decide."),
-            "queries": ab}
-
-    # ---- as-of hot-key stress (x10 corpus, 30% single-user skew) ----
-    if os.path.exists("target/asof_skew_x10.json") and full.get(10):
-        with open("target/asof_skew_x10.json") as fh:
-            skew = json.load(fh)["queries"]
-        ab = {}
-        for q in ("q_asof_plan", "q_asof_backward"):
-            if q in skew and q in full[10]:
-                ab[q] = {"uniform_x10": entry_at(full[10][q]),
-                         "skew30_x10": entry_at(skew[q])}
-        report["asof_hot_key_stress_x10"] = {
-            "note": (
-                "SkewGen remapped 30% of the x10 events onto ONE user (row "
-                "count and all other columns unchanged; uniform_x10 is the "
-                "exact control). Both as-of forms key their heavy op by "
-                "user — AsOfJoinExec via HashClusteredDistribution, the "
-                "window form via partitionBy — so the hot user rides one "
-                "task and AQE's skew-join split (SortMergeJoin-only) "
-                "cannot rebalance it. This MEASURES the documented limit "
-                "(SURVEY: range-split by time upstream for hot keys): "
-                "expect wall-time dominated by the straggler task and "
-                "peak_task_mem/spill concentrated in it."),
-            "queries": ab}
-
-    # ---- as-of hot-key MITIGATION A/B (same skew corpus) ----
-    # optional: present once q_asof_split (backwardRangeSplit) has been
-    # benched on the skew corpus next to the plain-keyed q_asof_plan
-    if os.path.exists("target/asof_split_x10skew.json"):
-        with open("target/asof_split_x10skew.json") as fh:
-            sp = json.load(fh)["queries"]
-        ab = {q: entry_at(sp[q]) for q in ("q_asof_plan", "q_asof_split") if q in sp}
-        if len(ab) == 2:
-            report["asof_hot_key_mitigation_x10"] = {
-                "note": (
-                    "The mitigation the stress row above motivates, shipped and "
-                    "measured on the SAME 30%-hot-user corpus in the SAME bench "
-                    "session: q_asof_split runs AsOfJoin.backwardRangeSplit — "
-                    "shuffle key (user, day-bucket) instead of user, cross-"
-                    "bucket LOCF restored by a per-(user, bucket) carry rollup "
-                    "— and is oracle-checked identical to q_asof_plan's output. "
-                    "The hot user splits across ~30 day-buckets, so the "
-                    "straggler task and its peak_task_mem concentration should "
-                    "drop; the extra rollup+carry join is the price. Either "
-                    "sign is the measurement."),
-                "queries": ab}
-
-    # ---- as-of range-split CROSSOVER sweep (r9 #3) ----
-    # pressure raised until the straggler dominates: x10 at 30/60/90%
-    # hot, x32 at 60%, and an events-only x1000 corpus at 90% (the
-    # small points all show the split LOSING by a ~1 s constant: a
-    # <=2M-row hot key's serial ordered scan costs ~1 s — under the
-    # carry-rollup's overhead — so the flip needs an ~18M-row hot key)
-    xover = {}
-    for label, path in (("x10_hot30", "target/asof_split_x10skew.json"),
-                        ("x10_hot60", "target/asof_split_x10skew60.json"),
-                        ("x10_hot90", "target/asof_split_x10skew90.json"),
-                        ("x32_hot60", "target/asof_split_x32skew60.json"),
-                        ("x1000ev_hot90", "target/asof_split_x1000skew90.json")):
-        if os.path.exists(path):
-            with open(path) as fh:
-                qs = json.load(fh)["queries"]
-            if all(q in qs and qs[q]["sec"] >= 0
-                   for q in ("q_asof_plan", "q_asof_split")):
-                xover[label] = {
-                    "plain_sec": round(qs["q_asof_plan"]["sec"], 3),
-                    "split_sec": round(qs["q_asof_split"]["sec"], 3),
-                    "plain_peak_task_mem": qs["q_asof_plan"].get("peak_task_mem", 0),
-                    "split_peak_task_mem": qs["q_asof_split"].get("peak_task_mem", 0),
-                    "split_wins": qs["q_asof_split"]["sec"] < qs["q_asof_plan"]["sec"]}
-    if xover:
-        report["asof_range_split_crossover"] = {
-            "note": (
-                "q_asof_plan (hash-clustered by user — the hot key rides one "
-                "task) vs q_asof_split (shuffle key (user, day-bucket) + "
-                "carry rollup, oracle-identical output) as hot-key share and "
-                "corpus grow. BOTH SIGNS MEASURED: at <=2M hot rows the "
-                "split LOSES by ~1 s (the hot key's serial ordered scan "
-                "costs under a second — less than the composite shuffle + "
-                "carry rollup it buys out of), and at 90M hot rows "
-                "(x1000ev_hot90: 18M hot clicks after the type filter) the "
-                "split WINS 2.1x — the plain form's wall is one task "
-                "serially scanning the hot key while 127 sit idle. The "
-                "decision rule pinned in AsOfJoin.scala's backwardRangeSplit "
-                "scaladoc comes from this table: split when the hot key's "
-                "rows exceed a few times the job's average rows-per-task "
-                "(measured flip between 2M and 18M hot rows on 32 cores; "
-                "~0.8 us/row serial scan vs ~1 s fixed overhead), with "
-                "bucketWidth ~ timeRange / (2-4x parallelism)."),
-            "points": xover}
-
-    # ---- curation near-dup strategy A/B + stage decomposition (r11 #2/#3) ----
-    # control = scale_x32.json's q_curate_e2e (lossless prefix filter);
-    # pruned = the minhash-pruned generator, CurateStrategySpec-proven to
-    # produce the identical manifest; decomp attributes the x32 shuffle
-    # to stages via cumulative-prefix diffs (CurateDecomp).
-    curate_ab = {}
-    for factor in (32, 100):
-        # the main chunk row runs the r14 AUTO strategy (no env pin):
-        # past AutoPrunedMinDocs the rule must land on pruned — the
-        # explicit lossless/pruned control rows flank it
-        if runs.get(factor) and "q_curate_e2e" in runs[factor]:
-            curate_ab[f"auto_x{factor}"] = entry_at(runs[factor]["q_curate_e2e"])
-        for strat in ("pruned", "lossless"):
-            path = f"target/curate_{strat}_x{factor}.json"
-            if os.path.exists(path):
-                with open(path) as fh:
-                    pq = json.load(fh)["queries"]
-                if "q_curate_e2e" in pq and pq["q_curate_e2e"]["sec"] >= 0:
-                    curate_ab[f"{strat}_x{factor}"] = entry_at(pq["q_curate_e2e"])
-        # mechanical adjudication of what auto picked: identical
-        # manifest row count on all rows, and auto's shuffle profile
-        # matching one control far better than the other
-        a = curate_ab.get(f"auto_x{factor}")
-        p = curate_ab.get(f"pruned_x{factor}")
-        l = curate_ab.get(f"lossless_x{factor}")
-        if a and p and l:
-            curate_ab[f"auto_adjudication_x{factor}"] = {
-                "out_rows_identical_across_strategies":
-                    a["out_rows"] == p["out_rows"] == l["out_rows"],
-                "auto_shuffle_ratio_vs_pruned": round(
-                    a["shuffle_write"] / max(1, p["shuffle_write"]), 3),
-                "auto_shuffle_ratio_vs_lossless": round(
-                    a["shuffle_write"] / max(1, l["shuffle_write"]), 3),
-                "auto_picked": ("pruned" if abs(a["shuffle_write"] - p["shuffle_write"])
-                                < abs(a["shuffle_write"] - l["shuffle_write"])
-                                else "lossless")}
-    if os.path.exists("target/curate_decomp_x32.json"):
-        with open("target/curate_decomp_x32.json") as fh:
-            curate_ab["stage_decomposition"] = json.load(fh)
-    if curate_ab:
-        report["curate_neardup_strategy_ab"] = {
-            "r14_auto_note": (
-                "Since r14 the UN-PINNED q_curate_e2e rows (auto_x*) run "
-                "nearDupStrategy=auto: the measured post-exact-dedup doc "
-                "count picks lossless below AutoPrunedMinDocs (100k) and "
-                "pruned above it. auto_adjudication_x* verifies "
-                "mechanically that auto landed on the pruned profile at "
-                "x32/x100 with the identical manifest row count."),
-            "note": (
-                "q_curate_e2e with nearDupStrategy=pruned (MinHash 32x16 "
-                "banding prunes candidates, exact raw-string Jaccard "
-                "re-scores — CurateStrategySpec proves the manifest is "
-                "IDENTICAL to the lossless prefix filter's on the test "
-                "corpus) vs the lossless control on the same x32 corpus "
-                "and partitioning. The 100 TB claim under test: banding "
-                "shuffles a fixed-width signature instead of every doc's "
-                "rarest (1-tau)*s prefix shingles, so the pair-generation "
-                "bucket shuffle should shrink while wall holds. "
-                "stage_decomposition attributes the chain's shuffle to "
-                "stage segments (start->pairs = LM gate + exact dedup + "
-                "pair generation; pairs->sel = components + DSIR + token "
-                "budget; sel->spl = 5-shingle split edges; spl->manifest "
-                "= packing + manifest joins); its pruned_pairs row "
-                "isolates the generator swap. Each row carries SPILL "
-                "bytes next to shuffle: the lossless chain's x32 spill "
-                "(~25 GB in r12) is pinned to the stage-3 pair "
-                "generation — exactly the segment the pruned generator "
-                "removes. x100 rows run under the corpus-scaled token "
-                "budget (SPARK_GRAFT_CURATE_BUDGET — r12's fixed 12k "
-                "budget emptied the x100 manifest, leaving the "
-                "config-bounded tail degenerate; Verify fails fast if "
-                "the knob is set, so the oracle still checks the "
-                "default)."),
-            **curate_ab}
-
-    # ---- two-level k-means certification (r9 #2) ----
-    if os.path.exists("target/twolevel_x200.json"):
-        with open("target/twolevel_x200.json") as fh:
-            report["two_level_kmeans_x200"] = json.load(fh)
-
-    # ---- incremental-dedup history axis (r9 #5) ----
-    if os.path.exists("target/incremental_hist.json"):
-        with open("target/incremental_hist.json") as fh:
-            report["incremental_dedup_history_axis"] = json.load(fh)
-
-    # ---- IVF recall-vs-cost curve (r9 #6; r10 #3 re-sweeps at 400k
-    # vectors where probe cost is not job-overhead-bound) ----
-    for tag in ("x32", "x200"):
-        if os.path.exists(f"target/recall_{tag}.json"):
-            with open(f"target/recall_{tag}.json") as fh:
-                report[f"ivf_recall_curve_{tag}"] = json.load(fh)
-
-    # ---- partitions matrix (x32 corpus, 8g JVM, partitions swept) ----
-    sweep = (32, 128, 256)
-    parts = {}
-    for p in sweep:
-        path = f"target/part_p{p}.json"
-        if os.path.exists(path):
-            with open(path) as fh:
-                parts[p] = json.load(fh)["queries"]
-    if parts:
-        pm = {}
-        names = sorted({q for v in parts.values() for q in v})
-        for q in names:
-            pm[q] = {}
-            for p in sweep:
-                if p in parts and q in parts[p] and parts[p][q]["sec"] >= 0:
-                    pm[q][f"p{p}"] = {
-                        "sec": round(parts[p][q]["sec"], 3),
-                        "peak_task_mem": parts[p][q].get("peak_task_mem", 0),
-                        "spill": parts[p][q].get("spill", 0)}
-                else:
-                    # the sweep point itself failed — at p=32 on the x32
-                    # corpus under the default 8g heap that IS the
-                    # measurement (the caveat the bigger settings remove)
-                    pm[q][f"p{p}"] = "failed_or_no_dump (OOM at this partitioning?)"
-        report["partitions_matrix"] = {
-            "corpus": "x32", "jvm": "8g driver heap throughout",
-            "note": (
-                "MEASURED CONCLUSION: every sweep point (32/128/256 "
-                "initial shuffle partitions) completes on the default 8g "
-                "heap with flat wall-time (external sort/aggregation "
-                "SPILLS instead of OOMing; spill bytes are in each "
-                "cell). CAVEAT measured this round: the margin at p32 is "
-                "thin — the FULL 30-query x32 suite in one JVM hit one "
-                "q_ancestor_arrays task OOM at p32 (suite-accumulated "
-                "heap pressure the 4-query sweep doesn't reproduce), "
-                "which is why the x32 tier now runs at 64 partitions "
-                "(the partitions-scale-with-data contract) and the bench "
-                "rebuilds its session after a context-stopping failure. "
-                "peak_task_mem does NOT fall with the raw partition "
-                "count because AQE re-coalesces shuffle partitions to "
-                "its advisory target size — under AQE the "
-                "per-task-memory knob is advisoryPartitionSizeInBytes, "
-                "and the raw count only sets the pre-coalesce "
-                "granularity. The at-scale evidence for the deployment "
-                "config is THIS artifact's own x100 tier (128 initial "
-                "partitions, 8g heap, fresh-JVM chunks): see the x100 "
-                "entries in the queries dict — the missing-factor gate "
-                "fails the report if that tier did not run."),
-            "queries": pm}
 
     report["verdict"] = {
         "worst_time_growth_vs_linear": {"query": worst[0], "ratio": worst[1]},
