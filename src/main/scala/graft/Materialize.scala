@@ -1,9 +1,13 @@
 package graft
 
+import java.util.concurrent.TimeoutException
+
 import scala.collection.mutable.ArrayBuffer
+import scala.concurrent.Await
+import scala.concurrent.duration._
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, GraftBridge}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftBridge, Observation, Row}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
@@ -22,9 +26,20 @@ import org.apache.spark.storage.StorageLevel
   * the unscoped [[checkpoint]] and is reaped by the ContextCleaner
   * once unreferenced — so an operator that ends in an unscoped eager
   * checkpoint leaves exactly its result's blocks behind.
+  *
+  * Observed checkpoints: an iterative operator that needs a scalar of
+  * each step (a max to normalize by, a fingerprint to test convergence,
+  * a row count to size by) takes it from the step's own eager
+  * checkpoint job through [[Scope.checkpointObserved]] — the metrics
+  * ride that job as a `Dataset.observe`, so the scalar costs no second
+  * action (under AQE every action is at least one more job).
   */
 object Materialize {
   private val Level = StorageLevel.MEMORY_AND_DISK
+
+  /** How long [[Scope.checkpointObserved]] waits for its metrics row
+    * once the checkpoint job has finished. */
+  private val ObservedWait: FiniteDuration = 60.seconds
 
   /** The frames one [[scoped]] block materialized. */
   final class Scope private[Materialize] () {
@@ -44,6 +59,24 @@ object Materialize {
       val cp = Materialize.checkpoint(df, eager)
       checkpoints ++= reads(cp)
       cp
+    }
+
+    /** Eager [[checkpoint]] of `df` that also returns `metrics`,
+      * aggregates over its rows computed by the same job. The row
+      * arrives from Spark's listener bus after the job; `op` names the
+      * caller in the failure raised when none arrives within
+      * [[ObservedWait]]. An empty frame yields a row too (`count` 0,
+      * `max` null, an empty `collect_set`). */
+    def checkpointObserved(df: DataFrame, op: String, metrics: Column*): (DataFrame, Row) = {
+      val obs = Observation()
+      val cp = checkpoint(df.observe(obs, metrics.head, metrics.tail: _*))
+      val row =
+        try Await.result(obs.future, ObservedWait)
+        catch {
+          case _: TimeoutException => throw new IllegalStateException(
+            s"$op: no observed metrics arrived within $ObservedWait of its checkpoint job")
+        }
+      (cp, row)
     }
 
     /** Release `df`, cached or checkpointed through this scope,

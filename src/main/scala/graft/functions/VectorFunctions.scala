@@ -216,8 +216,6 @@ object VectorFunctions {
     aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, v) => acc + v)
 
-  def normHof(a: Column): Column = sqrt(dotHof(a, a))
-
   /** Builtin-HOF exact long dot product — ANSI-expressible form that
     * [[graft.plans.VecDotRewrite]] rewrites to native [[LongVecDot]]. */
   def dotHofLong(a: Column, b: Column): Column =

@@ -213,7 +213,7 @@ object Cleaning {
   /** Steps 1–2 of [[extractHtml]], shared with [[extractMainContent]]
     * (which must drop script/style/comments BEFORE block-splitting —
     * a script body containing a block tag would otherwise split). */
-  private def stripScriptStyleComment(html: Column): Column = {
+  private[graft] def stripScriptStyleComment(html: Column): Column = {
     val noScript = regexp_replace(html, "(?is)<script\\b[^>]*>.*?</script>", " ")
     val noStyle = regexp_replace(noScript, "(?is)<style\\b[^>]*>.*?</style>", " ")
     regexp_replace(noStyle, "(?s)<!--.*?-->", " ")
@@ -333,30 +333,6 @@ object Cleaning {
         .as("main_text"),
       mcb.getField("n_blocks").as("n_blocks"),
       mcb.getField("n_kept").as("n_kept"))
-  }
-
-  /** The original HOF/regex formulation of [[extractMainContent]]
-    * (block split + per-block regex scoring — 5 regex scans per
-    * block). Kept as the spec reference the native
-    * [[graft.functions.MainContentBlocksExpr]] is pinned against
-    * (CleaningExprSpec) and as the shape the SQL oracle replays. */
-  private[graft] def extractMainContentHof(html: Column, minTextChars: Int = 30,
-                                           maxLinkPct: Int = 33): Column = {
-    val blocks = split(stripScriptStyleComment(html), BlockTagSplit)
-    def cleanOf(b: Column): Column =
-      trim(regexp_replace(regexp_replace(b, "(?s)<[^>]*>", " "), WsClass, " "))
-    val scored = transform(blocks, b => {
-      val clean = cleanOf(b)
-      val noAnchor = cleanOf(regexp_replace(b, "(?is)<a\\b[^>]*>.*?</a>", " "))
-      struct(clean.as("t"), (length(clean) - length(noAnchor)).as("lc"))
-    })
-    val kept = filter(scored, s =>
-      length(s("t")) >= minTextChars &&
-        s("lc") * 100 <= length(s("t")) * maxLinkPct)
-    val joined = array_join(transform(kept, s => s("t")), " ")
-    struct(
-      trim(regexp_replace(decodeEntitiesChain(joined), WsClass, " ")).as("main_text"),
-      size(blocks).as("n_blocks"), size(kept).as("n_kept"))
   }
 
   /** The block-tag split pattern (step 2 of [[extractMainContent]]) —

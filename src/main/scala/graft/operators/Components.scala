@@ -20,13 +20,16 @@ import org.apache.spark.sql.functions._
   * weakly-chained collision graphs. Each star step is one
   * neighborhood aggregation + one join, both bounded by |E|.
   *
-  * Every intermediate is checkpointed: the edge plan (often a
-  * deep candidate-generation pipeline) would otherwise be embedded
+  * Every edge-set intermediate is checkpointed: the edge plan (often
+  * a deep candidate-generation pipeline) would otherwise be embedded
   * once per round in a growing logical tree — at high diameter the
   * plan STRING alone OOMs the driver (found by the differential
   * fuzz; AQE renders the plan on every update). LogicalRDD leaves
   * keep every round's plan O(1); the intermediates are released when
-  * the call returns, leaving only the result's checkpoint.
+  * the call returns, leaving only the result's checkpoint. The
+  * convergence fingerprint of each round is observed on that round's
+  * small-star checkpoint job, so a round is its checkpoints and no
+  * further action.
   */
 object Components {
 
@@ -63,45 +66,43 @@ object Components {
       .distinct()
   }
 
-  /** Order-independent fingerprint of a canonical distinct edge set:
-    * (count, XOR of per-edge xxhash64 — commutative, no overflow under
-    * ANSI). One narrow partial-agg pass — no extra shuffle — vs the
-    * full `except` shuffle set-equality needs. Equal fingerprints on
-    * two distinct canonical sets imply equality up to a 64-bit
-    * collision (vanishing at any |E|, and a false "stable" here still
-    * leaves a valid though unconverged labeling that the maxIter
-    * warning path would also leave). */
-  private def fingerprint(e: DataFrame): (Long, Long) = {
-    val r = e.agg(count(lit(1)), bit_xor(xxhash64(col("src"), col("dst")))).head()
-    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-  }
-
   /** @param edges (id_a, id_b) undirected pairs
     * @return (node, component) — component = min node id reachable */
   def connectedComponents(edges: DataFrame, aCol: String = "id_a",
                           bCol: String = "id_b", maxIter: Int = 15): DataFrame = {
     Materialize.scoped { s =>
+      // checkpoint a canonical distinct edge set with its order-independent
+      // fingerprint observed on the same job: (count, XOR of per-edge
+      // xxhash64 — commutative, no overflow under ANSI). Equal
+      // fingerprints on two such sets imply equality up to a 64-bit
+      // collision (vanishing at any |E|, and a false "stable" still
+      // leaves a valid though unconverged labeling, as maxIter would)
+      def observed(e: DataFrame): (DataFrame, (Long, Long)) = {
+        val (cp, r) = s.checkpointObserved(e, "connectedComponents",
+          count(lit(1)), bit_xor(xxhash64(col("src"), col("dst"))))
+        (cp, (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1)))
+      }
       val input = s.checkpoint(edges.select(col(aCol).as("src"), col(bCol).as("dst")))
       // every endpoint must appear in the result, including self-loop-only
-      // and about-to-be-contracted nodes
-      val nodes = s.checkpoint(sym(input).select(col("src").as("node")).distinct())
-      var cur = s.checkpoint(input.filter(col("src") =!= col("dst"))
+      // and about-to-be-contracted nodes; derived from the input's
+      // checkpoint inside the final plan
+      val nodes = sym(input).select(col("src").as("node")).distinct()
+      var (cur, curSig) = observed(input.filter(col("src") =!= col("dst"))
         .select(greatest(col("src"), col("dst")).as("src"),
           least(col("src"), col("dst")).as("dst"))
         .distinct())
 
       var i = 0
-      var curSig = fingerprint(cur)
       var stable = curSig._1 == 0L
       while (i < maxIter && !stable) {
         // checkpoint between the stars too: smallStar references its
         // input ~4x (sym twice, nbrMin, join probe) and would otherwise
         // re-evaluate the large-star join per reference
-        val next = s.checkpoint(smallStar(s.checkpoint(largeStar(cur))))
+        val (next, nextSig) = observed(smallStar(s.checkpoint(largeStar(cur))))
         // both sides are canonically-oriented distinct sets, so equal
-        // fingerprints mean a fixpoint — one agg per round instead of
-        // count + except (which doubles per-round cost at large |E|)
-        val nextSig = fingerprint(next)
+        // fingerprints mean a fixpoint — observed on the checkpoints
+        // instead of count + except (which doubles per-round cost at
+        // large |E|)
         stable = nextSig == curSig
         cur = next
         curSig = nextSig

@@ -436,8 +436,9 @@ object Dedup {
     * bucket exceeds the cap this throws with the measured size instead
     * of returning an incomplete pair set (remedies: raise τ so
     * prefixes shrink, raise maxBucket, or pre-dedup the exact-dup spam
-    * cluster the bucket is). The gate costs one (shingle)-keyed count —
-    * the same shuffle shape the pair generator itself runs. */
+    * cluster the bucket is). The gate costs no action of its own: the
+    * largest bucket's size is observed on the buckets' checkpoint job,
+    * before any pair is generated. */
   def prefixFilterJaccard(df: DataFrame, idCol: String, textCol: String,
                           shingleN: Int = 3, threshold: Double = 0.5,
                           maxBucket: Int = 10000): DataFrame = {
@@ -481,11 +482,13 @@ object Dedup {
       // ONE (shingle)-keyed shuffle serves the completeness gate, the
       // in-bucket pair generation AND the length filter: buckets carry
       // (id, set size) structs, sorted by id (ids are unique, so the
-      // struct sort IS the id sort)
-      val buckets = s.cache(prefix.groupBy("__g")
+      // struct sort IS the id sort); the largest bucket's size is
+      // observed on the buckets' checkpoint job
+      val (buckets, largest) = s.checkpointObserved(prefix.groupBy("__g")
         .agg(sort_array(collect_set(struct(col(idCol).as("id"), col("__s").as("s")))).as("ids"))
-        .filter(size(col("ids")) >= 2))
-      val biggest = buckets.agg(coalesce(max(size(col("ids"))), lit(0))).head().getInt(0)
+        .filter(size(col("ids")) >= 2),
+        "prefixFilterJaccard", max(size(col("ids"))))
+      val biggest = if (largest.isNullAt(0)) 0 else largest.getInt(0)
       if (biggest > maxBucket)
         throw new IllegalStateException(
           s"prefixFilterJaccard: largest prefix bucket has $biggest docs > maxBucket=$maxBucket; " +
@@ -581,11 +584,12 @@ object Dedup {
         .withColumn("__rk", row_number().over(w))
         .withColumn("__p",
           expr(s"__rk <= __s - ((__s * ${tPpm}L + 999999) div 1000000) + 1"))
-      val buckets = s.cache(flagged.groupBy("__g")
+      val (buckets, largest) = s.checkpointObserved(flagged.groupBy("__g")
         .agg(sort_array(collect_set(struct(col(idCol).as("id"),
           col("__s").as("s"), col("__p").as("p")))).as("ids"))
-        .filter(size(col("ids")) >= 2))
-      val biggest = buckets.agg(coalesce(max(size(col("ids"))), lit(0))).head().getInt(0)
+        .filter(size(col("ids")) >= 2),
+        "containmentPairs", max(size(col("ids"))))
+      val biggest = if (largest.isNullAt(0)) 0 else largest.getInt(0)
       if (biggest > maxBucket)
         throw new IllegalStateException(
           s"containmentPairs: largest shingle bucket has $biggest docs > maxBucket=$maxBucket; " +

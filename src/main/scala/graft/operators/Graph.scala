@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Materialize
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Link-graph centrality (r15, VERDICT r14 next-round #4): crawl
@@ -148,16 +148,16 @@ object Graph {
     * edge list persists TWICE — pre-partitioned and sorted on src and
     * on dst (the GraphX mirror-table trade), so the h→a and a→h
     * sort-merge joins re-exchange no O(E) frame; per iteration only
-    * the two map-side-combined contribution sums and two 1-row max
-    * aggregates (broadcast as constants) move. Below the pin the rank
-    * frames broadcast and the single raw cache never moves.
-    * Each normalized frame is EAGERLY checkpointed before the next
-    * step: the max-normalization references its frame TWICE (the 1-row
-    * aggregate and the scaled projection), so without a per-iteration
-    * pin the unevaluated join subtree doubles per reference and the
-    * final action re-executes it ~2^(2·iters) times — measured 36.9 s
-    * → 9.9 s (single-query JVM incl. startup) at sf0.1 when the pin
-    * landed. Exact while iters·10⁶·maxdeg < 2⁶³.
+    * the two map-side-combined contribution sums move. Below the pin
+    * the rank frames broadcast and the single raw cache never moves.
+    * Steps are SPARSE: a node without a sum holds 0 and adds nothing
+    * to the next sums, so each half-step is one observed checkpoint
+    * ([[Materialize.Scope.checkpointObserved]]) of the raw sums
+    * `edges ⋈ prev → groupBy(sum)`, whose max rides the same job; the
+    * normalization is then a narrow projection by that max as a
+    * literal, and the node spine is left-joined once, at the end. Each
+    * half-step evaluates its join once and costs no second action.
+    * Exact while iters·10⁶·maxdeg < 2⁶³.
     *
     * @return (node, hub_ppm, auth_ppm) after `iters` iterations. */
   def hitsPpm(edges: DataFrame, srcCol: String, dstCol: String,
@@ -167,9 +167,13 @@ object Graph {
       val eRaw = s.cache(edges
         .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
         .distinct())
-      val spine = s.cache(eRaw.select(col("src").as("node")).union(eRaw.select(col("dst")))
-        .distinct())
-      val nNodes = spine.count()
+      // every node (a null endpoint names none), counted on its own
+      // checkpoint job to size the pin below
+      val (spine, sized) = s.checkpointObserved(
+        eRaw.select(col("src").as("node")).union(eRaw.select(col("dst")))
+          .distinct().filter(col("node").isNotNull),
+        "hitsPpm", count(lit(1)))
+      val nNodes = sized.getLong(0)
       // past the broadcast-safe node count the edge list re-caches TWICE,
       // pre-partitioned+sorted on src and on dst (the GraphX mirror-table
       // trade): the h→a join keys on src and the a→h join on dst, and an
@@ -189,25 +193,35 @@ object Graph {
           s.release(eRaw)
           (es, ed)
         } else (eRaw, eRaw)
-      def maxNorm(df: DataFrame, c: String): DataFrame = {
-        val mx = df.agg(greatest(max(col(c)), lit(1L)).as("mx"))
-        df.crossJoin(broadcast(mx))
-          .select(col("node"), expr(s"($c * 1000000) div mx").as(c))
+      // one half-step: the raw sums of `prev`'s `v` over the edges keyed
+      // on `key`, per `out` node, with max(sum) observed on their
+      // checkpoint job; returns the sums and the normalizing divisor
+      // greatest(max, 1)
+      def step(e: DataFrame, key: String, out: String, prev: DataFrame,
+               v: String, c: String): (DataFrame, Long) = {
+        val (sums, r) = s.checkpointObserved(
+          e.join(prev.withColumnRenamed("node", key), key)
+            .filter(col(out).isNotNull) // a null endpoint names no node
+            .groupBy(col(out).as("node")).agg(sum(col(v)).as(c)),
+          "hitsPpm", max(col(c)))
+        (sums, if (r.isNullAt(0)) 1L else math.max(r.getLong(0), 1L))
       }
+      // c·10⁶ div mx; a node without a sum scales from 0
+      def scaled(c: String, mx: Long): Column =
+        expr(s"(coalesce($c, 0L) * 1000000) div ${mx}L")
       var hubs = spine.select(col("node"), lit(1000000L).as("h"))
-      var auths: DataFrame = null
-      for (i <- 1 to iters) {
-        val aRaw = eSrc.join(hubs.withColumnRenamed("node", "src"), "src")
-          .groupBy(col("dst").as("node")).agg(sum(col("h")).as("a"))
-        auths = s.checkpoint(maxNorm(spine.join(aRaw, Seq("node"), "left")
-          .select(col("node"), coalesce(col("a"), lit(0L)).as("a")), "a"))
-        val hRaw = eDst.join(auths.withColumnRenamed("node", "dst"), "dst")
-          .groupBy(col("src").as("node")).agg(sum(col("a")).as("h"))
-        hubs = s.checkpoint(maxNorm(spine.join(hRaw, Seq("node"), "left")
-          .select(col("node"), coalesce(col("h"), lit(0L)).as("h")), "h"))
+      var last: ((DataFrame, Long), (DataFrame, Long)) = null
+      for (_ <- 1 to iters) {
+        val (a, ma) = step(eSrc, "src", "dst", hubs, "h", "a")
+        val (h, mh) = step(eDst, "dst", "src",
+          a.select(col("node"), scaled("a", ma).as("a")), "a", "h")
+        hubs = h.select(col("node"), scaled("h", mh).as("h"))
+        last = ((a, ma), (h, mh))
       }
-      Materialize.checkpoint(hubs.join(auths, "node")
-        .select(col("node"), col("h").as("hub_ppm"), col("a").as("auth_ppm")))
+      val ((aSum, mxA), (hSum, mxH)) = last
+      Materialize.checkpoint(spine
+        .join(hSum, Seq("node"), "left").join(aSum, Seq("node"), "left")
+        .select(col("node"), scaled("h", mxH).as("hub_ppm"), scaled("a", mxA).as("auth_ppm")))
     }
   }
 

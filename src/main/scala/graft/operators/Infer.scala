@@ -121,8 +121,9 @@ object Infer {
       // gradient explode covers bias and weights in one pass. It is
       // checkpointed, not cached: every iteration re-analyzes its step
       // plan from docFeats, and a LogicalRDD leaf spares the planner a
-      // walk of the explode/groupBy build tree per iteration
-      val docFeats = s.checkpoint(docs
+      // walk of the explode/groupBy build tree per iteration. Its
+      // checkpoint job also counts the docs (observed) to size updates
+      val (docFeats, sized) = s.checkpointObserved(docs
         .select(col(idCol), label.cast("boolean").as("__y"),
           explode(featTokens(col(textCol), charNgram)).as("__tok"))
         .filter(length(col("__tok")) > 0)
@@ -132,8 +133,9 @@ object Infer {
         .groupBy(col(idCol), col("__y"))
         .agg(map_concat(
           map_from_entries(collect_list(struct(col("__b"), col("__x")))),
-          map(lit(-1), lit(1L))).as("__m")))
-      val nDocs = docFeats.count() // sizes updates
+          map(lit(-1), lit(1L))).as("__m")),
+        "trainLogistic", count(lit(1)))
+      val nDocs = sized.getLong(0)
       require(nDocs > 0, "trainLogistic: no docs with >= 1 token")
       var bias = 0L
       var w = IndexedSeq.fill(buckets)(0L)
@@ -175,8 +177,10 @@ object Infer {
     * scores from literal weight arrays riding the plan (narrow), then
     * ONE map-side-combined aggregate whose reduced size is K·(B+1)
     * cells regardless of corpus rows, and a K·(B+1)-row collect. The
-    * class vocabulary is collected once (bounded: a label vocabulary,
-    * not data-scaled) and ordered, so class indexing is deterministic.
+    * class vocabulary is collected once, as a `collect_set` observed
+    * on the feature map's checkpoint job (bounded: a label vocabulary,
+    * not data-scaled), and ordered, so class indexing is
+    * deterministic; a null class fails fast.
     *
     * @return per class (sorted): (class, weights 0..B-1, bias) in ppm —
     *         each plugs into [[linearScore]]; argmax over the K scores
@@ -191,8 +195,9 @@ object Infer {
     val bucket = (conv(substring(md5(concat(lit(salt), col("__tok"))), 1, 3), 16, 10)
       .cast("long") % buckets).cast("int")
     Materialize.scoped { s =>
-      // checkpointed, not cached: see trainLogistic
-      val docFeats = s.checkpoint(docs
+      // checkpointed, not cached: see trainLogistic. Its checkpoint
+      // job also counts the docs and collects the class set (observed)
+      val (docFeats, sized) = s.checkpointObserved(docs
         .select(col(idCol), classCol.cast("string").as("__y"),
           explode(featTokens(col(textCol), charNgram)).as("__tok"))
         .filter(length(col("__tok")) > 0)
@@ -202,11 +207,12 @@ object Infer {
         .groupBy(col(idCol), col("__y"))
         .agg(map_concat(
           map_from_entries(collect_list(struct(col("__b"), col("__x")))),
-          map(lit(-1), lit(1L))).as("__m")))
-      val nDocs = docFeats.count()
+          map(lit(-1), lit(1L))).as("__m")),
+        "trainOvr", count(lit(1)), count(col("__y")), collect_set(col("__y")))
+      val nDocs = sized.getLong(0)
       require(nDocs > 0, "trainOvr: no docs with >= 1 token")
-      val classes = docFeats.select("__y").distinct().collect()
-        .map(_.getString(0)).sorted.toSeq
+      require(sized.getLong(1) == nDocs, "trainOvr: a doc with >= 1 token has a null class")
+      val classes = sized.getSeq[String](2).sorted
       var model: Map[String, (Long, IndexedSeq[Long])] =
         classes.map(c => c -> (0L, IndexedSeq.fill(buckets)(0L))).toMap
       for (_ <- 1 to iters) {

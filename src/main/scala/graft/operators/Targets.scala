@@ -83,7 +83,13 @@ object Targets {
     * sequential form — a stage is dirty iff forced, incomplete, or any
     * dependency is dirty), every target still lands complete before any
     * consumer reads it, and the report lists stages in deterministic
-    * topological order regardless of completion order. */
+    * topological order regardless of completion order.
+    *
+    * Fail-closed: the stages' jobs run in one job group per call. The
+    * first failure cancels the group's running and future jobs, stages
+    * not yet building or writing are skipped, and the call waits for
+    * every stage before it rethrows that first cause — so no target is
+    * written after `run` has thrown. */
   def run(spark: SparkSession, rootDir: String, stages: Seq[Stage],
           force: Set[String] = Set.empty): RunReport = {
     val ordered = topoSort(stages)
@@ -92,6 +98,11 @@ object Targets {
       if (force.contains(s.name) || s.deps.exists(dirty) ||
           !isComplete(spark, targetPath(rootDir, s.name))) dirty += s.name
     }
+    // every stage's jobs run in this run's job group, so the first
+    // failure can cancel its siblings' running and later jobs
+    val group = s"graft-targets-${java.util.UUID.randomUUID()}"
+    val firstFailure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val sc = spark.sparkContext
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(4, math.max(1, dirty.size)))
     implicit val ec: scala.concurrent.ExecutionContext =
@@ -104,16 +115,27 @@ object Targets {
           done(s.name) = scala.concurrent.Future
             .sequence(depFs)
             .map { _ =>
-              spark.sparkContext.setJobDescription(s"target: ${s.name}")
-              val ups = s.deps.map(d =>
-                d -> spark.read.parquet(targetPath(rootDir, d))).toMap
-              s.build(spark, ups).write.mode("overwrite")
-                .parquet(targetPath(rootDir, s.name))
+              // a sibling already failed: neither build nor write
+              if (firstFailure.get == null) try {
+                sc.setJobGroup(group, s"target: ${s.name}")
+                val ups = s.deps.map(d =>
+                  d -> spark.read.parquet(targetPath(rootDir, d))).toMap
+                val out = s.build(spark, ups)
+                if (firstFailure.get == null)
+                  out.write.mode("overwrite").parquet(targetPath(rootDir, s.name))
+              } catch {
+                case t: Throwable =>
+                  if (firstFailure.compareAndSet(null, t)) sc.cancelJobGroupAndFutureJobs(group)
+                  throw t
+              }
             }
         }
       }
+      // wait for EVERY stage, so none writes after this call returns or
+      // throws; then surface the first cause
       done.values.foreach(f =>
-        scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
+        scala.concurrent.Await.ready(f, scala.concurrent.duration.Duration.Inf))
+      Option(firstFailure.get).foreach(t => throw t)
     } finally pool.shutdown()
     RunReport(ordered.collect { case s if dirty(s.name) => s.name },
       ordered.collect { case s if !dirty(s.name) => s.name })

@@ -1,6 +1,8 @@
 package graft
 
 import graft.operators.Cleaning
+import graft.operators.Cleaning.{BlockTagSplit, WsClass, decodeEntitiesChain, stripScriptStyleComment}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,7 +19,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    (must stay literal) — the cases the fast scan alone would get
   *    wrong and the verify-scan fallback exists for;
   *  - [[graft.functions.MainContentBlocksExpr]] vs the HOF/regex
-  *    block scorer ([[Cleaning.extractMainContentHof]]).
+  *    block scorer ([[extractMainContentHof]] below).
   *
   * Both run fixture batteries AND seeded fuzz corpora through ONE
   * DataFrame so the native path executes under whole-stage codegen
@@ -27,6 +29,29 @@ import org.scalatest.funsuite.AnyFunSuite
 class CleaningExprSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
+
+  /** The original HOF/regex formulation of [[Cleaning.extractMainContent]]
+    * (block split + per-block regex scoring — 5 regex scans per
+    * block): the reference the native
+    * [[graft.functions.MainContentBlocksExpr]] is pinned against, and
+    * the shape the SQL oracle replays. */
+  private def extractMainContentHof(html: Column, minTextChars: Int): Column = {
+    // at extractMainContent's default link cap, maxLinkPct = 33
+    val blocks = split(stripScriptStyleComment(html), BlockTagSplit)
+    def cleanOf(b: Column): Column =
+      trim(regexp_replace(regexp_replace(b, "(?s)<[^>]*>", " "), WsClass, " "))
+    val scored = transform(blocks, b => {
+      val clean = cleanOf(b)
+      val noAnchor = cleanOf(regexp_replace(b, "(?is)<a\\b[^>]*>.*?</a>", " "))
+      struct(clean.as("t"), (length(clean) - length(noAnchor)).as("lc"))
+    })
+    val kept = filter(scored, s =>
+      length(s("t")) >= minTextChars && s("lc") * 100 <= length(s("t")) * 33)
+    val joined = array_join(transform(kept, s => s("t")), " ")
+    struct(
+      trim(regexp_replace(decodeEntitiesChain(joined), WsClass, " ")).as("main_text"),
+      size(blocks).as("n_blocks"), size(kept).as("n_kept"))
+  }
 
   private def assertDecodeParity(inputs: Seq[String], clue: String): Unit = {
     val rows = inputs.toDF("s")
@@ -103,7 +128,7 @@ class CleaningExprSpec extends AnyFunSuite {
     val rows = pages.toDF("h")
       .select(col("h"),
         Cleaning.extractMainContent(col("h"), minTextChars = minChars).as("f"),
-        Cleaning.extractMainContentHof(col("h"), minTextChars = minChars).as("c"))
+        extractMainContentHof(col("h"), minTextChars = minChars).as("c"))
       .select(col("h"), col("f.main_text"), col("f.n_blocks"), col("f.n_kept"),
         col("c.main_text"), col("c.n_blocks"), col("c.n_kept"))
       .as[(String, String, Int, Int, String, Int, Int)].collect()
@@ -170,7 +195,7 @@ class CleaningExprSpec extends AnyFunSuite {
       .toDF("h")
       .select(
         Cleaning.extractMainContent(col("h"), minTextChars = 8).getField("main_text").as("f"),
-        Cleaning.extractMainContentHof(col("h"), minTextChars = 8).getField("main_text").as("c"),
+        extractMainContentHof(col("h"), minTextChars = 8).getField("main_text").as("c"),
         Cleaning.decodeEntities(col("h")).as("fd"),
         Cleaning.decodeEntitiesChain(col("h")).as("cd"))
       .as[(Option[String], Option[String], Option[String], Option[String])]

@@ -11,6 +11,9 @@ class CorpusOpsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
+  /** L2 norm through the builtin-HOF dot. */
+  private def normHof(a: org.apache.spark.sql.Column) = sqrt(VectorFunctions.dotHof(a, a))
+
   test("maxRunLength counts the longest equal-adjacent run of a sorted array") {
     val df = Seq(
       (1L, Seq("a", "b", "b", "b", "c", "c")),
@@ -89,7 +92,7 @@ class CorpusOpsSpec extends AnyFunSuite {
     val exact = c.crossJoin(q)
       .select(col("query_id"), col("neighbor_id"),
         VectorFunctions.dotHof(col("cv"), col("qv")).as("dot"),
-        (VectorFunctions.normHof(col("cv")) * VectorFunctions.normHof(col("qv"))).as("nn"))
+        (normHof(col("cv")) * normHof(col("qv"))).as("nn"))
     val bad = approx.join(exact, Seq("query_id", "neighbor_id"))
       .filter(abs(col("qscore") - col("dot")) > col("nn") * 0.02 + 1e-6)
       .count()

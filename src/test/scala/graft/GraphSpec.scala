@@ -182,6 +182,16 @@ class GraphSpec extends AnyFunSuite {
     assert(r(1L)._2 == 0L && r(10L)._1 == 0L)
   }
 
+  test("hitsPpm: a null endpoint names no node and adds nothing") {
+    // the null dst's sum (2·10⁶) would be the max if it were a node;
+    // 2 and 3 are nodes only through their null-partnered edges
+    val g = Seq((Some(1L), Some(10L)), (Some(2L), None), (Some(3L), None), (None, Some(10L)))
+    val r = Graph.hitsPpm(g.toDF("src", "dst"), "src", "dst", iters = 2)
+      .as[(Option[Long], Long, Long)].collect()
+    assert(r.toSet == Set((Some(1L), 1000000L, 0L), (Some(2L), 0L, 0L), (Some(3L), 0L, 0L),
+      (Some(10L), 0L, 1000000L)))
+  }
+
   test("pinned path (> broadcast-safe nodes): ring fixed point is exact") {
     // past Dedup.BroadcastSafeCorpusRows both operators re-cache the
     // edge list pre-partitioned+sorted (the routing-table layout) and

@@ -1,0 +1,61 @@
+package graft
+
+import java.util.concurrent.atomic.AtomicInteger
+
+import graft.operators.{Components, Graph}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Jobs per call of the iterative operators, as upper bounds: under
+  * AQE every stage is a job and each costs tens of milliseconds of
+  * scheduling, so a change that adds jobs to these loops must move a
+  * bound here and say why. The bounds are the counts on these fixed
+  * graphs in the test session (local[4], 4 shuffle partitions, AQE on).
+  */
+class JobBudgetSpec extends AnyFunSuite {
+  lazy val spark = SparkTestSession.spark
+  import spark.implicits._
+
+  private val Tag = "graft.test.jobBudget"
+
+  /** Run `body`; return its value and the number of jobs it started.
+    * Jobs are matched by a local property, which Spark hands on to
+    * the threads that submit AQE stages and broadcasts. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val id = java.util.UUID.randomUUID().toString
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(Tag) == id)) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(Tag, id)
+    try {
+      val out = body
+      org.apache.spark.sql.GraftBridge.drainListenerBus(sc, 30000)
+      (out, jobs.get())
+    } finally {
+      sc.setLocalProperty(Tag, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("Graph.hitsPpm(iters = 3) stays within its job budget") {
+    // 6 hubs pointing at overlapping sets of 5 authorities
+    val edges = (for (u <- 1L to 6L; v <- 101L to 105L if (u + v) % 3 != 0) yield (u, v))
+      .toDF("src", "dst")
+    val (scores, jobs) = jobsOf(Graph.hitsPpm(edges, "src", "dst", iters = 3))
+    assert(scores.count() == edges.select("src").union(edges.select("dst")).distinct().count())
+    assert(jobs <= 29, s"hitsPpm ran $jobs jobs")
+  }
+
+  test("Components.connectedComponents stays within its job budget") {
+    // a 12-edge chain and a triangle: several star rounds to converge
+    val edges = ((1L to 12L).map(k => (k, k + 1)) ++ Seq((50L, 51L), (51L, 52L), (52L, 50L)))
+      .toDF("id_a", "id_b")
+    val (labels, jobs) = jobsOf(Components.connectedComponents(edges))
+    assert(labels.select("component").distinct().count() == 2)
+    assert(jobs <= 48, s"connectedComponents ran $jobs jobs")
+  }
+}

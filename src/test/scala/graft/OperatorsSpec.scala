@@ -241,6 +241,15 @@ class EmptyInputSpec extends AnyFunSuite {
 
     val emptyEdges = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
     assert(graft.operators.Components.connectedComponents(emptyEdges).count() == 0)
+
+    // observed checkpoints over empty frames: the metrics row still
+    // arrives (count 0, max null), so neither call waits for it. Over
+    // spark.range the empty relation is only known at run time
+    assert(graft.operators.Graph.hitsPpm(emptyEdges, "id_a", "id_b").count() == 0)
+    val noRows = spark.range(0, 20).filter(lit(false))
+      .select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
+    assert(graft.operators.Graph.hitsPpm(noRows, "id_a", "id_b").count() == 0)
+    assert(graft.operators.Components.connectedComponents(noRows).count() == 0)
   }
 
   test("round-2 operators tolerate empty inputs") {
@@ -650,6 +659,15 @@ class CacheHygieneSpec extends AnyFunSuite {
       graft.operators.Graph.bfsHops(edges, "src", "dst", Seq(1L).toDF("node"), maxHops = 5))
     assert(hops.count() == 6)
     assert(left == own(hops), s"leaked: ${left -- own(hops)}")
+  }
+
+  test("Graph.hitsPpm leaves only its result's checkpoint") {
+    // every per-step observed checkpoint is released on return
+    val edges = (for (u <- 1L to 8L; v <- 101L to 104L if (u + v) % 3 != 0) yield (u, v))
+      .toDF("src", "dst")
+    val (scores, left) = leftBehind(graft.operators.Graph.hitsPpm(edges, "src", "dst", iters = 3))
+    assert(scores.count() == edges.select("src").union(edges.select("dst")).distinct().count())
+    assert(left == own(scores), s"leaked: ${left -- own(scores)}")
   }
 
   test("a failing input leaves nothing cached (Select.tokenBudget, Dedup.minHashLsh)") {

@@ -155,6 +155,33 @@ class TargetsSpec extends AnyFunSuite {
       Targets.targetPath(root, "boom") + "/_SUCCESS")))
   }
 
+  test("a failing middle stage: no target is written after run throws") {
+    // a -> bad -> after, with an independent sibling that is still
+    // building when `bad` fails; run must wait for it and skip its write
+    val root = java.nio.file.Files.createTempDirectory("targets").toString
+    val failed = new java.util.concurrent.CountDownLatch(1)
+    val stages = Seq(
+      Stage("a", Nil, (s, _) => s.range(3).toDF()),
+      Stage("bad", Seq("a"), (_, _) => {
+        failed.countDown()
+        throw new IllegalStateException("middle stage failed")
+      }),
+      Stage("after", Seq("bad"), (_, up) => up("bad")),
+      Stage("sibling", Nil, (s, _) => {
+        failed.await()
+        Thread.sleep(300)
+        s.range(5).toDF()
+      }))
+    val err = intercept[IllegalStateException](Targets.run(spark, root, stages))
+    assert(err.getMessage == "middle stage failed")
+    def targets = java.nio.file.Files.list(java.nio.file.Paths.get(root))
+      .toArray.map(_.toString).toSet
+    val atThrow = targets
+    Thread.sleep(1500)
+    assert(targets == atThrow, "a target appeared after run threw")
+    assert(atThrow == Set(Targets.targetPath(root, "a")), s"targets: $atThrow")
+  }
+
   test("topoSort orders by dependency regardless of declaration order and rejects cycles") {
     val counters = Seq.fill(3)(new AtomicInteger)
     val shuffled = dag(counters: _*).reverse
