@@ -77,8 +77,9 @@ class BroadcastProbe extends org.apache.spark.sql.util.QueryExecutionListener {
     qe.observedMetrics.get(Bench.SinkObservation).foreach { row =>
       outRows.set(row.getLong(0))
     }
-    // positional access (withDropMetric's aggregate order); null-guard:
-    // the literal max aggregates evaluate to null over an empty result
+    // positional access (withDropMetric's aggregate order); the
+    // metrics fall back to their literals over an empty result, so a
+    // null row only comes from a frame observed some other way
     qe.observedMetrics.get(graft.operators.Dedup.NearDupDropObservation)
       .filter(r => r.length >= 3 && !r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2))
       .foreach { row =>

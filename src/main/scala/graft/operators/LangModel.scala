@@ -170,25 +170,29 @@ object LangModel {
                       textCol: String, keepPpm: Long = 1000000L,
                       scale: Long = 1000000L): DataFrame = {
     val counts = model.select(col("tok"), col("cr").as("__cr"), col("ct").as("__ct"))
-    val nVocab = counts.count()
-    val totals = counts.agg(sum(col("__cr")).as("__nr"), sum(col("__ct")).as("__nt"))
-    val countSide = if (nVocab > Dedup.BroadcastSafeCorpusRows)
+    // vocabulary size and both token totals in one action; over an
+    // empty model the totals are null and so is every lift
+    val sizes = counts.agg(count(lit(1)), sum(col("__cr")), sum(col("__ct"))).head()
+    val countSide = if (sizes.getLong(0) > Dedup.BroadcastSafeCorpusRows)
       counts.hint("merge") else broadcast(counts)
     Materialize.checkpoint(df
       .select(col(idCol), explode(tokens(col(textCol))).as("tok"))
       .filter(length(col("tok")) > 0)
       .join(countSide, Seq("tok"), "left")
-      .crossJoin(broadcast(totals))
       .select(col(idCol),
         expr(s"((coalesce(__ct, cast(0 as bigint)) + 1) * $scale div " +
-          s"(coalesce(__cr, cast(0 as bigint)) + 1)) * __nr div (__nt + 1)")
-          .as("__lift"))
+          s"(coalesce(__cr, cast(0 as bigint)) + 1)) * ${sqlLong(sizes, 1)} div " +
+          s"(${sqlLong(sizes, 2)} + 1)").as("__lift"))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_tokens"), sum(col("__lift")).as("__total"))
       .withColumn("mean_lift_ppm", expr("__total div n_tokens"))
       .withColumn("keep", col("mean_lift_ppm") >= keepPpm)
       .select(col(idCol), col("n_tokens"), col("mean_lift_ppm"), col("keep")))
   }
+
+  /** Field `i` of `r`, a bigint or null, as a SQL literal. */
+  private def sqlLong(r: org.apache.spark.sql.Row, i: Int): String =
+    if (r.isNullAt(i)) "cast(null as bigint)" else s"${r.getLong(i)}L"
 
   /** DSIR-style importance weighting (Xie et al.'s data selection via
     * importance resampling, reduced to its count-LM core): score every
@@ -211,7 +215,9 @@ object LangModel {
     * Scale (the [[bigramSurprisal]] dataflow): ONE tokenize+explode
     * pass persisted spillable; BOTH count tables fold from that single
     * pass (target counts are a conditional aggregate — no second scan,
-    * no filter-join); totals are a 1-row broadcast; the vocab-sized
+    * no filter-join); the vocabulary size and both totals are observed
+    * on the count table's checkpoint job and enter the lift as
+    * literals; the vocab-sized
     * lift table joins back broadcast-below / merge-above the measured
     * [[Dedup.BroadcastSafeCorpusRows]] pin; one map-side-combined doc
     * fold ends the plan. */
@@ -222,16 +228,16 @@ object LangModel {
       val toks = s.cache(df.select(col(idCol), targetFilter.as("__tgt"),
           explode(tokens(col(textCol))).as("tok"))
         .filter(length(col("tok")) > 0))
-      val counts = s.cache(toks.groupBy("tok")
+      // the checkpoint job materializes both frames and observes the
+      // vocabulary size (the join pin) and the two token totals
+      val (counts, sizes) = s.checkpointObserved(toks.groupBy("tok")
         .agg(count(lit(1)).as("__cr"),
-          sum(when(col("__tgt"), 1L).otherwise(0L)).as("__ct")))
-      val nVocab = counts.count() // materializes both caches, sizes the pin
-      val totals = counts.agg(sum(col("__cr")).as("__nr"), sum(col("__ct")).as("__nt"))
-      val gains = counts.crossJoin(broadcast(totals))
-        .select(col("tok"),
-          expr(s"((__ct + 1) * $scale div (__cr + 1)) * __nr div (__nt + 1)")
-            .as("__lift"))
-      val gainSide = if (nVocab > Dedup.BroadcastSafeCorpusRows)
+          sum(when(col("__tgt"), 1L).otherwise(0L)).as("__ct")),
+        "dsirWeight", count(lit(1)), sum(col("__cr")), sum(col("__ct")))
+      val gains = counts.select(col("tok"),
+        expr(s"((__ct + 1) * $scale div (__cr + 1)) * ${sqlLong(sizes, 1)} div " +
+          s"(${sqlLong(sizes, 2)} + 1)").as("__lift"))
+      val gainSide = if (sizes.getLong(0) > Dedup.BroadcastSafeCorpusRows)
         gains.hint("merge") else broadcast(gains)
       Materialize.checkpoint(toks.join(gainSide, "tok")
         .groupBy(col(idCol))

@@ -295,7 +295,10 @@ object Similarity {
     * @param allPairs true = NO blocking: every cross-side pair is a
     *        candidate — the brute-forced TRUTH leg of the blocking-
     *        recall certification (q_bitext_recall). O(|X|·|Y|): only
-    *        for a bounded certification universe, never production.
+    *        for a bounded certification universe, never production —
+    *        the y side is broadcast whole, so past
+    *        [[Dedup.BroadcastSafeCorpusRows]] y rows this throws
+    *        before any pair is formed.
     * @return (x_id, y_id, cos_ppb, margin_ppm) for mutual-best pairs
     *         with margin ≥ minMarginPpm, one row per surviving pair. */
   def bitextMarginMine(corpus: DataFrame, sideExpr: Column,
@@ -304,6 +307,13 @@ object Similarity {
                        idCol: String = "vec_id", vecCol: String = "embedding",
                        allPairs: Boolean = false): DataFrame = {
     require(k >= 1 && minMarginPpm >= 0)
+    if (allPairs) {
+      val nY = corpus.filter(!sideExpr).count()
+      require(nY <= Dedup.BroadcastSafeCorpusRows,
+        s"bitextMarginMine(allPairs = true) broadcasts its whole y side: $nY rows > " +
+          s"Dedup.BroadcastSafeCorpusRows = ${Dedup.BroadcastSafeCorpusRows} (allPairs is " +
+          "the certification-scale truth leg only)")
+    }
     // nlist = 0 derives cell count by the IVF rule (cells stay ~64
     // rows at every corpus size — the assignCells discipline, which
     // also auto-escalates to two-level k-means past the flat ceiling

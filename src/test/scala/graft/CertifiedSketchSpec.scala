@@ -119,6 +119,30 @@ class CertifiedSketchSpec extends AnyFunSuite {
     assert(full.count() == 15)
   }
 
+  test("a fully capped pruned pass still reports its drops to the caller's action") {
+    val docs = (0 until 6).map(i => (i.toLong, "alpha beta gamma delta common text"))
+      .toDF("doc_id", "text")
+    // 16 bands, each one bucket of all 6 docs, all past maxBucket=2:
+    // the result is empty and the observation must still arrive
+    val out = Dedup.minhashPrunedJaccard(docs, "doc_id", "text",
+      shingleN = 3, threshold = 0.5, numHashes = 32, bands = 16, maxBucket = 2)
+    val seen = new java.util.concurrent.LinkedBlockingQueue[org.apache.spark.sql.Row]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             ns: Long): Unit =
+        qe.observedMetrics.get(Dedup.NearDupDropObservation).foreach(seen.add)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      assert(out.collect().isEmpty)
+      val row = seen.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+      assert(row != null, "no drop observation reached the listener")
+      assert(row == org.apache.spark.sql.Row(16L, 96L, 6))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("q_token_bpe_verify: 8 ranked merges, deterministic across runs") {
     val a = SparkEntry.queries("q_token_bpe_verify")(spark, sf).collect()
     val b = SparkEntry.queries("q_token_bpe_verify")(spark, sf).collect()

@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import graft.operators.{Components, Graph}
+import graft.operators.{Components, Dedup, Graph}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -58,4 +58,30 @@ class JobBudgetSpec extends AnyFunSuite {
     assert(labels.select("component").distinct().count() == 2)
     assert(jobs <= 48, s"connectedComponents ran $jobs jobs")
   }
+
+  // near-dup families on a fixed small corpus; the bounds are the
+  // counts before Dedup's four set-similarity joins shared one core
+  private lazy val docs = Seq(
+    (1L, "the quick brown fox jumps over the lazy dog near the river bank"),
+    (2L, "the quick brown fox jumps over the lazy dog near the river bank today"),
+    (3L, "a quick brown fox jumps over a lazy dog near the river"),
+    (4L, "distributed query engines plan joins with cost based optimizers"),
+    (5L, "distributed query engines plan joins with cost based optimizers too"),
+    (6L, "the lazy dog near the river bank"),
+    (7L, "completely unrelated words about gardening and tomatoes in summer"),
+    (8L, "gardening and tomatoes in summer"))
+    .toDF("doc_id", "text")
+
+  private def nearDupBudget(name: String, budget: Int)(call: => org.apache.spark.sql.DataFrame) =
+    test(s"Dedup.$name stays within its job budget") {
+      val (pairs, jobs) = jobsOf(call)
+      assert(pairs.count() > 0)
+      assert(jobs <= budget, s"$name ran $jobs jobs")
+    }
+
+  nearDupBudget("prefixFilterJaccard", 12)(Dedup.prefixFilterJaccard(docs, "doc_id", "text"))
+  nearDupBudget("containmentPairs", 12)(Dedup.containmentPairs(docs, "doc_id", "text"))
+  nearDupBudget("minhashPrunedJaccard", 11)(Dedup.minhashPrunedJaccard(docs, "doc_id", "text"))
+  nearDupBudget("minhashPrunedContainment", 11)(
+    Dedup.minhashPrunedContainment(docs, "doc_id", "text"))
 }

@@ -643,6 +643,30 @@ class CacheHygieneSpec extends AnyFunSuite {
     assert(left == own(lsh) ++ own(ngram), s"leaked: ${left -- own(lsh) -- own(ngram)}")
   }
 
+  test("Dedup's four set-similarity joins leave only their results' RDDs") {
+    val docs = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog near the river bank"),
+      (2L, "the quick brown fox jumps over the lazy dog near the river bank today"),
+      (3L, "the lazy dog near the river bank"),
+      (4L, "entirely different words about distributed query engines"))
+      .toDF("doc_id", "text")
+    // the pruned results carry their drop observation above the
+    // checkpoint, so their RDD is a leaf of the plan, not its root
+    def reads(df: org.apache.spark.sql.DataFrame): Set[Int] =
+      org.apache.spark.sql.GraftBridge.analyzedPlan(df).collectLeaves().collect {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+      }.toSet
+    val (outs, left) = leftBehind(Seq(
+      Dedup.prefixFilterJaccard(docs, "doc_id", "text"),
+      Dedup.containmentPairs(docs, "doc_id", "text"),
+      Dedup.minhashPrunedJaccard(docs, "doc_id", "text"),
+      Dedup.minhashPrunedContainment(docs, "doc_id", "text")))
+    assert(outs.forall(_.count() > 0))
+    val results = outs.flatMap(reads).toSet
+    assert(results.size == 4)
+    assert(left == results, s"leaked: ${left -- results}")
+  }
+
   test("Infer.trainOvr leaves no RDD behind") {
     val docs = Seq((1L, "the cat sat on the mat", "en"), (2L, "le chat est sur le tapis", "fr"),
       (3L, "a dog ran in the park", "en"), (4L, "un chien court au parc", "fr"))

@@ -509,6 +509,15 @@ class SimilaritySpec extends AnyFunSuite {
     assert(got == want, s"got ${got.size} pairs, want ${want.size}")
   }
 
+  test("bitextMarginMine(allPairs = true) refuses a y side past the broadcast bound") {
+    val n = Dedup.BroadcastSafeCorpusRows + 1
+    val emb = spark.range(0, n + 1)
+      .select(col("id").as("vec_id"), array(lit(1.0f), lit(0.0f)).as("embedding"))
+    val e = intercept[IllegalArgumentException](
+      Similarity.bitextMarginMine(emb, col("vec_id") === 0, allPairs = true))
+    assert(e.getMessage.contains(s"$n rows > Dedup.BroadcastSafeCorpusRows = 65536"))
+  }
+
   test("bitext blocking recall detects cross-cell misses (q_bitext_recall's metric)") {
     // the metric must MEASURE blocking loss, pinned at both ends
     // (VERDICT r16 #2 — the production oracle replays the same

@@ -3,10 +3,16 @@
 DuckDB over the sf tables, compare to the Verify parquet dumps
 (columns sorted by name, rows sorted, exact values).
 
+With --against, compare two Verify dumps instead (say, two commits, or
+one commit at two SPARK_GRAFT_CPUS values): every query's normalized
+frame must hold the same schema, dtypes and values in both; prints
+equal/differ per query and exits 1 when any query differs or is missing
+from one side.
+
 Usage: python3 tools/parity.py <sfDir> <verifyOutDir>
+       python3 tools/parity.py <verifyOutDir> --against <otherVerifyOutDir>
 """
-import json, math, os, sys
-import duckdb
+import argparse, json, math, os, sys
 import pandas as pd
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -16,7 +22,40 @@ def norm(df):
     df = df.sort_values(by=list(df.columns), ignore_index=True)
     return df
 
+def query_dirs(out_dir):
+    return {n for n in os.listdir(out_dir) if os.path.isdir(os.path.join(out_dir, n))}
+
+def differs(a, b):
+    """Why two normalized frames differ, or None when they are equal
+    (NaN and None equal to themselves)."""
+    if list(a.columns) != list(b.columns):
+        return f"columns {list(a.columns)} vs {list(b.columns)}"
+    if len(a) != len(b):
+        return f"rows {len(a)} vs {len(b)}"
+    for c in a.columns:
+        if str(a[c].dtype) != str(b[c].dtype):
+            return f"dtype[{c}] {a[c].dtype} vs {b[c].dtype}"
+        if not a[c].equals(b[c]):
+            return f"values[{c}]"
+    return None
+
+def against(out_dir, other_dir):
+    """Compare two Verify dumps query by query; True when all are equal."""
+    mine, other = query_dirs(out_dir), query_dirs(other_dir)
+    n_eq = 0
+    for name in sorted(mine | other):
+        if name not in mine or name not in other:
+            why = f"missing from {out_dir if name not in mine else other_dir}"
+        else:
+            why = differs(norm(pd.read_parquet(os.path.join(out_dir, name))),
+                          norm(pd.read_parquet(os.path.join(other_dir, name))))
+        n_eq += why is None
+        print(f"{'✓' if why is None else '✗'} {name}: {'equal' if why is None else 'differ: ' + why}")
+    print(f"\n{n_eq}/{len(mine | other)} equal")
+    return n_eq == len(mine | other)
+
 def main(sf_dir, out_dir):
+    import duckdb
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
@@ -70,4 +109,15 @@ def main(sf_dir, out_dir):
         print("oracle entries with no parquet output:", missing)
 
 if __name__ == "__main__":
-    main(sys.argv[1], sys.argv[2])
+    ap = argparse.ArgumentParser(description="Verify dump parity: vs the DuckDB oracle, "
+                                 "or --against another dump")
+    ap.add_argument("dirs", nargs="+", help="<sfDir> <verifyOutDir>, or <verifyOutDir> with --against")
+    ap.add_argument("--against", metavar="OTHER_VERIFY_DIR")
+    args = ap.parse_args()
+    if args.against:
+        if len(args.dirs) != 1:
+            ap.error("--against takes exactly one <verifyOutDir>")
+        sys.exit(0 if against(args.dirs[0], args.against) else 1)
+    if len(args.dirs) != 2:
+        ap.error("expected <sfDir> <verifyOutDir>")
+    main(*args.dirs)
