@@ -2,8 +2,9 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import graft.operators.{Components, Dedup, Graph}
+import graft.operators.{Components, Dedup, Graph, LangModel}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions.{col, when}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Jobs per call of the iterative operators, as upper bounds: under
@@ -84,4 +85,29 @@ class JobBudgetSpec extends AnyFunSuite {
   nearDupBudget("minhashPrunedJaccard", 11)(Dedup.minhashPrunedJaccard(docs, "doc_id", "text"))
   nearDupBudget("minhashPrunedContainment", 11)(
     Dedup.minhashPrunedContainment(docs, "doc_id", "text"))
+
+  // the four LM scoring entry points on the same corpus, with a target
+  // language for DSIR; the apply functions score against models
+  // checkpointed before the count starts, as a stored model is read.
+  // Before the train and apply functions shared one pass and one
+  // scoring step they ran 13, 11, 6 and 5 jobs
+  private lazy val lmDocs = docs.withColumn("lang",
+    when(col("doc_id") % 2 === 1, "en").otherwise("fr"))
+  private val isEn = col("lang") === "en"
+  private lazy val models = (LangModel.bigramCounts(lmDocs, "text").localCheckpoint(),
+    LangModel.tokenCounts(lmDocs, "text", isEn).localCheckpoint())
+
+  private def lmBudget(name: String, budget: Int)(call: => org.apache.spark.sql.DataFrame) =
+    test(s"LangModel.$name stays within its job budget") {
+      models
+      val (scored, jobs) = jobsOf(call)
+      assert(scored.count() > 0)
+      assert(jobs <= budget, s"$name ran $jobs jobs")
+    }
+
+  lmBudget("bigramSurprisal", 11)(LangModel.bigramSurprisal(lmDocs, "doc_id", "text", 2000000L))
+  lmBudget("surprisalApplyCounts", 8)(
+    LangModel.surprisalApplyCounts(models._1, lmDocs, "doc_id", "text", 2000000L))
+  lmBudget("dsirWeight", 6)(LangModel.dsirWeight(lmDocs, "doc_id", "text", isEn, 1000000L))
+  lmBudget("dsirApplyCounts", 5)(LangModel.dsirApplyCounts(models._2, lmDocs, "doc_id", "text"))
 }

@@ -74,4 +74,74 @@ class LangModelSpec extends AnyFunSuite {
     assert(out(0)._3 > 1000000L && out(0)._4)
     assert(out(1)._3 < 1000000L && !out(1)._4)
   }
+
+  // the apply functions against a model trained on the same docs
+  // reproduce the train-and-score functions: schema and rows
+  private def assertSame(got: org.apache.spark.sql.DataFrame,
+                         want: org.apache.spark.sql.DataFrame): Unit = {
+    assert(got.schema == want.schema)
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+  }
+
+  private lazy val mixed = Seq(
+    (1L, "the cat sat on the mat and the cat sat", "en"),
+    (2L, "the dog sat on the log", "en"),
+    (3L, "le chat est sur le tapis le chat", "fr"),
+    (4L, "solo", "fr"),
+    (5L, "", "en"),
+    (6L, "on the mat the dog", "fr")).toDF("doc_id", "text", "lang")
+
+  test("surprisalApplyCounts over bigramCounts(d) equals bigramSurprisal(d)") {
+    assertSame(
+      LangModel.surprisalApplyCounts(LangModel.bigramCounts(mixed, "text"), mixed,
+        "doc_id", "text", keepPpm = 3000000L),
+      LangModel.bigramSurprisal(mixed, "doc_id", "text", keepPpm = 3000000L))
+  }
+
+  test("dsirApplyCounts over tokenCounts(d) equals dsirWeight(d)") {
+    val en = col("lang") === "en"
+    assertSame(
+      LangModel.dsirApplyCounts(LangModel.tokenCounts(mixed, "text", en), mixed,
+        "doc_id", "text", keepPpm = 900000L),
+      LangModel.dsirWeight(mixed, "doc_id", "text", en, keepPpm = 900000L))
+  }
+
+  test("the apply functions price out-of-model text at the smoothed limits") {
+    // model of the first fixture: prefix counts a:3 b:2 x:1, V = 3
+    val model = LangModel.bigramCounts(
+      Seq((1L, "a b a b a b"), (2L, "x y")).toDF("doc_id", "text"), "text")
+    val lm = LangModel.surprisalApplyCounts(model,
+        Seq((1L, "a z"), (2L, "q r"), (3L, "x y q")).toDF("doc_id", "text"),
+        "doc_id", "text", keepPpm = 3000000L)
+      .orderBy("doc_id").as[(Long, Long, Long, Long, Boolean)].collect().toSeq
+    assert(lm == Seq(
+      (1L, 1L, 6L, 6000000L, false), // unseen successor of a: c1 + V = 3 + 3
+      (2L, 1L, 3L, 3000000L, true),  // unseen prefix q: V = 3
+      (3L, 2L, 5L, 2500000L, true))) // (x,y) (1+3) div 2 = 2, then unseen prefix y: 3
+    // token model: raw tt:2 ss:2 rr:1 (N_raw = 5), target tt:2 ss:1 (N_tgt = 3)
+    val toks = LangModel.tokenCounts(
+      Seq((1L, "tt tt ss", true), (2L, "rr ss", false)).toDF("doc_id", "text", "t"),
+      "text", col("t"))
+    val dsir = LangModel.dsirApplyCounts(toks,
+        Seq((1L, "zz zz"), (2L, "ss zz")).toDF("doc_id", "text"), "doc_id", "text")
+      .orderBy("doc_id").as[(Long, Long, Long, Boolean)].collect().toSeq
+    // unseen zz: scale·N_raw div (N_tgt+1) = 1e6·5 div 4 = 1250000;
+    // ss: ((1+1)·1e6 div (2+1))·5 div 4 = 666666·5 div 4 = 833332
+    assert(dsir == Seq((1L, 2L, 1250000L, true), (2L, 2L, 1041666L, true)))
+  }
+
+  test("the apply functions over an empty model") {
+    val docs = Seq((1L, "a b c"), (2L, "b c")).toDF("doc_id", "text")
+    val none = docs.filter(lit(false)).withColumn("t", lit(true))
+    // no token totals: every lift is null, and so is the keep flag
+    val dsir = LangModel.dsirApplyCounts(LangModel.tokenCounts(none, "text", col("t")),
+        docs, "doc_id", "text")
+      .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1), r.isNullAt(2), r.isNullAt(3)))
+    assert(dsir.toSeq == Seq((1L, 3L, true, true), (2L, 2L, true, true)))
+    // no counts and V = 0: every bigram costs (0 + 0) div (0 + 1) = 0
+    val lm = LangModel.surprisalApplyCounts(LangModel.bigramCounts(none, "text"),
+        docs, "doc_id", "text", keepPpm = 0L)
+      .orderBy("doc_id").as[(Long, Long, Long, Long, Boolean)].collect().toSeq
+    assert(lm == Seq((1L, 2L, 0L, 0L, true), (2L, 1L, 0L, 0L, true)))
+  }
 }

@@ -667,6 +667,24 @@ class CacheHygieneSpec extends AnyFunSuite {
     assert(left == results, s"leaked: ${left -- results}")
   }
 
+  test("LangModel's four scoring functions leave only their results' checkpoints") {
+    val docs = Seq((1L, "the cat sat on the mat", "en"), (2L, "le chat est sur le tapis", "fr"),
+      (3L, "the dog sat on the log", "en"), (4L, "solo", "fr"))
+      .toDF("doc_id", "text", "lang")
+    val en = col("lang") === "en"
+    def check(name: String)(call: => org.apache.spark.sql.DataFrame): Unit = {
+      val (out, left) = leftBehind(call)
+      assert(out.count() > 0)
+      assert(own(out).nonEmpty && left == own(out), s"$name leaked: ${left -- own(out)}")
+    }
+    check("bigramSurprisal")(LangModel.bigramSurprisal(docs, "doc_id", "text", 0L))
+    check("surprisalApplyCounts")(LangModel.surprisalApplyCounts(
+      LangModel.bigramCounts(docs, "text"), docs, "doc_id", "text", 0L))
+    check("dsirWeight")(LangModel.dsirWeight(docs, "doc_id", "text", en, 0L))
+    check("dsirApplyCounts")(LangModel.dsirApplyCounts(
+      LangModel.tokenCounts(docs, "text", en), docs, "doc_id", "text"))
+  }
+
   test("Infer.trainOvr leaves no RDD behind") {
     val docs = Seq((1L, "the cat sat on the mat", "en"), (2L, "le chat est sur le tapis", "fr"),
       (3L, "a dog ran in the park", "en"), (4L, "un chien court au parc", "fr"))

@@ -13,14 +13,25 @@ Usage: python3 tools/parity.py <sfDir> <verifyOutDir>
        python3 tools/parity.py <verifyOutDir> --against <otherVerifyOutDir>
 """
 import argparse, json, math, os, sys
+import numpy as np
 import pandas as pd
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
+def sort_key(v):
+    """A hashable, orderable stand-in for one cell: an array cell becomes
+    a tuple of (is-null, element) pairs, so None elements never meet
+    values in a comparison; any other cell is itself."""
+    if isinstance(v, (list, tuple, np.ndarray)):
+        return tuple((x is None, sort_key(x)) for x in v)
+    return v
+
 def norm(df):
-    df = df.reindex(sorted(df.columns), axis=1)
-    df = df.sort_values(by=list(df.columns), ignore_index=True)
-    return df
+    """Columns sorted by name, rows sorted by every column. Array cells
+    sort through `sort_key`; the values themselves are left as read."""
+    df = df.reindex(sorted(df.columns), axis=1).reset_index(drop=True)
+    keys = df.apply(lambda c: c.map(sort_key) if c.dtype == object else c)
+    return df.iloc[keys.sort_values(by=list(keys.columns)).index].reset_index(drop=True)
 
 def query_dirs(out_dir):
     return {n for n in os.listdir(out_dir) if os.path.isdir(os.path.join(out_dir, n))}

@@ -1,6 +1,7 @@
 #!/usr/bin/env python3
 """Fixture tests for `parity.py --against`: two tiny Verify-shaped dumps
-(one parquet directory per query) compared query by query.
+(one parquet directory per query) compared query by query, array
+columns included.
 
 Run: python3 tools/test_parity.py   (exit 0 = all pass)
 """
@@ -47,6 +48,16 @@ def run():
 
         e = dump(os.path.join(tmp, "e"), {"q_one": base})
         check("a query missing from one side differs", not parity.against(a, e))
+
+        # an array<bigint> column: rows match up to order, then one element changes
+        arrs = pd.DataFrame({"id": [1, 2, 3], "toks": [[5, 6], [1, 2, 3], [5, 6]]})
+        f = dump(os.path.join(tmp, "f"), {"q_arr": arrs})
+        g = dump(os.path.join(tmp, "g"), {"q_arr": arrs.iloc[[2, 1, 0]]})
+        check("array cells compare up to row order", parity.against(f, g))
+        bumped = arrs.copy()
+        bumped.at[1, "toks"] = [1, 2, 4]
+        h = dump(os.path.join(tmp, "h"), {"q_arr": bumped})
+        check("one changed array element differs", not parity.against(f, h))
 
     if failures:
         print(f"\n{len(failures)} FAILED: {failures}")
