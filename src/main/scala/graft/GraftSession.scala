@@ -1,12 +1,19 @@
 package graft
 
+import java.util.{Collections, Map => JMap}
+
+import org.apache.spark.SparkContext
+import org.apache.spark.api.plugin.{DriverPlugin, ExecutorPlugin, PluginContext, SparkPlugin}
 import org.apache.spark.sql.SparkSession
 
 /** Canonical session builder for the engine's entry points: AQE on,
   * shuffle partitions sized to the executor core count (2-3x total
-  * cores on a real cluster — AQE coalesces either way), UTC, and the
+  * cores on a real cluster — AQE coalesces either way), UTC, the
   * legacy nanos-as-long parquet flag the events table needs (set here
-  * ONCE instead of mutating conf inside table getters).
+  * ONCE instead of mutating conf inside table getters), and the
+  * [[GraftPlugin]], which in local mode lets tasks reuse the classes
+  * the driver generated while planning instead of compiling each one
+  * a second time (it does nothing under any other master).
   */
 object GraftSession {
 
@@ -22,6 +29,9 @@ object GraftSession {
     * default stays = cores, AQE coalesces small shuffles either way. */
   def shufflePartitions(cores: String): String =
     sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cores)
+
+  /** The engine's `spark.plugins` value. */
+  private[graft] val Plugins: String = classOf[GraftPlugin].getName
 
   def builder(cores: String = cpus): SparkSession.Builder =
     SparkSession.builder()
@@ -43,6 +53,7 @@ object GraftSession {
       .config("spark.sql.optimizer.excludedRules",
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
       .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.plugins", Plugins)
       .config("spark.ui.enabled", "false")
 
   def local(cores: String = cpus): SparkSession = {
@@ -50,4 +61,36 @@ object GraftSession {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+}
+
+/** One compile per generated class in local mode. Spark keys its
+  * codegen cache by the compiling thread's context classloader and the
+  * source, and a local task thread runs under the executor's session
+  * loader, so every whole-stage class the driver compiled while
+  * planning would compile again in the first task that runs it. The
+  * driver half records the loader the driver plans with (its `init`
+  * runs on the thread that builds the SparkContext, before the local
+  * executor exists); the executor half puts that loader on each task
+  * thread. Under any master other than `local[...]` neither half acts:
+  * executors are other JVMs, which have their own loaders.
+  */
+private[graft] class GraftPlugin extends SparkPlugin {
+  override def driverPlugin(): DriverPlugin = new DriverPlugin {
+    override def init(sc: SparkContext, ctx: PluginContext): JMap[String, String] = {
+      if (sc.isLocal) GraftPlugin.driverLoader = Thread.currentThread.getContextClassLoader
+      Collections.emptyMap()
+    }
+    override def shutdown(): Unit = GraftPlugin.driverLoader = null
+  }
+
+  override def executorPlugin(): ExecutorPlugin = new ExecutorPlugin {
+    override def onTaskStart(): Unit = {
+      val loader = GraftPlugin.driverLoader
+      if (loader != null) Thread.currentThread.setContextClassLoader(loader)
+    }
+  }
+}
+
+private object GraftPlugin {
+  @volatile private var driverLoader: ClassLoader = _
 }

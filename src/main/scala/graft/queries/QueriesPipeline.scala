@@ -400,31 +400,36 @@ object QueriesPipeline {
     * `histPred` epoch only — i.e. exactly what re-running the whole
     * corpus through the deployed (frozen) models computes. With
     * histPred = lit(true) this IS curateManifest's lossless chain
-    * (apply(model(d), d) == train-and-score — the spec locks it). */
+    * (apply(model(d), d) == train-and-score — the spec locks it).
+    * Each model is checkpointed once, as a stored model is read: an
+    * apply reads its model twice (a sizing action, then the scoring
+    * plan), and both applies return their own checkpoints, so the
+    * models are released on return. */
   private[graft] def curatePinnedBatch(docsAll0: DataFrame,
                                        histPred: org.apache.spark.sql.Column,
                                        budget: Long = 12000L,
-                                       keepPpm: Long = 35000000L): DataFrame = {
-    val docsAll = docsAll0.select(col("doc_id"), col("text"), col("lang"))
-    val hist = docsAll.filter(histPred)
-    val lm = LangModel.bigramCounts(hist, "text")
-    val kept = docsAll.join(
-      LangModel.surprisalApplyCounts(lm, docsAll, "doc_id", "text", keepPpm)
-        .filter(col("keep")).select("doc_id"), "doc_id")
-    val canon = Materialize.checkpoint(docsAll
-      .join(Dedup.exact(kept, "doc_id", "text").select("doc_id"), "doc_id"), eager = false)
-    val pairs = nearDupPairs(canon, "auto")
-    val comp = Components.connectedComponents(pairs)
-      .withColumnRenamed("node", "doc_id")
-    val reps = Materialize.checkpoint(canon.join(comp, Seq("doc_id"), "left")
-      .filter(coalesce(col("component"), col("doc_id")) === col("doc_id"))
-      .drop("component"), eager = false)
-    val dsir = LangModel.tokenCounts(reps.filter(histPred), "text",
-      col("lang") === "en")
-    val scored = LangModel.dsirApplyCounts(dsir, reps, "doc_id", "text")
-      .select("doc_id", "n_tokens", "mean_lift_ppm")
-    manifestTail(docsAll, scored, budget)
-  }
+                                       keepPpm: Long = 35000000L): DataFrame =
+    Materialize.scoped { s =>
+      val docsAll = docsAll0.select(col("doc_id"), col("text"), col("lang"))
+      val hist = docsAll.filter(histPred)
+      val lm = s.checkpoint(LangModel.bigramCounts(hist, "text"))
+      val kept = docsAll.join(
+        LangModel.surprisalApplyCounts(lm, docsAll, "doc_id", "text", keepPpm)
+          .filter(col("keep")).select("doc_id"), "doc_id")
+      val canon = Materialize.checkpoint(docsAll
+        .join(Dedup.exact(kept, "doc_id", "text").select("doc_id"), "doc_id"), eager = false)
+      val pairs = nearDupPairs(canon, "auto")
+      val comp = Components.connectedComponents(pairs)
+        .withColumnRenamed("node", "doc_id")
+      val reps = Materialize.checkpoint(canon.join(comp, Seq("doc_id"), "left")
+        .filter(coalesce(col("component"), col("doc_id")) === col("doc_id"))
+        .drop("component"), eager = false)
+      val dsir = s.checkpoint(LangModel.tokenCounts(reps.filter(histPred), "text",
+        col("lang") === "en"))
+      val scored = LangModel.dsirApplyCounts(dsir, reps, "doc_id", "text")
+        .select("doc_id", "n_tokens", "mean_lift_ppm")
+      manifestTail(docsAll, scored, budget)
+    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

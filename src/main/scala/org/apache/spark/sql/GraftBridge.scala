@@ -23,6 +23,11 @@ object GraftBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A DataFrame over `rdd`, whose rows are internal rows of `schema`. */
+  def internalFrame(spark: SparkSession, rdd: org.apache.spark.rdd.RDD[catalyst.InternalRow],
+                    schema: types.StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
+
   /** Re-assert a hash-partitioning CLAIM on a checkpointed frame
     * (one made by `graft.Materialize`).
     *

@@ -56,14 +56,25 @@ class DifferentialSpec extends AnyFunSuite {
     }
   }
 
+  /** (node, component) rows of [[graft.operators.Components]] on
+    * `edges`, once by union-find in one task and once by the star loop
+    * (a one-task bound of 0 rows); both must agree, and each node
+    * appears once. */
+  private def components(edges: org.apache.spark.sql.DataFrame): Set[(Any, Any)] = {
+    def rows(labels: org.apache.spark.sql.DataFrame) = labels.collect().map(r => (r.get(0), r.get(1))).toSeq
+    val oneTask = rows(graft.operators.Components.connectedComponents(edges))
+    val starLoop = rows(graft.operators.Components.solve(edges, "id_a", "id_b", 15, oneTaskEdges = 0))
+    assert(oneTask.map(_._1).distinct.size == oneTask.size, s"a node twice: $oneTask")
+    assert(oneTask.toSet == starLoop.toSet, "the one-task and star-loop paths differ")
+    oneTask.toSet
+  }
+
   test("connectedComponents matches union-find on random graphs") {
     for (seed <- Seq(5, 23)) {
       val rnd = new scala.util.Random(seed)
       val nodes = 60
       val edges = (0 until 70).map(_ => (rnd.nextInt(nodes).toLong, rnd.nextInt(nodes).toLong))
-      val got = graft.operators.Components
-        .connectedComponents(edges.toDF("id_a", "id_b"))
-        .as[(Long, Long)].collect().toMap
+      val got = components(edges.toDF("id_a", "id_b"))
       // union-find reference
       val parent = scala.collection.mutable.Map[Long, Long]()
       def find(x: Long): Long = {
@@ -78,10 +89,29 @@ class DifferentialSpec extends AnyFunSuite {
       // canonical label = min node of the component, matching the operator
       val expected = touched.map { n =>
         val root = find(n)
-        n -> touched.filter(m => find(m) == root).min
-      }.toMap
+        (n, touched.filter(m => find(m) == root).min)
+      }.toSet[(Any, Any)]
       assert(got == expected, s"seed=$seed")
     }
+  }
+
+  test("connectedComponents keeps int and string ids in their type and order") {
+    val ints = Seq((3, 1), (1, 2), (9, 8)).toDF("id_a", "id_b")
+    assert(graft.operators.Components.connectedComponents(ints).schema.map(_.dataType.typeName) ==
+      Seq("integer", "integer"))
+    assert(components(ints) == Set((1, 1), (2, 1), (3, 1), (8, 8), (9, 8)))
+    // binary string order: upper case sorts before lower case
+    val strs = Seq(("b", "a"), ("c", "b"), ("a", "B"), ("y", "x")).toDF("id_a", "id_b")
+    assert(components(strs) ==
+      Set(("a", "B"), ("b", "B"), ("c", "B"), ("B", "B"), ("x", "x"), ("y", "x")))
+  }
+
+  test("connectedComponents: a self-loop names a node, a null endpoint joins nothing") {
+    val loops = Seq((5L, 5L), (1L, 2L), (2L, 2L)).toDF("id_a", "id_b")
+    assert(components(loops) == Set((5L, 5L), (1L, 1L), (2L, 1L)))
+    val nulls = Seq((Some(4L), None), (Some(2L), Some(3L)), (None, Some(3L)), (None, None))
+      .toDF("id_a", "id_b")
+    assert(components(nulls) == Set((4L, 4L), (2L, 2L), (3L, 2L), (null, null)))
   }
 
   test("Hierarchy.ancestors matches BFS transitive closure on random DAGs") {

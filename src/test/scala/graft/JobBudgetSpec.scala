@@ -2,9 +2,10 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import graft.operators.{Components, Dedup, Graph, LangModel}
+import graft.operators.{Components, Dedup, Graph, LangModel, Split}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.functions.{col, when}
+import org.apache.spark.sql.functions.{col, sum, when}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Jobs per call of the iterative operators, as upper bounds: under
@@ -12,6 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * scheduling, so a change that adds jobs to these loops must move a
   * bound here and say why. The bounds are the counts on these fixed
   * graphs in the test session (local[4], 4 shuffle partitions, AQE on).
+  * The same fixed cost per class holds for code generation, so two
+  * cases pin the compiles a plan makes: none for a repeated shape, and
+  * none in the tasks of a fresh one beyond what the driver compiled.
   */
 class JobBudgetSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -51,13 +55,69 @@ class JobBudgetSpec extends AnyFunSuite {
     assert(jobs <= 29, s"hitsPpm ran $jobs jobs")
   }
 
-  test("Components.connectedComponents stays within its job budget") {
-    // a 12-edge chain and a triangle: several star rounds to converge
-    val edges = ((1L to 12L).map(k => (k, k + 1)) ++ Seq((50L, 51L), (51L, 52L), (52L, 50L)))
+  // a 12-edge chain and a triangle: several star rounds to converge,
+  // or one union-find task within the one-task bound
+  private lazy val chainAndTriangle =
+    ((1L to 12L).map(k => (k, k + 1)) ++ Seq((50L, 51L), (51L, 52L), (52L, 50L)))
       .toDF("id_a", "id_b")
-    val (labels, jobs) = jobsOf(Components.connectedComponents(edges))
+
+  private def componentsJobs(oneTaskEdges: Long): Int = {
+    val (labels, jobs) = jobsOf(
+      Components.solve(chainAndTriangle, "id_a", "id_b", 15, oneTaskEdges))
     assert(labels.select("component").distinct().count() == 2)
-    assert(jobs <= 48, s"connectedComponents ran $jobs jobs")
+    jobs
+  }
+
+  test("Components.connectedComponents stays within its job budget") {
+    // 48 jobs before an edge set of at most OneTaskEdges rows was
+    // solved in one task
+    val jobs = componentsJobs(Components.OneTaskEdges)
+    assert(jobs <= 3, s"connectedComponents ran $jobs jobs")
+  }
+
+  test("Components.connectedComponents above its one-task bound runs the star loop") {
+    // the path follows the row count, not the partition count: even an
+    // edge set in one shuffle partition runs the star loop above the
+    // bound (a one-task run is the 3 jobs above)
+    val jobs = SparkTestSession.withConf("spark.sql.shuffle.partitions" -> "1")(componentsJobs(0))
+    assert(jobs > 3 && jobs <= 48, s"connectedComponents ran $jobs jobs")
+  }
+
+  test("Split.leakFree stays within its job budget") {
+    // 52 jobs, its components call's 48 among them, before that call
+    // ran in one task
+    val docs = (0L until 60L).toDF("doc_id")
+    val (split, jobs) = jobsOf(Split.leakFree(docs, "doc_id", chainAndTriangle).collect())
+    assert(split.length == 60)
+    assert(jobs <= 7, s"leakFree ran $jobs jobs")
+  }
+
+  /** Classes Spark's code generator has compiled in this JVM so far. */
+  private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  test("a repeated plan shape compiles no new classes") {
+    def run() = spark.range(0, 5000, 1, 4).selectExpr("id % 6133 AS k", "id * 3 AS v")
+      .groupBy("k").agg(sum("v").as("s")).filter(col("s") > 6133).count()
+    run()
+    val before = compiles
+    run()
+    assert(compiles == before, s"the second run compiled ${compiles - before} classes")
+  }
+
+  test("a fresh plan's tasks compile nothing the driver compiled") {
+    // without AQE, building the physical RDD compiles every whole-stage
+    // class on the driver before any task runs; a local task thread
+    // that kept the executor's loader would compile each one again
+    SparkTestSession.withConf("spark.sql.adaptive.enabled" -> "false") {
+      val plan = spark.range(0, 5000, 1, 4).selectExpr("id * 7187 AS v").filter(col("v") % 7 === 3)
+        .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.executedPlan
+      val before = compiles
+      val rdd = plan.execute()
+      val driver = compiles - before
+      assert(rdd.count() == 714)
+      assert(driver > 0, "the driver compiled nothing")
+      assert(compiles - before == driver, s"tasks compiled ${compiles - before - driver} classes")
+    }
   }
 
   // near-dup families on a fixed small corpus; the bounds are the

@@ -611,24 +611,36 @@ class CacheHygieneSpec extends AnyFunSuite {
     assert(left == own(closure), s"leaked: ${left -- own(closure)}")
   }
 
+  /** Run `body` with each Components path: union-find in one task,
+    * then the star loop (a one-task bound of 0 rows). */
+  private def onBothComponentsPaths(
+      body: (org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) => Unit): Unit = {
+    body(graft.operators.Components.connectedComponents(_))
+    body(graft.operators.Components.solve(_, "id_a", "id_b", 15, oneTaskEdges = 0))
+  }
+
   test("Components.connectedComponents bounds its checkpoint footprint") {
     // star contraction checkpoints every intermediate (the edge plan
     // would otherwise be re-embedded per round and the plan string
     // alone OOMs at high diameter); all but the result's checkpoint
     // are released on return, so each call leaves at most one RDD
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
-    val (labels, first) = leftBehind(graft.operators.Components.connectedComponents(edges))
-    assert(labels.count() == 5)
-    assert(first.size <= 1, s"checkpoint footprint too large: $first")
-    val (_, second) = leftBehind(graft.operators.Components.connectedComponents(edges).count())
-    assert(second.size <= 1, s"cross-call accumulation: $second (first call: $first)")
+    onBothComponentsPaths { cc =>
+      val (labels, first) = leftBehind(cc(edges))
+      assert(labels.count() == 5)
+      assert(first.size <= 1, s"checkpoint footprint too large: $first")
+      val (_, second) = leftBehind(cc(edges).count())
+      assert(second.size <= 1, s"cross-call accumulation: $second (first call: $first)")
+    }
   }
 
   test("Components.connectedComponents on a chain leaves only its result's checkpoint") {
     val chain = (1L to 40L).map(k => (k, k + 1)).toDF("id_a", "id_b")
-    val (labels, left) = leftBehind(graft.operators.Components.connectedComponents(chain))
-    assert(left == own(labels), s"leaked: ${left -- own(labels)}")
-    assert(labels.select("component").distinct().as[Long].collect().toSeq == Seq(1L))
+    onBothComponentsPaths { cc =>
+      val (labels, left) = leftBehind(cc(chain))
+      assert(left == own(labels), s"leaked: ${left -- own(labels)}")
+      assert(labels.select("component").distinct().as[Long].collect().toSeq == Seq(1L))
+    }
   }
 
   test("Dedup.minHashLsh / ngramJaccard release the signature caches") {

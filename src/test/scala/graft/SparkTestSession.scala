@@ -23,10 +23,22 @@ object SparkTestSession {
       // expensive array expressions in below-Generate filters
       .config("spark.sql.optimizer.excludedRules",
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
+      // mirror GraftSession: local tasks reuse the driver's generated classes
+      .config("spark.plugins", GraftSession.Plugins)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Run `body` with `conf` set on the shared session; the previous
+    * values come back afterwards, on return or on throw. */
+  def withConf[T](conf: (String, String)*)(body: => T): T = {
+    val c = spark.conf
+    val prev = conf.map { case (k, _) => k -> c.getOption(k) }
+    conf.foreach { case (k, v) => c.set(k, v) }
+    try body
+    finally prev.foreach { case (k, v) => v.fold(c.unset(k))(c.set(k, _)) }
+  }
 }
