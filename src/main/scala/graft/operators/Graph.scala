@@ -17,37 +17,6 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Fixed-iteration PageRank over an edge list, ranks in ppm:
-    *
-    *   r⁰(v)   = 10⁶
-    *   contrib = r(u) div outdeg(u)              (per edge u→v)
-    *   rᵗ⁺¹(v) = (10⁶ − d) + d · Σ contrib div 10⁶   (d = dampingPpm)
-    *
-    * Semantics notes (each deterministic and oracle-replayable):
-    *  - duplicate edges collapse (a multigraph caller pre-weights);
-    *  - DANGLING nodes (no out-edges) keep receiving rank but emit
-    *    none. Default: their mass LEAKS (the simplified map-reduce
-    *    variant). With `redistributeDangling = true` the STANDARD
-    *    term applies instead — each iteration adds the 1-row dangling
-    *    mass aggregate and every node receives `dm div N` extra
-    *    contribution before damping (truncating, still exact ppm);
-    *  - nodes with no in-edges settle at the base (10⁶ − d).
-    *
-    * Scale shape: the deduped edge list and the node spine (with
-    * out-degree attached) persist once; past
-    * [[Dedup.BroadcastSafeCorpusRows]] nodes (the same pin that flips
-    * the contribution join from broadcast to merge — a node-scaling
-    * broadcast build is the r10-measured driver-OOM class) both
-    * re-cache pre-partitioned and sorted on their join keys (src /
-    * node — the GraphX routing-table discipline), so the per-iteration
-    * sort-merge joins re-exchange NEITHER cached frame and each
-    * iteration moves only the node-sized contribution frame
-    * followed by the map-side-combined per-dst sum;
-    * lineage is truncated every `checkpointEvery` iterations (the
-    * [[Components]] discipline, so a deep `iters` cannot blow the
-    * planner). Exact while iters·10⁶·maxdeg < 2⁶³ — unreachable.
-    *
-    * @return (node, out_degree, rank_ppm) after `iters` iterations. */
   /** Multi-source BFS hop distance over an edge list — the crawl-depth
     * prior (distance from a trusted seed set) that web curation ranks
     * hosts by, and the k-hop reachability a link-graph audit asks for.
@@ -283,6 +252,37 @@ object Graph {
     }
   }
 
+  /** Fixed-iteration PageRank over an edge list, ranks in ppm:
+    *
+    *   r⁰(v)   = 10⁶
+    *   contrib = r(u) div outdeg(u)              (per edge u→v)
+    *   rᵗ⁺¹(v) = (10⁶ − d) + d · Σ contrib div 10⁶   (d = dampingPpm)
+    *
+    * Semantics notes (each deterministic and oracle-replayable):
+    *  - duplicate edges collapse (a multigraph caller pre-weights);
+    *  - DANGLING nodes (no out-edges) keep receiving rank but emit
+    *    none. Default: their mass LEAKS (the simplified map-reduce
+    *    variant). With `redistributeDangling = true` the STANDARD
+    *    term applies instead — each iteration adds the 1-row dangling
+    *    mass aggregate and every node receives `dm div N` extra
+    *    contribution before damping (truncating, still exact ppm);
+    *  - nodes with no in-edges settle at the base (10⁶ − d).
+    *
+    * Scale shape: the deduped edge list and the node spine (with
+    * out-degree attached) persist once; past
+    * [[Dedup.BroadcastSafeCorpusRows]] nodes (the same pin that flips
+    * the contribution join from broadcast to merge — a node-scaling
+    * broadcast build is the r10-measured driver-OOM class) both
+    * re-cache pre-partitioned and sorted on their join keys (src /
+    * node — the GraphX routing-table discipline), so the per-iteration
+    * sort-merge joins re-exchange NEITHER cached frame and each
+    * iteration moves only the node-sized contribution frame
+    * followed by the map-side-combined per-dst sum;
+    * lineage is truncated every `checkpointEvery` iterations (the
+    * [[Components]] discipline, so a deep `iters` cannot blow the
+    * planner). Exact while iters·10⁶·maxdeg < 2⁶³ — unreachable.
+    *
+    * @return (node, out_degree, rank_ppm) after `iters` iterations. */
   def pagerankPpm(edges: DataFrame, srcCol: String, dstCol: String,
                   iters: Int = 4, dampingPpm: Long = 850000L,
                   checkpointEvery: Int = 2,

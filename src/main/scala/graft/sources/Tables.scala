@@ -72,15 +72,6 @@ object Tables {
     (if (schema != null) base.schema(schema) else base.option("inferSchema", "false")).csv(path)
   }
 
-  /** CSV reader with the same malformed-drop posture. */
-  def readCsv(spark: SparkSession, path: String, schema: StructType = null,
-              header: Boolean = true): DataFrame = {
-    val base = spark.read
-      .option("header", header.toString)
-      .option("mode", "DROPMALFORMED")
-    (if (schema != null) base.schema(schema) else base.option("inferSchema", "false")).csv(path)
-  }
-
   /** JSON reader (line-delimited by default; multiline for document-style
     * payloads like the reference's IMPReSS extracts). */
   def readJson(spark: SparkSession, path: String, multiline: Boolean = false): DataFrame =

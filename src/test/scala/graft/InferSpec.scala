@@ -181,6 +181,40 @@ class InferSpec extends AnyFunSuite {
     assert(p2 == ((1L, "aa", 5L)), s"bias-only tie-break: $p2")
   }
 
+  test("predictOvr with one head scores every doc as linearScore does") {
+    val weights = IndexedSeq.tabulate(256)(i => (i.toLong * 37) % 101 - 50)
+    val docs = Seq(
+      (1L, "The quick brown fox, jumps! Over 42 lazy dogs."),
+      (2L, "spark spark spark"),
+      (3L, ""),
+      (4L, "!!! ... ---")).toDF("doc_id", "text")
+    val single = Infer.linearScore(docs, "doc_id", "text", weights, bias = -3L)
+      .select("doc_id", "score").as[(Long, Long)].collect().toMap
+    val pred = Infer.predictOvr(docs, "doc_id", "text", Seq(("only", weights, -3L)))
+      .select("doc_id", "pred", "pred_score").as[(Long, String, Long)].collect()
+    assert(pred.length == 4 && pred.forall(_._2 == "only"))
+    assert(pred.map(r => r._1 -> r._3).toMap == single, "token-less docs included")
+  }
+
+  test("trainLogistic counts a null label as a negative") {
+    import org.apache.spark.sql.functions.{coalesce, col, lit, when}
+    val docs = separable.withColumn("y3",
+      when(col("doc_id") % 3 === 0, lit(null).cast("boolean")).otherwise(col("y")))
+    val withNull = Infer.trainLogistic(docs, "doc_id", "text", col("y3"), buckets = 64, iters = 3)
+    val coalesced = Infer.trainLogistic(docs, "doc_id", "text",
+      coalesce(col("y3"), lit(false)), buckets = 64, iters = 3)
+    assert(withNull == coalesced)
+    assert(withNull != Infer.trainLogistic(docs, "doc_id", "text", col("y"), buckets = 64, iters = 3),
+      "the nulled positives must change the trajectory")
+  }
+
+  test("predictOvr rejects a head size that does not divide 4096") {
+    intercept[IllegalArgumentException] {
+      Infer.predictOvr(Seq((1L, "x")).toDF("doc_id", "text"), "doc_id", "text",
+        Seq(("aa", IndexedSeq.fill(100)(1L), 0L)))
+    }
+  }
+
   test("evalBinary computes exact confusion and tie-aware AUC on a hand fixture") {
     // scores 3,2,2,1,0 / labels T,T,F,F,T. At the >0 operating point:
     // tp=2 fp=2 tn=0 fn=1. AUC over (pos, neg) pairs with the tie at

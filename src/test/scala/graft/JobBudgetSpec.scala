@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import graft.operators.{Components, Dedup, Graph, LangModel, Split}
+import graft.operators.{Components, Dedup, Graph, Infer, LangModel, Split}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.{col, sum, when}
@@ -170,4 +170,27 @@ class JobBudgetSpec extends AnyFunSuite {
     LangModel.surprisalApplyCounts(models._1, lmDocs, "doc_id", "text", 2000000L))
   lmBudget("dsirWeight", 6)(LangModel.dsirWeight(lmDocs, "doc_id", "text", isEn, 1000000L))
   lmBudget("dsirApplyCounts", 5)(LangModel.dsirApplyCounts(models._2, lmDocs, "doc_id", "text"))
+
+  // three disjoint vocabularies; the bounds are the counts before the
+  // two trainers shared one feature map and one descent step
+  private lazy val classDocs = Seq(
+    "aa" -> "alpha bravo alpha charlie", "bb" -> "zulu yankee zulu xray",
+    "cc" -> "mike november mike oscar").flatMap { case (cls, text) =>
+      (0 until 4).map(i => (text + s" word$i", cls))
+    }.zipWithIndex.map { case ((text, cls), i) => (i.toLong, text, cls) }
+    .toDF("doc_id", "text", "cls")
+
+  test("Infer.trainOvr stays within its job budget") {
+    val (model, jobs) = jobsOf(
+      Infer.trainOvr(classDocs, "doc_id", "text", col("cls"), buckets = 16, iters = 2))
+    assert(model.map(_._1) == Seq("aa", "bb", "cc"))
+    assert(jobs <= 7, s"trainOvr ran $jobs jobs")
+  }
+
+  test("Infer.trainLogistic stays within its job budget") {
+    val (model, jobs) = jobsOf(Infer.trainLogistic(classDocs, "doc_id", "text",
+      col("cls") === "aa", buckets = 16, iters = 2))
+    assert(model._1.size == 16)
+    assert(jobs <= 7, s"trainLogistic ran $jobs jobs")
+  }
 }
