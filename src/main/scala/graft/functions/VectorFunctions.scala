@@ -203,12 +203,6 @@ object VectorFunctions {
   /** L2 norm via the native dot. */
   def vecNorm(a: Column): Column = sqrt(vecDot(a, a))
 
-  /** Cosine similarity via the native dot (0 for zero vectors). */
-  def cosine(a: Column, b: Column): Column = {
-    val d = vecDot(a, b) / (vecNorm(a) * vecNorm(b))
-    when(vecNorm(a) === 0 || vecNorm(b) === 0, lit(0.0)).otherwise(d)
-  }
-
   /** Builtin-HOF dot product — the oracle-parity path (expressible in
     * ANSI SQL; used by oracle-checked queries, with the native
     * expression reserved for the bench hot path). */

@@ -8,38 +8,58 @@ import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (Array[Float]).
   *
-  *  - brute-force: exact cosine top-k against a SMALL broadcast query
-  *    set (queries × corpus narrow map — no shuffle until top-k)
-  *  - LSH (random hyperplanes, multi-table): the scale path — corpus
-  *    shuffles once by (table, bucket); queries probe their buckets.
-  *
-  * Hot loop is the native FloatVecDot Catalyst expression; norms are
-  * computed once per side, never per pair.
+  * Five top-k searches and one bitext miner, each with its own
+  * candidate generator: brute force (broadcast cross join), quantized
+  * (int8 cross join, exact integer score), IVF (ML KMeans cells),
+  * int8 IVF (bit-deterministic k-means cells), LSH (random-hyperplane
+  * buckets) and bitext (int8 cells or all pairs). Three private
+  * pieces do the rest:
+  *  - [[side]], the one side step: (id, vector, norm) selected once
+  *    per VECTOR, for the corpus side and for the query side, so no
+  *    pair re-derives a norm;
+  *  - [[cosine]], the one cosine: one native FloatVecDot per pair over
+  *    the two norms, 0 for a zero vector. Every float path runs the
+  *    same IEEE operations in the same order, so brute force, IVF, LSH
+  *    and bitext cosines agree bit for bit;
+  *  - [[topK]], the one rank-and-cut step every search ends in: drop
+  *    self-matches, rank each query's candidates by (score desc,
+  *    id asc), keep rk <= k, emit (query_id, neighbor_id, score, rk).
   */
 object Similarity {
+
+  /** One side of a search: `extra` columns, then `id`, the vector as
+    * `v` and its L2 norm as `n` — the norm computed once per vector. */
+  private def side(df: DataFrame, id: Column, vecCol: String, v: String, n: String,
+                   extra: Column*): DataFrame =
+    df.select(extra ++ Seq(id, col(vecCol).as(v), VectorFunctions.vecNorm(col(vecCol)).as(n)): _*)
+
+  /** Cosine of vector columns `a` and `b` from their norms `an` and
+    * `bn`; 0 when either vector is zero. */
+  private def cosine(a: String, an: String, b: String, bn: String): Column =
+    when(col(an) === 0 || col(bn) === 0, lit(0.0))
+      .otherwise(VectorFunctions.vecDot(col(a), col(b)) / (col(an) * col(bn)))
+
+  /** Rank each query's rows by `order` as `rk` and keep rk <= k. */
+  private def firstK(df: DataFrame, k: Int, order: Column*): DataFrame =
+    df.withColumn("rk", row_number().over(Window.partitionBy(col("query_id")).orderBy(order: _*)))
+      .filter(col("rk") <= k)
+
+  /** The step every search ends in: drop self-matches, keep each
+    * query's k best `score`s (ties by `id` ascending) and emit
+    * (query_id, neighbor_id, round(score, 6) as `out`, rk). */
+  private def topK(scored: DataFrame, k: Int, id: String, score: String,
+                   out: String): DataFrame =
+    firstK(scored.filter(col("query_id") =!= col(id)), k, col(score).desc, col(id).asc)
+      .select(col("query_id"), col(id).as("neighbor_id"), round(col(score), 6).as(out), col("rk"))
 
   /** Exact top-k cosine neighbors for each query vector. `queries`
     * must be small (it is broadcast). Excludes self-matches. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-                     idCol: String = "vec_id", vecCol: String = "embedding",
-                     useNative: Boolean = true): DataFrame = {
-    def dot(a: Column, b: Column) =
-      if (useNative) VectorFunctions.vecDot(a, b) else VectorFunctions.dotHof(a, b)
-    val c = corpus.select(col(idCol), col(vecCol))
-      .withColumn("__cn", sqrt(dot(col(vecCol), col(vecCol))))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
-      .withColumn("__qn", sqrt(dot(col("__qv"), col("__qv"))))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col(idCol))
-      .withColumn("cosine",
-        when(col("__cn") === 0 || col("__qn") === 0, lit(0.0))
-          .otherwise(dot(col("__qv"), col(vecCol)) / (col("__qn") * col("__cn"))))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col(idCol))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col(idCol).as("neighbor_id"),
-        round(col("cosine"), 6).as("cosine"), col("rk"))
+                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+    val c = side(corpus, col(idCol), vecCol, "__cv", "__cn")
+    val q = side(queries, col(idCol).as("query_id"), vecCol, "__qv", "__qn")
+    topK(c.crossJoin(broadcast(q)).withColumn("cosine", cosine("__qv", "__qn", "__cv", "__cn")),
+      k, idCol, "cosine", "cosine")
   }
 
   /** Quantized top-k by approximate dot product: int8-quantize corpus
@@ -61,16 +81,10 @@ object Similarity {
     val c = quantize(corpus, col(idCol), idCol, "__cs", "__cq")
     val q = quantize(queries, col(idCol), "query_id", "__qs", "__qq")
     val scored = c.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col(idCol))
       .withColumn("__score",
         VectorFunctions.vecDotLong(col("__cq"), col("__qq")).cast("double") *
           col("__cs") * col("__qs"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("__score").desc, col(idCol))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col(idCol).as("neighbor_id"),
-        round(col("__score"), 6).as("qscore"), col("rk"))
+    topK(scored, k, idCol, "__score", "qscore")
   }
 
   /** Deterministic pseudo-random hyperplane `p` (seeded PRNG — stable
@@ -113,12 +127,12 @@ object Similarity {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
 
-    val fc = corpus.select(col(idCol), col(vecCol))
-      .withColumn("__features", array_to_vector(col(vecCol).cast("array<double>")))
+    val fc = side(corpus, col(idCol), vecCol, "__cv", "__cn")
+      .withColumn("__features", array_to_vector(col("__cv").cast("array<double>")))
     val model = new KMeans().setK(nlist).setSeed(seed).setMaxIter(5)
       .setFeaturesCol("__features").setPredictionCol("__cell")
       .fit(fc)
-    val cells = model.transform(fc).select(col(idCol), col(vecCol), col("__cell"))
+    val cells = model.transform(fc).drop("__features")
 
     // nprobe nearest centroids per query (centroids are tiny: local
     // math). Nearness must match the assignment metric (Euclidean):
@@ -126,7 +140,7 @@ object Similarity {
     // score — probing by raw dot product would skip the right cells
     // whenever centroid norms differ.
     val centroids = model.clusterCenters.map(_.toArray.map(_.toFloat)).zipWithIndex
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
+    val q = side(queries, col(idCol).as("query_id"), vecCol, "__qv", "__qn")
     val probed = q.withColumn("__cell", explode({
       val dists = centroids.map { case (cv, ci) =>
         val cNorm2 = cv.map(x => x.toDouble * x.toDouble).sum
@@ -137,15 +151,9 @@ object Similarity {
     }))
 
     val cand = cells.join(broadcast(probed), Seq("__cell"))
-      .filter(col("query_id") =!= col(idCol))
       .dropDuplicates("query_id", idCol)
-      .withColumn("cosine", VectorFunctions.cosine(col("__qv"), col(vecCol)))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col(idCol))
-    cand.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col(idCol).as("neighbor_id"),
-        round(col("cosine"), 6).as("cosine"), col("rk"))
+      .withColumn("cosine", cosine("__qv", "__qn", "__cv", "__cn"))
+    topK(cand, k, idCol, "cosine", "cosine")
   }
 
   /** IVF ANN over the engine's own BIT-DETERMINISTIC int8 k-means
@@ -210,32 +218,23 @@ object Similarity {
       } else {
         import graft.functions.VectorFunctions.vecDotLong
         val cdf = Cluster.centroidFrame(corpus.sparkSession, tr.assignCentroids)
-        val byDist = Window.partitionBy(col("query_id"))
-          .orderBy(col("__dist").asc, col("cid").asc)
-        qq.withColumn("aa", vecDotLong(col("q"), col("q")))
+        val dists = qq.withColumn("aa", vecDotLong(col("q"), col("q")))
           .withColumn("cid", explode(sequence(lit(0), lit(tr.assignCentroids.size - 1))))
           .join(cdf, "cid")
           .select(col("query_id"), col("cid"),
             (col("aa") - lit(2L) * vecDotLong(col("q"), col("cq")) + col("bb")).as("__dist"))
-          .withColumn("__rk", row_number().over(byDist))
-          .filter(col("__rk") <= nprobe)
+        firstK(dists, nprobe, col("__dist").asc, col("cid").asc)
           .select(col("query_id"), col("cid"))
       }
-    val corpusVec = corpus.select(col(idCol).cast("long").as("id"), col(vecCol))
-    val qVec = corpus.filter(queryFilter)
-      .select(col(idCol).cast("long").as("query_id"), col(vecCol).as("__qv"))
+    val corpusVec = side(corpus, col(idCol).cast("long").as("id"), vecCol, "__cv", "__cn")
+    val qVec = side(corpus.filter(queryFilter), col(idCol).cast("long").as("query_id"),
+      vecCol, "__qv", "__qn")
     val cand = cells.select(col("id"), col("cid"))
       .join(broadcast(probed), Seq("cid"))
-      .filter(col("query_id") =!= col("id"))
       .join(corpusVec, Seq("id"))
       .join(broadcast(qVec), Seq("query_id"))
-      .withColumn("cosine", VectorFunctions.cosine(col("__qv"), col(vecCol)))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("id"))
-    cand.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("id").as("neighbor_id"),
-        round(col("cosine"), 6).as("cosine"), col("rk"))
+      .withColumn("cosine", cosine("__qv", "__qn", "__cv", "__cn"))
+    topK(cand, k, "id", "cosine", "cosine")
   }
 
   /** Multi-table LSH ANN: a query's candidates are the union of its
@@ -246,19 +245,14 @@ object Similarity {
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               tables: Int = 8, planes: Int = 4, dim: Int = 64,
               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val cb = withLshBuckets(corpus.select(col(idCol), col(vecCol)), vecCol, tables, planes, dim)
-    val qb = withLshBuckets(queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv")),
+    val cb = withLshBuckets(side(corpus, col(idCol), vecCol, "__cv", "__cn"),
+      "__cv", tables, planes, dim)
+    val qb = withLshBuckets(side(queries, col(idCol).as("query_id"), vecCol, "__qv", "__qn"),
       "__qv", tables, planes, dim)
     val cand = cb.join(broadcast(qb), Seq("tbl", "bucket"))
-      .filter(col("query_id") =!= col(idCol))
       .dropDuplicates("query_id", idCol)
-      .withColumn("cosine", VectorFunctions.cosine(col("__qv"), col(vecCol)))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col(idCol))
-    cand.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col(idCol).as("neighbor_id"),
-        round(col("cosine"), 6).as("cosine"), col("rk"))
+      .withColumn("cosine", cosine("__qv", "__qn", "__cv", "__cn"))
+    topK(cand, k, idCol, "cosine", "cosine")
   }
 
   /** Margin-based bitext mining (the Artetxe & Schwenk ratio margin —
@@ -331,17 +325,8 @@ object Similarity {
     val vecs = corpus.select(col(idCol).cast("long").as("id"),
       col(vecCol).as("__v"), sideExpr.as("__x"))
     val sided = cells.join(vecs, "id")
-    // norms are per-VECTOR, not per-pair: materialize them on each
-    // side once (vecNorm = sqrt(native dot) — the identical IEEE ops
-    // VectorFunctions.cosine runs inline), so the pair stage computes
-    // ONE dot per pair instead of re-deriving both norms under the
-    // zero-guard (3-5 dot folds/pair → 1). Bit-identical cosines.
-    val xs = sided.filter(col("__x"))
-      .select(col("cid"), col("id").as("x_id"), col("__v").as("__xv"),
-        VectorFunctions.vecNorm(col("__v")).as("__xn"))
-    val ys = sided.filter(!col("__x"))
-      .select(col("cid"), col("id").as("y_id"), col("__v").as("__yv"),
-        VectorFunctions.vecNorm(col("__v")).as("__yn"))
+    val xs = side(sided.filter(col("__x")), col("id").as("x_id"), "__v", "__xv", "__xn", col("cid"))
+    val ys = side(sided.filter(!col("__x")), col("id").as("y_id"), "__v", "__yv", "__yn", col("cid"))
     // allPairs joins every x to every y through the ONE literal cell —
     // a single-task join (the 1M-pair cosine grind ran serially on one
     // core, measured 10.4 s of the r18 baseline bench). Spread the
@@ -358,9 +343,7 @@ object Similarity {
     Materialize.scoped { s =>
       val pairs = s.cache(joined
         .withColumn("cos_ppb",
-          floor(when(col("__xn") === 0 || col("__yn") === 0, lit(0.0))
-            .otherwise(VectorFunctions.vecDot(col("__xv"), col("__yv")) /
-              (col("__xn") * col("__yn"))) * 1e9).cast("long"))
+          floor(cosine("__xv", "__xn", "__yv", "__yn") * 1e9).cast("long"))
         // negative-cosine candidates are never translations; dropping
         // them here also keeps EVERY div operand nonnegative, where
         // Spark's truncating `div` and DuckDB's flooring `//` agree
@@ -368,12 +351,12 @@ object Similarity {
         .select(col("x_id"), col("y_id"), col("cos_ppb")))
       // per-side kNN means over the candidate set, kept as exact longs:
       // sum of the top-k ppb cosines (order-independent), truncated avg
-      def kAvg(side: String, other: String, out: String) = {
-        val w = Window.partitionBy(col(side))
+      def kAvg(of: String, other: String, out: String) = {
+        val w = Window.partitionBy(col(of))
           .orderBy(col("cos_ppb").desc, col(other).asc)
         pairs.withColumn("__rk", row_number().over(w))
           .filter(col("__rk") <= k)
-          .groupBy(col(side))
+          .groupBy(col(of))
           .agg(expr(s"sum(cos_ppb) div count(*)").as(out))
       }
       val ax = kAvg("x_id", "y_id", "__ax")

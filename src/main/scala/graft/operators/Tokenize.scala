@@ -291,21 +291,6 @@ object Tokenize {
     }
   }
 
-  /** Merge table as a DataFrame — spec-table symmetry with
-    * [[Derive.applyMappingSpec]]: (rank, left, right) rows, collected
-    * rank-ordered (config-sized by definition). */
-  def mergesFromDf(mergesDf: DataFrame): Seq[(String, String)] =
-    mergesDf.select(col("rank").cast("int"), col("left").cast("string"),
-        col("right").cast("string"))
-      .orderBy("rank")
-      .collect().toSeq
-      .map(r => (r.getString(1), r.getString(2)))
-
-  /** Exact per-row BPE token counts from a merges TABLE. */
-  def bpeCounts(df: DataFrame, idCol: String, textCol: String,
-                mergesDf: DataFrame): DataFrame =
-    bpeCounts(df, idCol, textCol, mergesFromDf(mergesDf))
-
   /** Full per-row BPE encoding: (idCol, bpe_tokens array<string>,
     * n_bpe_exact). Same broadcast-codec pass as [[bpeCounts]] but
     * materializing the token stream — the form sequence packing

@@ -473,7 +473,7 @@ object QueriesText {
       // native FloatVecDot folds left-to-right exactly like the
       // oracle's sequential list_sum — bit-identical doubles
       Similarity.bruteForceTopK(t.embeddings,
-          t.embeddings.filter(col("vec_id") < 3), k = 5, useNative = true)
+          t.embeddings.filter(col("vec_id") < 3), k = 5)
         .orderBy("query_id", "rk")
     }),
 
@@ -553,7 +553,7 @@ object QueriesText {
       val ivf = Similarity.ivfInt8TopK(t.embeddings, col("vec_id") < 8,
         k = 5, nlist = 8, iters = 2, nprobe = 2)
       val exact = Similarity.bruteForceTopK(t.embeddings,
-        t.embeddings.filter(col("vec_id") < 8), k = 5, useNative = true)
+        t.embeddings.filter(col("vec_id") < 8), k = 5)
       exact.select(col("query_id"), col("neighbor_id"))
         .join(ivf.select(col("query_id"), col("neighbor_id"), lit(1).as("__hit")),
           Seq("query_id", "neighbor_id"), "left")

@@ -2,10 +2,10 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import graft.operators.{Components, Dedup, Graph, Infer, LangModel, Split}
+import graft.operators.{Components, Dedup, Graph, Infer, LangModel, Similarity, Split}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.functions.{col, sum, when}
+import org.apache.spark.sql.functions.{col, lit, pmod, sum, when}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Jobs per call of the iterative operators, as upper bounds: under
@@ -193,4 +193,27 @@ class JobBudgetSpec extends AnyFunSuite {
     assert(model._1.size == 16)
     assert(jobs <= 7, s"trainLogistic ran $jobs jobs")
   }
+
+  // 32 four-dimensional vectors on a fixed integer pattern, even ids
+  // on the x side; the bounds are the counts before the five top-k
+  // searches and bitext mining shared one side step, cosine and top-k
+  private lazy val vecs = (0 until 32).map { i =>
+      (i.toLong, Array.tabulate(4)(d => ((i * (d + 3) + d * d) % 11 - 5).toFloat))
+    }.toDF("vec_id", "embedding")
+  private val isX = pmod(col("vec_id"), lit(2)) === 0
+
+  private def similarityBudget(name: String, budget: Int)(
+      call: => org.apache.spark.sql.DataFrame) =
+    test(s"Similarity.$name stays within its job budget") {
+      val (rows, jobs) = jobsOf(call.collect())
+      assert(rows.nonEmpty)
+      assert(jobs <= budget, s"$name ran $jobs jobs")
+    }
+
+  similarityBudget("ivfInt8TopK", 13)(
+    Similarity.ivfInt8TopK(vecs, col("vec_id") < 4, k = 3, nlist = 4, nprobe = 2))
+  similarityBudget("bitextMarginMine(nlist = 2)", 20)(
+    Similarity.bitextMarginMine(vecs, isX, k = 2, minMarginPpm = 0L, nlist = 2))
+  similarityBudget("bitextMarginMine(allPairs = true)", 15)(
+    Similarity.bitextMarginMine(vecs, isX, k = 2, minMarginPpm = 0L, allPairs = true))
 }

@@ -724,6 +724,19 @@ class CacheHygieneSpec extends AnyFunSuite {
     assert(left == own(scores), s"leaked: ${left -- own(scores)}")
   }
 
+  test("Similarity.bitextMarginMine(allPairs = true) leaves only its result's checkpoint") {
+    // three directions, one x and one y vector each
+    def v(a: Float, b: Float) = Array(a, b, 0f, 0f)
+    val emb = Seq(
+      (0L, v(100f, 0f)), (1L, v(100f, 1f)),
+      (2L, v(-100f, 10f)), (3L, v(-100f, 0f)),
+      (4L, v(0f, 100f)), (5L, v(1f, 100f))).toDF("vec_id", "embedding")
+    val (pairs, left) = leftBehind(Similarity.bitextMarginMine(emb,
+      pmod(col("vec_id"), lit(2)) === 0, k = 2, minMarginPpm = 0L, allPairs = true))
+    assert(pairs.count() == 3)
+    assert(own(pairs).nonEmpty && left == own(pairs), s"leaked: ${left -- own(pairs)}")
+  }
+
   test("a failing input leaves nothing cached (Select.tokenBudget, Dedup.minHashLsh)") {
     // spark.range, not a local Seq: over a local Seq the optimizer
     // (ConvertToLocalRelation) evaluates the poisoned row inside

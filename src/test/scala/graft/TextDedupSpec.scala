@@ -464,6 +464,42 @@ class SimilaritySpec extends AnyFunSuite {
     assert(lsh.nonEmpty && (lsh & bf).nonEmpty)
   }
 
+  test("lshTopK(tables = 1, planes = 0) and ivfTopK(nprobe = nlist) equal bruteForceTopK") {
+    // one bucket, or every cell probed: the candidates are all pairs,
+    // so both searches must return brute force's rows, cosines included
+    val emb = spark.read.parquet(s"${SparkTestSession.sfDir}/embeddings.parquet")
+    val q = emb.filter(col("vec_id") < 3)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.as[(Long, Long, Double, Int)]
+      .collect().toSeq.sortBy(r => (r._1, r._4))
+    val bf = rows(Similarity.bruteForceTopK(emb, q, 5))
+    assert(bf.size == 15)
+    assert(rows(Similarity.lshTopK(emb, q, 5, tables = 1, planes = 0)) == bf)
+    assert(rows(Similarity.ivfTopK(emb, q, 5, nlist = 8, nprobe = 8)) == bf)
+  }
+
+  test("a zero vector scores 0.0 on every float path") {
+    // vector 5 is all zeros and a query too; k covers the corpus and
+    // every cell or bucket is probed, so each query meets it
+    val vecs = Seq(
+      (0L, Array(1f, 0f, 0f, 0f)), (1L, Array(0.9f, 0.1f, 0f, 0f)),
+      (2L, Array(0f, 1f, 0f, 0f)), (3L, Array(0f, 0f, 1f, 1f)),
+      (4L, Array(-1f, 0f, 0.5f, 0f)), (5L, Array(0f, 0f, 0f, 0f))).toDF("vec_id", "embedding")
+    val isQuery = col("vec_id") === 0 || col("vec_id") === 5
+    val q = vecs.filter(isQuery)
+    Seq(
+      "bruteForceTopK" -> Similarity.bruteForceTopK(vecs, q, 10),
+      "ivfTopK" -> Similarity.ivfTopK(vecs, q, 10, nlist = 2, nprobe = 2),
+      "ivfInt8TopK" -> Similarity.ivfInt8TopK(vecs, isQuery, 10, nlist = 2, nprobe = 2),
+      "lshTopK" -> Similarity.lshTopK(vecs, q, 10, tables = 1, planes = 0, dim = 4)
+    ).foreach { case (name, out) =>
+      val rows = out.select("query_id", "neighbor_id", "cosine")
+        .as[(Long, Long, Double)].collect().toSeq
+      assert(rows.size == 10, s"$name: $rows")
+      val zero = rows.filter(r => r._1 == 5L || r._2 == 5L)
+      assert(zero.size == 6 && zero.forall(_._3 == 0.0), s"$name: $zero")
+    }
+  }
+
   test("bitextMarginMine at nlist=1 equals a Scala brute force of the definition") {
     // ONE cell = every cross-side pair is a candidate, so the whole
     // operator (ppb floor, top-k sums, truncating margin, mutual
