@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.Materialize
-import graft.functions.VectorFunctions
+import graft.functions.LongVecDot
+import graft.functions.VectorFunctions.{quantizeInt8, vecDotLong}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -50,11 +51,14 @@ object Cluster {
     * would assign against, and what [[kmeansInt8]] fingerprints).
     * IVF probing must rank `assignCentroids`, not `centroids`:
     * probing a different centroid set than the one that assigned the
-    * cells silently skips the right cells near cell boundaries. */
+    * cells silently skips the right cells near cell boundaries.
+    * `scale` is the grid the run quantized on (an ANN index's frozen
+    * state with `centroids`). */
   private[graft] final case class Trained(
       assigned: DataFrame,
       assignCentroids: IndexedSeq[Seq[Long]],
-      centroids: IndexedSeq[Seq[Long]])
+      centroids: IndexedSeq[Seq[Long]],
+      scale: Double)
 
   /** Above this k the assignment switches from centroid LITERALS (zero
     * shuffle, one codegen'd argmin projection — but the expression tree
@@ -110,8 +114,7 @@ object Cluster {
       kmeansAssignInt8(emb, idCol, vecCol,
         kForCorpus(n, targetCellSize, maxK), iters)
     else
-      kmeansTwoLevel(emb, idCol, vecCol, targetCellSize, iters, maxK,
-        nKnown = Some(n))
+      kmeansTwoLevel(emb, idCol, vecCol, targetCellSize, iters, maxK)
   }
 
   /** Two-level (coarse-then-fine) k-means blocking — the path past
@@ -121,8 +124,9 @@ object Cluster {
     * then cluster within cells).
     *
     *  1. COARSE: quantize the whole corpus onto one global int8 grid
-    *     (one pass — the grid must be corpus-wide or sample-trained
-    *     centroids and corpus rows live in incomparable spaces), then
+    *     (one aggregate, which also counts n; the grid must be
+    *     corpus-wide or sample-trained centroids and corpus rows live
+    *     in incomparable spaces), then
     *     train coarseK = ceil(sqrt(cellsNeeded)) centroids on a
     *     deterministic xxhash-gated SAMPLE (~samplePerCoarse rows per
     *     centroid) with the same Lloyd's loop as [[trainInt8]].
@@ -160,12 +164,9 @@ object Cluster {
     * flat ceiling. */
   def kmeansTwoLevel(emb: DataFrame, idCol: String, vecCol: String,
                      targetCellSize: Long = 64, iters: Int = 2,
-                     maxK: Int = 4096, samplePerCoarse: Int = 32,
-                     nKnown: Option[Long] = None): DataFrame = {
-    import graft.functions.VectorFunctions.vecDotLong
-    require(iters >= 1 && iters <= 8, s"iters bounded (each is a pass); got $iters")
+                     maxK: Int = 4096, samplePerCoarse: Int = 32): DataFrame = {
     val spark = emb.sparkSession
-    val n = nKnown.getOrElse(emb.count())
+    val (n, scale) = grid(emb, vecCol)
     require(n > 0, "empty corpus")
     val cellsNeeded = (n + targetCellSize - 1) / targetCellSize
     require(cellsNeeded <= maxK.toLong * maxK,
@@ -177,7 +178,7 @@ object Cluster {
 
     // one corpus-wide grid + one spread shuffle, reused by the coarse
     // sample, the shard assignment, and every fine iteration
-    val qAll = Materialize.checkpoint(quantize(emb, idCol, vecCol)
+    val qAll = Materialize.checkpoint(onGrid(emb, idCol, vecCol, scale)
       .repartition(spark.sparkContext.defaultParallelism), eager = false)
 
     // deterministic sample gate: ~samplePerCoarse rows per coarse
@@ -195,7 +196,7 @@ object Cluster {
           s"[cluster] two-level sample gate under-filled (< $coarseK rows); training coarse on the full corpus")
           qAll }
       }
-    val coarse = trainLoop(sampled, coarseK, iters, LiteralAssignMaxK).centroids
+    val coarse = trainLoop(sampled, scale, coarseK, iters, LiteralAssignMaxK).centroids
 
     // shard every row; aa precomputed once (reused every fine iteration)
     val rows = Materialize.checkpoint(assignTo(qAll, coarse)
@@ -216,37 +217,16 @@ object Cluster {
       .select(col("shard"), (col("rn") - 1).cast("int").as("fcid"), col("q").as("cq")),
       eager = false)
 
-    def assignFine(c: DataFrame): DataFrame = {
-      val centB = c.withColumn("bb", vecDotLong(col("cq"), col("cq")))
-      // aggregate ONLY the primitive min(packed) and re-join q from
-      // the checkpointed rows frame — the assignJoin pattern. Carrying
-      // q through the agg (max over ArrayType) rejects hash
-      // aggregation and plans a SortAggregate over the full
-      // n x fineK fan-out, the measured-100x-slower fallback the
-      // packed-long design exists to avoid. Rows of one id are
-      // co-located (the fan-out is generated inside the shard-join's
-      // partition), so the partial agg still collapses to one row
-      // per id before the shuffle.
-      val best = rows.join(centB, "shard")
-        .select(col("id"),
-          ((col("aa") - lit(2L) * vecDotLong(col("q"), col("cq")) + col("bb"))
-            * lit(kpack) + col("fcid")).as("packed"))
-        .groupBy(col("id"))
-        .agg(min(col("packed")).as("packed"))
-      rows.join(best, "id")
-        .select(col("id"), col("shard"), col("q"),
-          pmod(col("packed"), lit(kpack)).cast("int").as("fcid"))
-    }
+    // rows meet only their own shard's cells: the n x fineK fan-out is
+    // generated inside the shard-join's partition, so the partial min
+    // collapses to one row per id before the shuffle
+    def assignFine(c: DataFrame): DataFrame =
+      nearestCell(rows.join(c.withColumn("bb", vecDotLong(col("cq"), col("cq"))), "shard"),
+        "fcid", kpack, rows.drop("aa"))
 
     def updateFine(assigned: DataFrame, prev: DataFrame): DataFrame = {
-      val sums = assigned
-        .select(col("shard"), col("fcid"), posexplode(col("q")).as(Seq("pos", "v")))
-        .groupBy("shard", "fcid", "pos")
-        .agg(sum(col("v")).as("s"), count(lit(1)).as("cnt"))
-      val next = sums.groupBy("shard", "fcid")
-        .agg(transform(
-          array_sort(collect_list(struct(col("pos"),
-            floor(col("s").cast("double") / col("cnt")).cast("long").as("cv")))),
+      val next = means(assigned, "shard", "fcid").groupBy("shard", "fcid")
+        .agg(transform(array_sort(collect_list(struct(col("pos"), col("cv")))),
           s => s("cv")).as("next"))
       prev.select(col("shard"), col("fcid"), col("cq").as("prevq"))
         .join(next, Seq("shard", "fcid"), "left")
@@ -301,11 +281,6 @@ object Cluster {
         col("centroid_fp"))
   }
 
-  /** The training loop shared by the summary and assignment surfaces:
-    * final (id, q, cid, dist) assignment + post-update centroids.
-    * `literalAssignMaxK` is a test seam (ClusterSpec forces the join
-    * path at small k to prove path parity); production callers leave
-    * the default. */
   /** Incremental index maintenance: assign a NEW batch of vectors to
     * the cells of an index trained on the history alone — the ANN
     * counterpart of [[Dedup.incrementalExact]]'s nightly-ingest
@@ -315,7 +290,8 @@ object Cluster {
     * just off-grid), history trains `iters` Lloyd rounds, and the
     * batch is ONE narrow argmin map against the final centroids — no
     * retraining, no history re-shuffle, O(batch) work per ingest.
-    * Returns (idCol, cluster, dist) for the batch rows only.
+    * Returns (idCol, cluster, dist) for the batch rows only: exactly
+    * [[assignIndexed]] over [[annIndex]] of the history.
     * History and batch MUST share the grid — quantizing each side on
     * its own max would put them in incomparable spaces (the
     * [[quantize]] scaladoc contract). */
@@ -326,9 +302,8 @@ object Cluster {
     // false pins them deterministically to the batch, preserving the
     // every-row-is-history-or-batch contract
     val isHist = coalesce(historyPred, lit(false))
-    val (gscale, cents) = trainIndex(emb.filter(isHist), idCol, vecCol, k, iters)
-    assignTo(onGridAt(emb.filter(!isHist), idCol, vecCol, gscale), cents)
-      .select(col("id").as(idCol), col("cid").as("cluster"), col("dist"))
+    assignIndexed(annIndex(emb.filter(isHist), idCol, vecCol, k, iters),
+      emb.filter(!isHist), idCol, vecCol)
   }
 
   /** The PERSISTABLE ANN index state [[assignIncremental]] re-trains on
@@ -341,8 +316,8 @@ object Cluster {
                k: Int, iters: Int): DataFrame = {
     val spark = history.sparkSession
     import spark.implicits._
-    val (gscale, cents) = trainIndex(history, idCol, vecCol, k, iters)
-    cents.zipWithIndex.map { case (cq, c) => (c, cq, gscale) }
+    val tr = trainInt8(history, idCol, vecCol, k, iters)
+    tr.centroids.zipWithIndex.map { case (cq, c) => (c, cq, tr.scale) }
       .toDF("cid", "cq", "gscale")
   }
 
@@ -357,43 +332,21 @@ object Cluster {
     val gscale = rows.head.getDouble(2)
     val cents: IndexedSeq[Seq[Long]] = rows.sortBy(_.getInt(0))
       .map(_.getSeq[Long](1).toIndexedSeq: Seq[Long]).toIndexedSeq
-    assignTo(onGridAt(batch, idCol, vecCol, gscale), cents)
+    assignTo(onGrid(batch, idCol, vecCol, gscale), cents)
       .select(col("id").as(idCol), col("cid").as("cluster"), col("dist"))
   }
 
-  // shared by the in-one-call and persisted-index incremental paths:
-  // grid from the HISTORY max (the quantize scaladoc contract — batch
-  // vectors landing outside ±127 stay exact, just off-grid), then
-  // `iters` Lloyd rounds over the on-grid history
-  private def trainIndex(hist: DataFrame, idCol: String, vecCol: String,
-                         k: Int, iters: Int): (Double, IndexedSeq[Seq[Long]]) = {
-    val gmaxRow = hist.agg(
-      max(array_max(transform(col(vecCol), x => abs(x.cast("double"))))).as("m"))
-      .head()
-    val gmax = if (gmaxRow.isNullAt(0)) 0.0 else gmaxRow.getDouble(0)
-    val gscale = if (gmax == 0.0) 1.0 else gmax / 127.0
-    val trained = trainLoop(
-      Materialize.checkpoint(onGridAt(hist, idCol, vecCol, gscale), eager = false),
-      k, iters, LiteralAssignMaxK)
-    (gscale, trained.centroids)
-  }
-
-  private def onGridAt(df: DataFrame, idCol: String, vecCol: String,
-                       gscale: Double): DataFrame =
-    df.select(col(idCol).cast("long").as("id"),
-      transform(col(vecCol),
-        x => floor(x.cast("double") / lit(gscale) + lit(0.5)).cast("long")).as("q"))
-
+  /** The Lloyd's run behind every flat surface (the summary, the
+    * assignment, IVF cells and the ANN index): the frame's own grid,
+    * then [[trainLoop]]. `literalAssignMaxK` is a test seam
+    * (ClusterSpec forces the join path at small k to prove path
+    * parity); production callers leave the default. */
   private[graft] def trainInt8(emb: DataFrame, idCol: String, vecCol: String,
                                k: Int, iters: Int,
                                literalAssignMaxK: Int = LiteralAssignMaxK)
       : Trained = {
-    require(k > 0 && k <= 4096,
-      s"k bounded at 4096 (flat assignment scores all k centroids per row — " +
-        s"O(k x dim); shard first beyond this, see kForCorpus); got $k")
-    require(iters >= 1 && iters <= 8, s"iters bounded (each is a pass); got $iters")
-    val spark = emb.sparkSession
-    val qNarrow = quantize(emb, idCol, vecCol)
+    val scale = grid(emb, vecCol)._2
+    val q = onGrid(emb, idCol, vecCol, scale)
     // join-path assignment fans each row out k ways, so its work is
     // n x k however few input splits the (small-on-disk, float-packed)
     // embedding parquet arrived in — ONE extra n-row shuffle here
@@ -403,41 +356,54 @@ object Cluster {
     // final aggregation — without the checkpoint each pass re-runs the
     // scan + quantization chain (same discipline as q_corpus_e2e's
     // Mix-stage boundary).
-    val q = Materialize.checkpoint(
-      if (k > literalAssignMaxK) qNarrow.repartition(spark.sparkContext.defaultParallelism)
-      else qNarrow,
-      eager = false)
-    trainLoop(q, k, iters, literalAssignMaxK)
+    trainLoop(Materialize.checkpoint(
+      if (k > literalAssignMaxK) q.repartition(emb.sparkSession.sparkContext.defaultParallelism)
+      else q,
+      eager = false), scale, k, iters, literalAssignMaxK)
   }
 
-  /** Quantize onto the corpus-wide symmetric int8 grid:
-    * scale = max |x| / 127 over THIS frame. Returns (id, q). Callers
-    * that train on a SAMPLE but assign the full corpus must quantize
-    * the full corpus once and sample the quantized frame — computing
-    * the grid per-subset would put sample-trained centroids and
-    * corpus rows in incomparable spaces. */
-  private[graft] def quantize(emb: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    val gmaxRow = emb.agg(
-      max(array_max(transform(col(vecCol), x => abs(x.cast("double"))))).as("m"))
-      .head()
-    val gmax = if (gmaxRow.isNullAt(0)) 0.0 else gmaxRow.getDouble(0)
-    val gscale = if (gmax == 0.0) 1.0 else gmax / 127.0
-    emb.select(col(idCol).cast("long").as("id"),
-      transform(col(vecCol),
-        x => floor(x.cast("double") / lit(gscale) + lit(0.5)).cast("long")).as("q"))
+  /** The corpus-wide symmetric int8 grid of a frame, in ONE aggregate:
+    * (rows, scale) with scale = max |x| / 127 (1.0 for an all-zero or
+    * empty frame). A null vector, or one holding a null element, has
+    * no grid point — the literal and join argmins would place it
+    * differently — so the same aggregate counts them and refuses the
+    * frame. */
+  private def grid(emb: DataFrame, vecCol: String): (Long, Double) = {
+    val v = col(vecCol)
+    val r = emb.agg(count(lit(1)),
+      max(array_max(transform(v, x => abs(x.cast("double"))))),
+      count(when(v.isNull || exists(v, _.isNull), lit(1)))).head()
+    require(r.getLong(2) == 0L,
+      s"${r.getLong(2)} null vectors (null, or holding a null element) in $vecCol; " +
+        "the int8 grid needs every vector whole")
+    val gmax = if (r.isNullAt(1)) 0.0 else r.getDouble(1)
+    (r.getLong(0), if (gmax == 0.0) 1.0 else gmax / 127.0)
   }
 
-  // narrow argmin map against the centroid literals: k scored
-  // structs, sorted; struct order (dist, cid) breaks ties low.
-  // Codegen-tight and zero-shuffle, but the expression tree is
-  // k x dim nodes — only used while k <= literalAssignMaxK.
+  // the grid projection: floor(x / scale + 0.5) per element
+  private def onGrid(df: DataFrame, idCol: String, vecCol: String,
+                     scale: Double): DataFrame =
+    df.select(col(idCol).cast("long").as("id"),
+      quantizeInt8(col(vecCol), lit(scale)).as("q"))
+
+  /** Quantize onto the corpus-wide symmetric int8 grid of THIS frame
+    * ([[grid]]). Returns (id, q). Callers that train on a SAMPLE but
+    * assign the full corpus must quantize the full corpus once and
+    * sample the quantized frame — computing the grid per-subset would
+    * put sample-trained centroids and corpus rows in incomparable
+    * spaces. */
+  private[graft] def quantize(emb: DataFrame, idCol: String, vecCol: String): DataFrame =
+    onGrid(emb, idCol, vecCol, grid(emb, vecCol)._2)
+
   /** The k scored (dist, cid) structs against centroid LITERALS over a
     * frame's `q` column — ONE definition shared by [[assignLiteral]]
     * (argmin = element_at(array_sort(.), 1)) and the IVF literal probe
     * (nprobe = slice of the same sorted array, Similarity.scala). The
     * bit-identical-arithmetic contract between the assignment and
     * probe paths is load-bearing for the oracles; sharing the builder
-    * keeps a future fix from diverging one copy silently. */
+    * keeps a future fix from diverging one copy silently. Codegen-
+    * tight and zero-shuffle, but the expression tree is k x dim nodes
+    * — only used while k <= literalAssignMaxK. */
   private[graft] def scoredCellStructs(cents: IndexedSeq[Seq[Long]]): Column =
     array(cents.indices.map { c =>
       struct(
@@ -447,17 +413,51 @@ object Cluster {
         lit(c).as("cid"))
     }: _*)
 
-  /** The broadcast (cid, cq, bb) centroid table (bb = cq·cq
-    * precomputed) for join-path scoring — shared by [[assignJoin]] and
-    * the IVF join probe, same contract as [[scoredCellStructs]]. */
-  private[graft] def centroidFrame(spark: org.apache.spark.sql.SparkSession,
-                                   cents: IndexedSeq[Seq[Long]]): DataFrame = {
+  /** Every (row, cell) pair of a frame's `q` against a driver-held
+    * centroid set: the row's aa = q·q is computed once, k cids
+    * explode per row, and the broadcast k-row (cid, cq, bb) table
+    * joins on (bb = cq·cq precomputed) — ready for [[cellDist]].
+    * Shared by [[assignJoin]] and the IVF join probe. */
+  private[graft] def cellPairs(q: DataFrame, cents: IndexedSeq[Seq[Long]]): DataFrame = {
+    val spark = q.sparkSession
     import spark.implicits._
-    broadcast(
-      cents.zipWithIndex
-        .map { case (cq, c) =>
-          (c, cq, graft.functions.LongVecDot.dot(cq.toArray, cq.toArray)) }
-        .toDF("cid", "cq", "bb"))
+    val cdf = cents.zipWithIndex
+      .map { case (cq, c) => (c, cq, LongVecDot.dot(cq.toArray, cq.toArray)) }
+      .toDF("cid", "cq", "bb")
+    q.withColumn("aa", vecDotLong(col("q"), col("q")))
+      .withColumn("cid", explode(sequence(lit(0), lit(cents.size - 1))))
+      .join(broadcast(cdf), "cid")
+  }
+
+  /** The exact integer squared L2 between a row and a cell, through
+    * the NATIVE codegen'd LongVecDot: aa − 2·q·cq + bb over a pair
+    * frame carrying (q, aa, cq, bb). The one definition shared by
+    * the flat join argmin, the two-level fine argmin and the IVF join
+    * probe (zip_with/aggregate lambdas are interpreted-eval
+    * expressions, catastrophic at n x k pair counts). */
+  private[graft] def cellDist: Column =
+    col("aa") - lit(2L) * vecDotLong(col("q"), col("cq")) + col("bb")
+
+  /** The nearest cell per id over a pair frame: (dist, cell) PACKED
+    * into one long (dist · kpack + cell, dist >= 0, cell < kpack), so
+    * min(packed) is a primitive hash-aggregate with map-side combine
+    * where min(struct) falls back to a SortAggregate that sorts every
+    * pair. Packing preserves the (dist, cell) tie-break exactly;
+    * overflow needs dist · kpack < 2^63 — int8-grid dist <= dim x
+    * 254^2, fine for any real dim at k <= 4096. Only (id, packed)
+    * crosses the shuffle (n rows regardless of k); `rows` is re-joined
+    * once on id and gains (cell, dist). Carrying q through the agg
+    * (max over ArrayType) would reject hash aggregation — the
+    * measured-100x-slower fallback this shape exists to avoid. */
+  private def nearestCell(pairs: DataFrame, cell: String, kpack: Long,
+                          rows: DataFrame): DataFrame = {
+    val best = pairs.groupBy("id")
+      .agg(min(cellDist * lit(kpack) + col(cell)).as("packed"))
+    rows.join(best, "id").select(rows.columns.map(col) :+
+      (col("packed") % kpack).cast("int").as(cell) :+
+      // integer `div`, not `/` (which is double division — lossy past
+      // 2^53; packed stays exact as a long throughout)
+      expr(s"packed div ${kpack}L").as("dist"): _*)
   }
 
   private def assignLiteral(q: DataFrame, cents: IndexedSeq[Seq[Long]]): DataFrame =
@@ -465,42 +465,11 @@ object Cluster {
       .select(col("id"), col("q"),
         col("best.cid").as("cid"), col("best.dist").as("dist"))
 
-  // large-k argmin: explode the k cluster ids per row, broadcast-
-  // hash-join the k-row centroid table, take the min per id. Two
-  // deliberate scale moves, both measured (an HOF + struct-min
-  // draft ran 100x slower at k=1000):
-  //  - distance via the NATIVE codegen'd LongVecDot (dist =
-  //    aa - 2ab + bb with aa/bb precomputed per row/centroid) —
-  //    zip_with/aggregate lambdas are interpreted-eval expressions,
-  //    catastrophic at n x k pair counts;
-  //  - (dist, cid) PACKED into one long (dist * k + cid, dist >= 0,
-  //    cid < k): min(packed) is a primitive hash-aggregate with
-  //    map-side combine, where min(struct) falls back to a
-  //    SortAggregate that sorts all n x k rows. Packing preserves
-  //    the (dist, cid) tie-break exactly; overflow needs
-  //    dist * k < 2^63 — int8-grid dist <= dim x 254^2, fine for
-  //    any real dim at k <= 4096.
-  // Shuffle volume is n rows regardless of k (partial min per
-  // partition first). Bit-identical to assignLiteral (spec-proven).
-  private def assignJoin(q: DataFrame, cents: IndexedSeq[Seq[Long]]): DataFrame = {
-    import graft.functions.VectorFunctions.vecDotLong
-    val kk = cents.size.toLong
-    val cdf = centroidFrame(q.sparkSession, cents)
-    val best = q
-      .withColumn("aa", vecDotLong(col("q"), col("q")))
-      .withColumn("cid", explode(sequence(lit(0), lit(cents.size - 1))))
-      .join(cdf, "cid")
-      .select(col("id"),
-        ((col("aa") - lit(2L) * vecDotLong(col("q"), col("cq")) + col("bb"))
-          * lit(kk) + col("cid")).as("packed"))
-      .groupBy("id").agg(min(col("packed")).as("packed"))
-    q.join(best, "id")
-      .select(col("id"), col("q"),
-        (col("packed") % kk).cast("int").as("cid"),
-        // integer `div`, not `/` (which is double division — lossy
-        // past 2^53; packed stays exact as a long throughout)
-        expr(s"packed div ${kk}L").as("dist"))
-  }
+  // large-k argmin: every (row, cell) pair, the nearest per id (an
+  // HOF + struct-min draft ran 100x slower at k=1000). Bit-identical
+  // to assignLiteral (spec-proven).
+  private def assignJoin(q: DataFrame, cents: IndexedSeq[Seq[Long]]): DataFrame =
+    nearestCell(cellPairs(q, cents), "cid", cents.size, q)
 
   /** Argmin assignment of a quantized (id, q) frame against a driver-
     * held centroid set — literal path below `literalAssignMaxK`, the
@@ -510,11 +479,26 @@ object Cluster {
     if (cents.size <= literalAssignMaxK) assignLiteral(q, cents)
     else assignJoin(q, cents)
 
+  /** The Lloyd update's means: per (group keys, pos) the members'
+    * floor(sum / count) — floor-of-double division, the same IEEE
+    * divide and floor on the driver, in SQL and in DuckDB — as
+    * (keys…, pos, cv). ONE map-side-combined shuffle whose reduced
+    * size is groups x dim, independent of row count. */
+  private def means(assigned: DataFrame, keys: String*): DataFrame =
+    assigned.select(keys.map(col) :+ posexplode(col("q")).as(Seq("pos", "v")): _*)
+      .groupBy((keys :+ "pos").map(col): _*)
+      .agg(floor(sum(col("v")).cast("double") / count(lit(1))).cast("long").as("cv"))
+
   /** The Lloyd's loop over an already-quantized, already-checkpointed
-    * (id, q) frame — shared by [[trainInt8]] (full-corpus training)
-    * and [[kmeansTwoLevel]]'s sample-trained coarse stage. */
-  private def trainLoop(q: DataFrame, k: Int, iters: Int,
+    * (id, q) frame on grid `scale` — shared by [[trainInt8]] (every
+    * flat surface) and [[kmeansTwoLevel]]'s sample-trained coarse
+    * stage, so both inherit its bounds. */
+  private def trainLoop(q: DataFrame, scale: Double, k: Int, iters: Int,
                         literalAssignMaxK: Int): Trained = {
+    require(k > 0 && k <= 4096,
+      s"k bounded at 4096 (flat assignment scores all k centroids per row — " +
+        s"O(k x dim); shard first beyond this, see kForCorpus); got $k")
+    require(iters >= 1 && iters <= 8, s"iters bounded (each is a pass); got $iters")
     // deterministic init: the k smallest ids' vectors, cluster id by
     // that order (a bounded k-row collect — NOT a sort of the corpus:
     // TakeOrderedAndProject)
@@ -535,28 +519,16 @@ object Cluster {
       // output join (the interpreted re-derivation PlanAuditSpec
       // gates against)
       assigned = Materialize.checkpoint(assignTo(q, centroids, literalAssignMaxK), eager = false)
-      // ONE shuffle: (cid, pos) partial-agg; k x dim reduced rows
-      val sums = assigned
-        .select(col("cid"), posexplode(col("q")).as(Seq("pos", "v")))
-        .groupBy("cid", "pos")
-        .agg(sum(col("v")).as("s"), count(lit(1)).as("n"))
-        .collect()
-      val byC = sums.groupBy(_.getInt(0))
+      val byC = means(assigned, "cid").collect().groupBy(_.getInt(0))
       centroids = centroids.indices.map { c =>
-        byC.get(c) match {
-          case Some(rows) =>
-            val dim = centroids(c).length
-            val arr = new Array[Long](dim)
-            rows.foreach { r =>
-              arr(r.getInt(1)) =
-                math.floor(r.getLong(2).toDouble / r.getLong(3)).toLong
-            }
-            arr.toSeq
-          case None => centroids(c) // empty cluster: keep previous
+        byC.get(c).fold(centroids(c)) { rows => // empty cluster: keep previous
+          val arr = new Array[Long](centroids(c).length)
+          rows.foreach(r => arr(r.getInt(1)) = r.getLong(2))
+          arr.toSeq
         }
       }
     }
 
-    Trained(assigned, assignCentroids, centroids)
+    Trained(assigned, assignCentroids, centroids, scale)
   }
 }

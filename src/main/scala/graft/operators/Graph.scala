@@ -266,7 +266,10 @@ object Graph {
     *    term applies instead — each iteration adds the 1-row dangling
     *    mass aggregate and every node receives `dm div N` extra
     *    contribution before damping (truncating, still exact ppm);
-    *  - nodes with no in-edges settle at the base (10⁶ − d).
+    *  - nodes with no in-edges settle at the base (10⁶ − d);
+    *  - a null endpoint names no node (the [[hitsPpm]] rule); an edge
+    *    to a null still counts in its source's out-degree, so that
+    *    share leaks.
     *
     * Scale shape: the deduped edge list and the node spine (with
     * out-degree attached) persist once; past
@@ -278,14 +281,13 @@ object Graph {
     * sort-merge joins re-exchange NEITHER cached frame and each
     * iteration moves only the node-sized contribution frame
     * followed by the map-side-combined per-dst sum;
-    * lineage is truncated every `checkpointEvery` iterations (the
+    * lineage is truncated every second iteration (the
     * [[Components]] discipline, so a deep `iters` cannot blow the
     * planner). Exact while iters·10⁶·maxdeg < 2⁶³ — unreachable.
     *
     * @return (node, out_degree, rank_ppm) after `iters` iterations. */
   def pagerankPpm(edges: DataFrame, srcCol: String, dstCol: String,
                   iters: Int = 4, dampingPpm: Long = 850000L,
-                  checkpointEvery: Int = 2,
                   redistributeDangling: Boolean = false): DataFrame = {
     require(iters >= 1 && dampingPpm >= 0 && dampingPpm <= 1000000L)
     Materialize.scoped { s =>
@@ -295,7 +297,7 @@ object Graph {
       val deg = eRaw.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
       val spineRaw = s.cache(eRaw.select(col("src").as("node"))
         .union(eRaw.select(col("dst")))
-        .distinct()
+        .distinct().filter(col("node").isNotNull) // a null endpoint names no node
         .join(deg, Seq("node"), "left"))
       val nNodes = spineRaw.count() // materializes the caches, sizes the pin
       val pin = nNodes > Dedup.BroadcastSafeCorpusRows
@@ -347,7 +349,7 @@ object Graph {
               (lit(base) + expr(s"($dampingPpm * coalesce(s, cast(0 as bigint))) div 1000000"))
                 .as("r"))
           }
-        if (i % checkpointEvery == 0 && i < iters)
+        if (i % 2 == 0 && i < iters)
           ranks = s.checkpoint(ranks, eager = false)
       }
       Materialize.checkpoint(ranks

@@ -216,13 +216,9 @@ object Similarity {
         qq.withColumn("__p", slice(array_sort(scoredCells), 1, nprobe))
           .select(col("query_id"), explode(col("__p").getField("cid")).as("cid"))
       } else {
-        import graft.functions.VectorFunctions.vecDotLong
-        val cdf = Cluster.centroidFrame(corpus.sparkSession, tr.assignCentroids)
-        val dists = qq.withColumn("aa", vecDotLong(col("q"), col("q")))
-          .withColumn("cid", explode(sequence(lit(0), lit(tr.assignCentroids.size - 1))))
-          .join(cdf, "cid")
-          .select(col("query_id"), col("cid"),
-            (col("aa") - lit(2L) * vecDotLong(col("q"), col("cq")) + col("bb")).as("__dist"))
+        // the SAME pairs and distance as Cluster.assignJoin
+        val dists = Cluster.cellPairs(qq, tr.assignCentroids)
+          .select(col("query_id"), col("cid"), Cluster.cellDist.as("__dist"))
         firstK(dists, nprobe, col("__dist").asc, col("cid").asc)
           .select(col("query_id"), col("cid"))
       }

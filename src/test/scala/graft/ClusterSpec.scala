@@ -60,6 +60,22 @@ class ClusterSpec extends AnyFunSuite {
     assert(lit == join, "per-row assignment identical across assignment paths")
   }
 
+  test("a null vector or a null element fails fast on both assignment paths") {
+    // without the grid's refusal the literal path put such a vector in
+    // cell 0 with a null dist and the join path gave it a null cid
+    val ok = (0L until 20L).map(i =>
+      i -> Option(Seq.tabulate(4)(j => Option(((i * 3 + j) % 7 - 3).toFloat))))
+    for (bad <- Seq(None, Some(Seq(Some(1f), None, Some(2f), Some(0f))));
+         seam <- Seq(Cluster.LiteralAssignMaxK, 0)) {
+      val emb = (ok :+ (20L -> bad)).toDF("vec_id", "embedding")
+      val e = intercept[IllegalArgumentException] {
+        Cluster.trainInt8(emb, "vec_id", "embedding", k = 3, iters = 2,
+          literalAssignMaxK = seam)
+      }
+      assert(e.getMessage.contains("1 null vectors"), e.getMessage)
+    }
+  }
+
   test("kForCorpus derives the IVF nlist rule and refuses oversized k") {
     assert(Cluster.kForCorpus(500, 64) == 8)   // the oracle corpus: LIMIT 8
     assert(Cluster.kForCorpus(64, 64) == 1)

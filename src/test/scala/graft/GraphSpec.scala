@@ -192,6 +192,23 @@ class GraphSpec extends AnyFunSuite {
       (Some(10L), 0L, 1000000L)))
   }
 
+  test("pagerankPpm: a null endpoint names no node, in both variants") {
+    // 1 -> 2 and 1 -> null: the null edge still counts in deg(1), so
+    // half of 1's rank leaks; 2 is dangling; the null-src edge adds
+    // nothing. iters = 1 over N = 2 nodes:
+    //  default:      r(1) = 150000 (no in-edges)
+    //                r(2) = 150000 + 850000*(1e6 div 2) div 1e6 = 575000
+    //  redistribute: share = r0(2) div 2 = 500000
+    //                r(1) = 150000 + 850000*500000 div 1e6 = 575000
+    //                r(2) = 150000 + 850000*(500000 + 500000) div 1e6 = 1000000
+    val g = Seq((Some(1L), Some(2L)), (Some(1L), None), (None, Some(2L))).toDF("src", "dst")
+    def run(redistribute: Boolean) = Graph.pagerankPpm(g, "src", "dst", iters = 1,
+        redistributeDangling = redistribute)
+      .as[(Option[Long], Long, Long)].collect().toSet
+    assert(run(false) == Set((Some(1L), 2L, 150000L), (Some(2L), 0L, 575000L)))
+    assert(run(true) == Set((Some(1L), 2L, 575000L), (Some(2L), 0L, 1000000L)))
+  }
+
   test("pinned path (> broadcast-safe nodes): ring fixed point is exact") {
     // past Dedup.BroadcastSafeCorpusRows both operators re-cache the
     // edge list pre-partitioned+sorted (the routing-table layout) and

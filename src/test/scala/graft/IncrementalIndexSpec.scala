@@ -112,6 +112,19 @@ class IncrementalIndexSpec extends AnyFunSuite {
     assert(indexed == direct)
   }
 
+  test("annIndex and assignIncremental refuse iters = 0 and k past 4096") {
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    for ((k, iters) <- Seq((4, 0), (5000, 2))) {
+      intercept[IllegalArgumentException] {
+        Cluster.annIndex(emb, "vec_id", "embedding", k, iters)
+      }
+      intercept[IllegalArgumentException] {
+        Cluster.assignIncremental(emb, "vec_id", "embedding",
+          col("vec_id") % 10 < 7, k, iters)
+      }
+    }
+  }
+
   test("the ANN index is config-sized and carries one grid scale") {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val idx = Cluster.annIndex(emb, "vec_id", "embedding", k = 4, iters = 2)

@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import graft.operators.{Components, Dedup, Graph, Infer, LangModel, Similarity, Split}
+import graft.operators.{Cluster, Components, Dedup, Graph, Infer, LangModel, Similarity, Split}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.{col, lit, pmod, sum, when}
@@ -202,18 +202,36 @@ class JobBudgetSpec extends AnyFunSuite {
     }.toDF("vec_id", "embedding")
   private val isX = pmod(col("vec_id"), lit(2)) === 0
 
-  private def similarityBudget(name: String, budget: Int)(
+  private def collectBudget(name: String, budget: Int)(
       call: => org.apache.spark.sql.DataFrame) =
-    test(s"Similarity.$name stays within its job budget") {
+    test(s"$name stays within its job budget") {
       val (rows, jobs) = jobsOf(call.collect())
       assert(rows.nonEmpty)
       assert(jobs <= budget, s"$name ran $jobs jobs")
     }
 
-  similarityBudget("ivfInt8TopK", 13)(
+  collectBudget("Similarity.ivfInt8TopK", 13)(
     Similarity.ivfInt8TopK(vecs, col("vec_id") < 4, k = 3, nlist = 4, nprobe = 2))
-  similarityBudget("bitextMarginMine(nlist = 2)", 20)(
+  collectBudget("Similarity.bitextMarginMine(nlist = 2)", 20)(
     Similarity.bitextMarginMine(vecs, isX, k = 2, minMarginPpm = 0L, nlist = 2))
-  similarityBudget("bitextMarginMine(allPairs = true)", 15)(
+  collectBudget("Similarity.bitextMarginMine(allPairs = true)", 15)(
     Similarity.bitextMarginMine(vecs, isX, k = 2, minMarginPpm = 0L, allPairs = true))
+
+  // the same vectors through the k-means surfaces: the flat literal
+  // path, the flat join path (through the test seam), the two-level
+  // path and the incremental index. The bounds are the counts before
+  // the three paths shared one grid step, one cell argmin and one
+  // Lloyd update (10, 15, 23 and 7); kmeansTwoLevel's is two lower,
+  // since its row count now rides the grid aggregate instead of a
+  // count() of its own (two jobs under AQE)
+  collectBudget("Cluster.kmeansInt8", 10)(
+    Cluster.kmeansInt8(vecs, "vec_id", "embedding", k = 4, iters = 2))
+  collectBudget("Cluster.trainInt8(literalAssignMaxK = 0)", 15)(
+    Cluster.trainInt8(vecs, "vec_id", "embedding", k = 4, iters = 2,
+      literalAssignMaxK = 0).assigned)
+  collectBudget("Cluster.kmeansTwoLevel", 21)(
+    Cluster.kmeansTwoLevel(vecs, "vec_id", "embedding", targetCellSize = 4, maxK = 8))
+  collectBudget("Cluster.assignIncremental", 7)(
+    Cluster.assignIncremental(vecs, "vec_id", "embedding", col("vec_id") < 24,
+      k = 4, iters = 2))
 }
